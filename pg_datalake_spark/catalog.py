@@ -194,8 +194,10 @@ def _ensure_advisory(spark: SparkSession, st: dict, sf_dir: str, spread: bool) -
         return
     if spread:
         try:
+            # _path_sig bytes: a directory-backed table counts its
+            # files, not its directory inode
             total = sum(
-                os.path.getsize(os.path.join(sf_dir, f))
+                _path_sig(os.path.join(sf_dir, f))[0]
                 for f in os.listdir(sf_dir)
                 if f.endswith(".parquet")
             )

@@ -21,10 +21,19 @@ Delta transaction-log protocol (delta-io/delta PROTOCOL.md):
 :func:`read_delta_table` reconstructs the active file set (optionally
 pinned with ``version_as_of``) and hands it to ``spark.read.parquet`` —
 the scan itself is a plain distributed parquet read with full pushdown
-and pruning. Log parsing is O(actions) driver-side KB-scale metadata,
-same as any Delta client. DELETION VECTORS (r8; PROTOCOL.md "Deletion
-Vectors" — the default row-delete mechanism of modern Delta writers)
-are fully applied on read: descriptors (inline ``"i"``, UUID sidecar
+and pruning. Snapshot replay follows ONE byte rule
+(:data:`_TAIL_DRIVER_BYTES`, 4 MiB — the Iceberg reader's
+``_MANIFEST_DRIVER_BYTES`` split): when the checkpoint files (every
+part and V2 sidecar) plus the JSON tail total at most that, the whole
+replay runs on the driver — the checkpoint is read with
+``pyarrow.parquet`` and no Spark job starts. Larger logs replay in
+Spark: the checkpoint adds stay JVM-side until the tail is
+reconciled, and a tail that alone exceeds the rule reconciles in
+Spark too (:func:`_replay_tail_distributed`).
+
+DELETION VECTORS (r8; PROTOCOL.md "Deletion Vectors" — the default
+row-delete mechanism of modern Delta writers) are fully applied on
+read: descriptors (inline ``"i"``, UUID sidecar
 ``"u"``, absolute ``"p"``) are decoded from their Z85 / portable-
 roaring-bitmap encoding EXECUTOR-side (tables/dv_codec.py via
 ``mapInPandas``) and anti-joined on ``(_metadata.file_path,
@@ -133,9 +142,9 @@ def _replay_json_commit(path: str, state: dict) -> None:
                     state["txns"].get(t["appId"], -1), int(t["version"])
                 )
             # commitInfo / cdc: no effect on the active file set
-    # "_touched" is seeded by _snapshot_state ONLY when checkpoint adds
-    # wait JVM-side for an anti-join; the common no-checkpoint replay
-    # skips the bookkeeping entirely
+    # "_touched" is seeded (by _replay_tail_touched) ONLY when a
+    # checkpoint's adds are reconciled against the tail afterwards; the
+    # no-checkpoint replay skips the bookkeeping entirely
     touched = state.get("_touched")
     for r in removes:
         state["adds"].pop(r["path"], None)
@@ -185,7 +194,7 @@ def _checkpoint_files(location: str, version: int) -> list[str] | None:
         mid = os.path.basename(p)[len(prefix) : -len(".parquet")]
         try:
             uuid.UUID(mid)
-            return [p]  # V2 manifest (sidecars resolved by _load_checkpoint)
+            return [p]  # V2 manifest (its sidecars are resolved on replay)
         except ValueError:
             pass
         part = mid.split(".")
@@ -198,15 +207,13 @@ def _checkpoint_files(location: str, version: int) -> list[str] | None:
 
 
 def _apply_checkpoint_rows(rows, state: dict) -> None:
-    for row in rows:  # bounded metadata: |actions| at checkpoint time
-        d = row.asDict(recursive=True)
+    """Apply a checkpoint's non-add action rows — plain dicts, MAPs as
+    dicts — to replay state. Both checkpoint routes feed it."""
+    for d in rows:  # bounded metadata: a handful of singleton actions
         if d.get("metaData") and d["metaData"].get("id"):
             state["metaData"] = d["metaData"]
         elif d.get("protocol") and d["protocol"].get("minReaderVersion") is not None:
             state["protocol"] = d["protocol"]
-        elif d.get("add") and d["add"].get("path"):
-            add = {k: v for k, v in d["add"].items() if v is not None}
-            state["adds"][add["path"]] = add
         elif d.get("txn") and d["txn"].get("appId"):
             t = d["txn"]
             state["txns"][t["appId"]] = max(
@@ -248,38 +255,156 @@ def _pruned_cp_schema(file_schema: T.StructType, need_stats: bool) -> T.StructTy
     return T.StructType(out)
 
 
+def _maps_as_dicts(value, typ):
+    """One pyarrow value in the shape ``Row.asDict(recursive=True)``
+    gives the Spark route: a MAP becomes a dict, not pyarrow's list of
+    (key, value) pairs."""
+    import pyarrow as pa
+
+    if value is None:
+        return None
+    if pa.types.is_map(typ):
+        return {k: _maps_as_dicts(v, typ.item_type) for k, v in value}
+    if pa.types.is_struct(typ):
+        return {f.name: _maps_as_dicts(value[f.name], f.type) for f in typ}
+    return value  # Delta actions nest no MAP inside a list
+
+
+def _arrow_pylist(arr) -> list:
+    """``arr.to_pylist()`` with MAPs as dicts (:func:`_maps_as_dicts`).
+    Strings, null-free integers/booleans and maps of those convert in
+    bulk through numpy: ``to_pylist`` builds one scalar per element,
+    which made a 500k-add checkpoint's read about 10x slower."""
+    import pyarrow as pa
+
+    t = arr.type
+    if arr.null_count == len(arr):
+        return [None] * len(arr)
+    if pa.types.is_string(t) or pa.types.is_large_string(t) or (
+        arr.null_count == 0 and (pa.types.is_integer(t) or pa.types.is_boolean(t))
+    ):
+        return arr.to_numpy(zero_copy_only=False).tolist()
+    if pa.types.is_map(t) and not pa.types.is_nested(t.item_type):
+        # offsets index the whole keys/items children, sliced or not
+        offs = arr.offsets.to_numpy().tolist()
+        keys, items = _arrow_pylist(arr.keys), _arrow_pylist(arr.items)
+        valid = arr.is_valid().to_numpy(zero_copy_only=False).tolist()
+        return [
+            dict(zip(keys[a:b], items[a:b])) if ok else None
+            for a, b, ok in zip(offs, offs[1:], valid)
+        ]
+    vals = arr.to_pylist()
+    if pa.types.is_nested(t):
+        vals = [_maps_as_dicts(v, t) for v in vals]
+    return vals
+
+
+def _driver_checkpoint_files(
+    location: str, cp_files: list[str], tail_paths: list[str]
+) -> list[str] | None:
+    """The byte rule: every parquet file of the checkpoint — its parts,
+    then the sidecars a V2 manifest names — when those files plus the
+    JSON tail total at most :data:`_TAIL_DRIVER_BYTES`; None routes the
+    replay to Spark. Sidecar names are read (one column) only once the
+    parts and the tail already fit. A stat failure routes to Spark too:
+    a multi-GB log must never reach the driver on a stat hiccup (the
+    r14 getsize lesson)."""
+    import pyarrow.parquet as pq
+
+    try:
+        room = _TAIL_DRIVER_BYTES - sum(
+            os.path.getsize(p) for p in [*cp_files, *tail_paths]
+        )
+        if room < 0:
+            return None
+        sidecars = []
+        for p in cp_files:
+            with pq.ParquetFile(p) as pf:
+                if "sidecar" not in pf.schema_arrow.names:
+                    continue
+                col = pf.read(columns=["sidecar.path"]).column("sidecar")
+            sidecars += [
+                os.path.join(_log_dir(location), "_sidecars", s["path"])
+                for s in col.to_pylist()
+                if s and s["path"]
+            ]
+        if sum(os.path.getsize(s) for s in sidecars) > room:
+            return None
+    except OSError:
+        return None
+    return [*cp_files, *sidecars]
+
+
+def _read_checkpoint_driver(
+    files: list[str], state: dict, need_stats: bool
+) -> dict:
+    """Driver route of the checkpoint read (logs within the byte rule):
+    ``pyarrow.parquet`` in record batches, projected to the columns the
+    Spark route's :func:`_pruned_cp_schema` keeps — ``add`` narrowed to
+    :data:`_CP_ADD_FIELDS`, ``stats`` only with ``need_stats``.
+    metaData/protocol/txn rows apply to ``state``; the adds are
+    returned keyed by path in file order (parts, then sidecars), shaped
+    exactly like the Spark route's (MAPs as dicts, null fields
+    dropped)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    keep_add = set(_CP_ADD_FIELDS) - (set() if need_stats else {"stats"})
+    adds: dict = {}
+    for path in files:
+        with pq.ParquetFile(path) as pf:
+            cols = []
+            for f in pf.schema_arrow:
+                if f.name == "add" and pa.types.is_struct(f.type):
+                    cols += [f"add.{sf.name}" for sf in f.type if sf.name in keep_add]
+                elif f.name in ("metaData", "protocol", "txn"):
+                    cols.append(f.name)
+            for batch in pf.iter_batches(columns=cols):
+                rest = batch
+                if "add" in batch.schema.names:
+                    is_add = pc.is_valid(batch.column("add"))
+                    add_rows = batch.column("add").filter(is_add)
+                    fields = [f.name for f in add_rows.type]
+                    for vals in zip(*map(_arrow_pylist, add_rows.flatten())):
+                        a = {k: v for k, v in zip(fields, vals) if v is not None}
+                        if "path" in a:
+                            adds[a["path"]] = a
+                    rest = batch.filter(pc.invert(is_add))
+                others = [n for n in rest.schema.names if n != "add"]
+                columns = [_arrow_pylist(rest.column(n)) for n in others]
+                _apply_checkpoint_rows(
+                    (dict(zip(others, vals)) for vals in zip(*columns)), state
+                )
+    return adds
+
+
 def _load_checkpoint(
     spark: SparkSession,
     location: str,
-    version: int,
+    paths: list[str],
     state: dict,
     need_stats: bool = False,
-) -> None:
-    """Seed replay state from a checkpoint parquet: one row per action,
-    struct columns ``add`` / ``metaData`` / ``protocol`` (removes are
-    vacuum tombstones — irrelevant to the active set at the checkpoint
+) -> list[DataFrame]:
+    """Spark route of the checkpoint read, for logs past the byte rule
+    (:func:`_driver_checkpoint_files`). One row per action, struct
+    columns ``add`` / ``metaData`` / ``protocol`` (removes are vacuum
+    tombstones — irrelevant to the active set at the checkpoint
     version, so ignored). V2 (UUID-named) checkpoints are supported
     since r8: the manifest's own action rows are applied, then every
     ``sidecar`` row's parquet under ``_delta_log/_sidecars/`` is read
-    and applied the same way — the sidecars hold the add/remove
-    batches the manifest spilled out (PROTOCOL.md "V2 Checkpoint
-    Spec"). V1 multi-part checkpoints (every part a slice of the
-    actions) are applied part by part.
+    the same way — the sidecars hold the add/remove batches the
+    manifest spilled out (PROTOCOL.md "V2 Checkpoint Spec"). V1
+    multi-part checkpoints (every part a slice of the actions) are
+    read part by part.
 
-    r13 (judge task #3): the ADD set never reaches the driver here —
-    a 100 TB table's checkpoint holds millions of add actions, and
-    the reference streams its equivalent (manifests) rather than
-    materializing it. Only the singleton non-add actions
-    (metaData/protocol/txn + sidecar pointers — a handful of rows,
-    filtered JVM-side) are collected; the adds are left in
-    ``state["cp_adds_dfs"]`` as pruned, FLATTENED DataFrames for
-    ``_snapshot_state`` to reconcile distributively, collecting only
-    the LIVE file list at the end."""
-    paths = _checkpoint_files(location, version)
-    if paths is None:
-        raise FileNotFoundError(
-            f"no complete checkpoint for version {version} under {location}"
-        )
+    A checkpoint this large can hold millions of add actions, so the
+    ADD set stays JVM-side on this route: only the singleton non-add
+    actions (metaData/protocol/txn + sidecar pointers — a handful of
+    rows, filtered JVM-side) are collected, and the adds are returned
+    as pruned, FLATTENED DataFrames for :func:`_replay_checkpoint_spark`
+    to reconcile distributively, collecting only the LIVE file list at
+    the end."""
     add_dfs: list[DataFrame] = []
 
     def _flat_adds(df: DataFrame) -> DataFrame:
@@ -302,7 +427,7 @@ def _load_checkpoint(
                 any_other = any_other | F.col(c).isNotNull()
             small = df.filter(F.col("add").isNull() & any_other)
         rows = small.collect()
-        _apply_checkpoint_rows(rows, state)
+        _apply_checkpoint_rows((r.asDict(recursive=True) for r in rows), state)
         if "add" in df.columns:
             add_dfs.append(_flat_adds(df))
         if "sidecar" in df.columns:
@@ -319,7 +444,17 @@ def _load_checkpoint(
                 scdf = spark.read.schema(sc_schema).parquet(sc)
                 if "add" in scdf.columns:
                     add_dfs.append(_flat_adds(scdf))
-    state["cp_adds_dfs"] = add_dfs
+    return add_dfs
+
+
+def _replay_tail_touched(tail_paths: list[str], state: dict) -> tuple[dict, set]:
+    """Driver replay of a tail whose checkpoint adds are held apart:
+    returns (the tail's net adds, every path the tail removed or
+    added). Of the checkpoint adds only the untouched paths survive."""
+    state["_touched"] = set()
+    for p in tail_paths:
+        _replay_json_commit(p, state)
+    return state["adds"], state.pop("_touched")
 
 
 def _snapshot_state(
@@ -360,13 +495,11 @@ def _snapshot_state(
     }
 
     start = 0
-    if (
-        cp_version is not None
-        and cp_version <= target
-        and _checkpoint_files(location, cp_version) is not None
-    ):
-        _load_checkpoint(spark, location, cp_version, state, need_stats)
-        start = cp_version + 1
+    cp_files = None
+    if cp_version is not None and cp_version <= target:
+        cp_files = _checkpoint_files(location, cp_version)
+        if cp_files is not None:
+            start = cp_version + 1
 
     # The replay is only sound over a CONTIGUOUS commit range: if the
     # earliest surviving JSON commit is newer than where the replay
@@ -383,61 +516,19 @@ def _snapshot_state(
             "use the delta-spark jars or restore the checkpoint files"
         )
     tail_paths = [_commit_path(location, v) for v in tail]
-    cp_dfs = state.pop("cp_adds_dfs", None)
-    if not cp_dfs:
-        # no checkpoint adds: plain driver replay (tail IS the table;
-        # nothing seeds "_touched" on this path)
+    if cp_files is None:
+        # no checkpoint: plain driver replay (the tail IS the table)
         for p in tail_paths:
             _replay_json_commit(p, state)
+    elif (files := _driver_checkpoint_files(location, cp_files, tail_paths)) is None:
+        _replay_checkpoint_spark(
+            spark, location, cp_files, tail_paths, state, need_stats
+        )
     else:
-        cp_df = cp_dfs[0]
-        for extra in cp_dfs[1:]:
-            cp_df = cp_df.unionByName(extra, allowMissingColumns=True)
-        try:
-            tail_bytes = sum(os.path.getsize(p) for p in tail_paths)
-        except OSError:
-            # a transient getsize failure must not route a multi-GB
-            # tail to the driver replay — default to the scalable
-            # path; a genuinely unreadable commit fails loud in the
-            # JVM read exactly like the driver open() would
-            tail_bytes = _TAIL_DRIVER_BYTES + 1
-        winners = None
-        if tail_bytes <= _TAIL_DRIVER_BYTES:
-            state["_touched"] = set()
-            for p in tail_paths:
-                _replay_json_commit(p, state)
-            touched = state.pop("_touched")
-            tail_adds = state["adds"]
-            if touched:
-                tdf = spark.createDataFrame(
-                    [(p,) for p in sorted(touched)], "path string"
-                )
-                cp_df = cp_df.join(F.broadcast(tdf), "path", "left_anti")
-        else:
-            tail_adds, winners = _replay_tail_distributed(
-                spark, tail_paths, state
-            )
-            cp_df = cp_df.join(
-                winners.select(F.col("__p").alias("path")),
-                "path", "left_anti",
-            )
-        try:
-            adds: dict = {}
-            # the live add list must exist driver-side (the scan
-            # contract: spark.read.parquet(paths) — the reference's
-            # planner materializes its file list the same way), but
-            # stream it in partition batches instead of collect() so
-            # the driver never holds the full Row list AND the dict
-            # set simultaneously (r14; at 20M badly-compacted live
-            # files that is several GB of duplicate materialization)
-            for r in cp_df.toLocalIterator(prefetchPartitions=True):
-                d = r.asDict(recursive=True)
-                adds[d["path"]] = {
-                    k: v for k, v in d.items() if v is not None
-                }
-        finally:
-            if winners is not None:
-                winners.unpersist()
+        # small log: the whole replay on the driver, no Spark job
+        cp_adds = _read_checkpoint_driver(files, state, need_stats)
+        tail_adds, touched = _replay_tail_touched(tail_paths, state)
+        adds = {p: a for p, a in cp_adds.items() if p not in touched}
         adds.update(tail_adds)
         state["adds"] = adds
 
@@ -447,10 +538,83 @@ def _snapshot_state(
     return state
 
 
-# Tails whose JSON commits total at most this many bytes replay on the
-# driver (the common case between checkpoints: a handful of commits).
-# Bigger tails — e.g. one giant DELETE's million remove actions —
-# reconcile in Spark (:func:`_replay_tail_distributed`).
+def _replay_checkpoint_spark(
+    spark: SparkSession,
+    location: str,
+    cp_files: list[str],
+    tail_paths: list[str],
+    state: dict,
+    need_stats: bool,
+) -> None:
+    """Replay a checkpoint plus tail past the byte rule: the checkpoint
+    adds stay JVM-side and are anti-joined against the paths the tail
+    touched — a tail within :data:`_TAIL_DRIVER_BYTES` on its own is
+    replayed on the driver and broadcast, a bigger one reconciles in
+    Spark (:func:`_replay_tail_distributed`)."""
+    cp_dfs = _load_checkpoint(spark, location, cp_files, state, need_stats)
+    if not cp_dfs:
+        # no checkpoint adds: plain driver replay (tail IS the table;
+        # nothing seeds "_touched" on this path)
+        for p in tail_paths:
+            _replay_json_commit(p, state)
+        return
+    cp_df = cp_dfs[0]
+    for extra in cp_dfs[1:]:
+        cp_df = cp_df.unionByName(extra, allowMissingColumns=True)
+    try:
+        tail_bytes = sum(os.path.getsize(p) for p in tail_paths)
+    except OSError:
+        # a transient getsize failure must not route a multi-GB
+        # tail to the driver replay — default to the scalable
+        # path; a genuinely unreadable commit fails loud in the
+        # JVM read exactly like the driver open() would
+        tail_bytes = _TAIL_DRIVER_BYTES + 1
+    winners = None
+    if tail_bytes <= _TAIL_DRIVER_BYTES:
+        tail_adds, touched = _replay_tail_touched(tail_paths, state)
+        if touched:
+            tdf = spark.createDataFrame(
+                [(p,) for p in sorted(touched)], "path string"
+            )
+            cp_df = cp_df.join(F.broadcast(tdf), "path", "left_anti")
+    else:
+        tail_adds, winners = _replay_tail_distributed(
+            spark, tail_paths, state
+        )
+        cp_df = cp_df.join(
+            winners.select(F.col("__p").alias("path")),
+            "path", "left_anti",
+        )
+    try:
+        adds: dict = {}
+        # the live add list must exist driver-side (the scan
+        # contract: spark.read.parquet(paths) — the reference's
+        # planner materializes its file list the same way), but
+        # stream it in partition batches instead of collect() so
+        # the driver never holds the full Row list AND the dict
+        # set simultaneously (r14; at 20M badly-compacted live
+        # files that is several GB of duplicate materialization)
+        for r in cp_df.toLocalIterator(prefetchPartitions=True):
+            d = r.asDict(recursive=True)
+            adds[d["path"]] = {
+                k: v for k, v in d.items() if v is not None
+            }
+    finally:
+        if winners is not None:
+            winners.unpersist()
+    adds.update(tail_adds)
+    state["adds"] = adds
+
+
+# The one byte rule of snapshot replay. A checkpoint (all parts and V2
+# sidecars) plus JSON tail totalling at most this many bytes replays
+# entirely on the driver (the common case: a small table, or a handful
+# of commits since a checkpoint) — the same 4 MiB split as the Iceberg
+# reader's _MANIFEST_DRIVER_BYTES. Past it the checkpoint adds stay in
+# Spark; a tail still within it on its own replays on the driver, and a
+# bigger one — e.g. one giant DELETE's million remove actions —
+# reconciles in Spark (:func:`_replay_tail_distributed`). Tests pin it
+# to 0 to force the Spark route.
 _TAIL_DRIVER_BYTES = 4 * 1024 * 1024
 
 # Explicit read schema for JVM-side tail replay: the add fields replay
@@ -1012,7 +1176,9 @@ def add_check_constraint(
     key = f"delta.constraints.{name}"
     if key in cfg:
         raise ValueError(f"constraint {name!r} already exists on {location}")
-    existing = read_delta_table(spark, location)
+    existing = _dataframe_for_adds(
+        spark, location, state["metaData"], list(state["adds"].values())
+    )
     bad = existing.filter(f"NOT ({expr})").limit(1).collect()
     if bad:
         raise ValueError(
@@ -1527,9 +1693,9 @@ def delete_where_delta(
     # rows where the predicate is TRUE). A bare filter would drop
     # them; found by the r14 DML differential fuzzer (seed 1:
     # DELETE WHERE qty < 22 silently removed every NULL-qty row).
-    survivors = read_delta_table(spark, location).filter(
-        F.coalesce(F.expr(f"NOT ({predicate})"), F.lit(True))
-    )
+    survivors = _dataframe_for_adds(
+        spark, location, state["metaData"], list(state["adds"].values())
+    ).filter(F.coalesce(F.expr(f"NOT ({predicate})"), F.lit(True)))
     staged, part_phys = _physical_stage_args(state["metaData"], survivors)
     adds = _stage_data_files(staged, location, part_phys)
     now_ms = int(time.time() * 1000)
@@ -1579,7 +1745,9 @@ def update_delta(
             f"UPDATE {location}: {sorted(set(assignments) & set(gen))} are "
             "generated columns — they recompute automatically"
         )
-    current = read_delta_table(spark, location)
+    current = _dataframe_for_adds(
+        spark, location, meta, list(state["adds"].values())
+    )
     cond = F.expr(where)
     cols = []
     for f in schema.fields:
@@ -1658,14 +1826,16 @@ def merge_delta(
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     gen = _generation_map(meta)
     data_cols = [f.name for f in schema.fields if f.name not in gen]
-    target = read_delta_table(spark, location).withColumn(
-        "__t_present", F.lit(True)
-    ).alias("t")
+    # target and cardinality probe both scan the replayed snapshot, so
+    # the rewritten rows and the commit's removes share one version
+    current = _dataframe_for_adds(
+        spark, location, meta, list(state["adds"].values())
+    )
+    target = current.withColumn("__t_present", F.lit(True)).alias("t")
     src = source.withColumn("__s_present", F.lit(True)).alias("s")
     # cardinality check: each target row may match at most one source row
     probe = (
-        read_delta_table(spark, location)
-        .withColumn("__tid", F.monotonically_increasing_id())
+        current.withColumn("__tid", F.monotonically_increasing_id())
         .alias("t")
         .join(src, F.expr(on), "inner")
     )

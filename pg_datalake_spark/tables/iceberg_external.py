@@ -203,8 +203,9 @@ def _live_entries(
 
 # Manifest chains whose avro bytes exceed this decode on the EXECUTORS
 # (one task per manifest group) instead of serially in driver Python —
-# the same contract-vs-bottleneck split as the Delta reader's
-# _TAIL_DRIVER_BYTES (delta_log.py): the live-entry list itself must
+# the same 4 MiB byte rule as the Delta reader's _TAIL_DRIVER_BYTES
+# (delta_log.py), where a checkpoint plus JSON tail within it replays
+# on the driver and a larger log in Spark: the live-entry list itself must
 # exist driver-side (it IS the scan plan, like the reference's
 # snapshot.c planner), but a multi-million-entry chain decoded at
 # pure-Python speed on one core is minutes of driver wall the

@@ -44,6 +44,43 @@ def test_vanilla_session_gets_derived_advisory(spark):
     assert got == expect
 
 
+def test_directory_table_advisory_counts_its_files(spark, tmp_path, monkeypatch):
+    # a directory-backed table counts the bytes of its parquet files,
+    # not the size of its directory inode; single files count as before
+    import pg_datalake_spark.session as sess
+
+    sf = str(tmp_path)
+    orders = os.path.join(sf, "orders.parquet")
+    spark.range(0, 20000).selectExpr("id AS o_orderkey", "uuid() AS pad").repartition(
+        3
+    ).write.parquet(orders)
+    single = os.path.join(sf, "customer.parquet")
+    spark.range(0, 10).selectExpr("id AS c_custkey").coalesce(1).write.parquet(
+        os.path.join(sf, "stage")
+    )
+    part = next(
+        f for f in os.listdir(os.path.join(sf, "stage")) if f.endswith(".parquet")
+    )
+    os.replace(os.path.join(sf, "stage", part), single)
+    part_bytes = sum(
+        os.path.getsize(os.path.join(orders, f))
+        for f in os.listdir(orders)
+        if f.endswith(".parquet")
+    )
+    assert part_bytes > 2 * os.path.getsize(orders)
+
+    seen = []
+    real = sess.advisory_partition_bytes_for
+
+    def spy(data_bytes, cores):
+        seen.append(data_bytes)
+        return real(data_bytes, cores)
+
+    monkeypatch.setattr(sess, "advisory_partition_bytes_for", spy)
+    cat.load_tables(spark, sf, ["orders", "customer"])
+    assert seen == [part_bytes + os.path.getsize(single)]
+
+
 def test_spread_false_pins_stock_advisory(spark):
     # order-sensitive raw-double queries keep the stock post-shuffle
     # sizing their oracle hash-match was established under

@@ -1886,6 +1886,175 @@ def test_distributed_tail_replay_matches_driver_replay(
     )
 
 
+def _checkpointed_log(spark, loc, cp_kind):
+    """A partitioned table checkpointed in ``cp_kind`` layout with DV
+    adds and a txn watermark on both sides of the checkpoint, then a
+    tail that removes a checkpoint path, re-adds it, and removes a
+    second one for good."""
+    dl.write_delta_table(
+        spark.range(40).selectExpr("id", "id % 4 AS part"), loc,
+        partition_by=["part"],
+    )
+    dl.append_delta(
+        spark.range(40, 48).selectExpr("id", "id % 4 AS part"), loc,
+        txn_app_id="ingest", txn_version=1,
+    )
+    dl.delete_where_delta(spark, loc, "id % 5 = 0", mode="dv")
+    dl.write_delta_checkpoint(
+        spark, loc,
+        v2=(cp_kind == "v2_sidecars"),
+        multipart=3 if cp_kind == "multipart" else None,
+    )
+    cp_adds = dl._snapshot_state(spark, loc, None, need_stats=True)["adds"]
+    (p0, a0), (p1, _a1) = sorted(cp_adds.items())[:2]
+    if a0.get("deletionVector"):  # as JSON writers emit it: no nulls
+        dv = {k: v for k, v in a0["deletionVector"].items() if v is not None}
+        a0 = {**a0, "deletionVector": dv}
+    v = dl.delta_table_version(loc)
+    rm = {"deletionTimestamp": 1700000000000, "dataChange": True}
+    dl._write_commit(loc, v + 1, [{"remove": {"path": p0, **rm}}])
+    dl._write_commit(loc, v + 2, [{"add": a0}, {"remove": {"path": p1, **rm}}])
+    dl.delete_where_delta(spark, loc, "id = 7", mode="dv")
+    dl.append_delta(
+        spark.range(100, 104).selectExpr("id", "id % 4 AS part"), loc,
+        txn_app_id="ingest", txn_version=2,
+    )
+    return p0, p1
+
+
+@pytest.mark.parametrize("cp_kind", ["classic", "multipart", "v2_sidecars"])
+def test_checkpoint_routes_replay_identically(
+    spark, tmp_path, monkeypatch, cp_kind
+):
+    """The driver route (checkpoint + tail within _TAIL_DRIVER_BYTES,
+    read with pyarrow) and the Spark route (the constant pinned to 0)
+    build the same snapshot from every checkpoint layout, with and
+    without stats."""
+    loc = str(tmp_path / "routes")
+    p0, p1 = _checkpointed_log(spark, loc, cp_kind)
+    for need_stats in (False, True):
+        st_driver = dl._snapshot_state(spark, loc, None, need_stats=need_stats)
+        monkeypatch.setattr(dl, "_TAIL_DRIVER_BYTES", 0)
+        st_spark = dl._snapshot_state(spark, loc, None, need_stats=need_stats)
+        monkeypatch.undo()
+        for key in ("adds", "metaData", "protocol", "txns", "version"):
+            assert st_driver[key] == st_spark[key], (need_stats, key)
+        adds = st_driver["adds"]
+        assert p0 in adds and p1 not in adds
+        assert sum(1 for a in adds.values() if a.get("deletionVector")) >= 2
+        # tail adds keep their stats; checkpoint adds only on request
+        assert all("stats" in a for a in adds.values()) == need_stats
+        assert st_driver["txns"] == {"ingest": 2}
+    got = sorted(r.id for r in dl.read_delta_table(spark, loc).collect())
+    monkeypatch.setattr(dl, "_TAIL_DRIVER_BYTES", 0)
+    assert sorted(r.id for r in dl.read_delta_table(spark, loc).collect()) == got
+    assert 7 not in got and 45 not in got and set(range(100, 104)) <= set(got)
+
+
+def test_arrow_bulk_conversion_matches_per_element():
+    """The driver route's bulk (numpy) conversion of checkpoint columns
+    equals pyarrow's per-element to_pylist with MAPs as dicts — nulls,
+    null map values, sliced maps and nested structs included."""
+    import pyarrow as pa
+
+    smap = pa.map_(pa.string(), pa.string())
+    maps = pa.array([[("k", "v")], None, [], [("a", None), ("b", "x")]], type=smap)
+    cases = [
+        pa.array(["a", None, "c"]),
+        pa.array([1, None, 3], pa.int64()),
+        pa.array([1, 2, 3], pa.int32()),
+        pa.array([True, None]),
+        pa.array([None, None], pa.string()),
+        maps,
+        maps.slice(1),
+        pa.array(
+            [{"s": "i", "o": None, "m": [("x", "y")]}, None],
+            type=pa.struct(
+                [("s", pa.string()), ("o", pa.int64()), ("m", smap)]
+            ),
+        ),
+        pa.array([["a"], None], type=pa.list_(pa.string())),
+    ]
+    for arr in cases:
+        ref = [dl._maps_as_dicts(v, arr.type) for v in arr.to_pylist()]
+        got = dl._arrow_pylist(arr)
+        assert got == ref, arr.type
+        assert [type(v) for v in got] == [type(v) for v in ref], arr.type
+
+
+def test_small_checkpointed_snapshot_starts_no_spark_job(
+    spark, tmp_path, monkeypatch
+):
+    """Within the byte rule the whole replay — V2 manifest, sidecars
+    and tail — runs on the driver: no Spark job in the job group. The
+    Spark route under a second group is the control: listener events
+    arrive in order, so once its jobs are visible the first group's
+    would be too."""
+    import time as _time
+    import uuid as _uuid
+
+    loc = str(tmp_path / "nojobs")
+    _checkpointed_log(spark, loc, "v2_sidecars")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    driver_group = f"driver-{_uuid.uuid4().hex}"
+    spark_group = f"spark-{_uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(driver_group, "driver route")
+        st = dl._snapshot_state(spark, loc, None)
+        sc.setJobGroup(spark_group, "spark route")
+        monkeypatch.setattr(dl, "_TAIL_DRIVER_BYTES", 0)
+        dl._snapshot_state(spark, loc, None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = _time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(spark_group):
+        assert _time.monotonic() < deadline, "control group never saw a job"
+        _time.sleep(0.1)
+    assert st["adds"]
+    assert list(tracker.getJobIdsForGroup(driver_group)) == []
+
+
+def test_write_verbs_replay_the_log_once(spark, tmp_path, monkeypatch):
+    """Each write verb builds its frame from the snapshot it replayed:
+    one _snapshot_state per call, so the commit's removes and the
+    rewritten rows come from the same version."""
+    loc = str(tmp_path / "once")
+    dl.write_delta_table(
+        spark.range(20).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v")),
+        loc,
+    )
+    dl.write_delta_checkpoint(spark, loc)
+    calls = []
+    real = dl._snapshot_state
+
+    def counting(*args, **kwargs):
+        calls.append(args[1])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dl, "_snapshot_state", counting)
+    src = spark.createDataFrame([(2, 7), (30, 9)], "k long, nv long")
+    verbs = {
+        "delete_cow": lambda: dl.delete_where_delta(spark, loc, "k = 1"),
+        "update": lambda: dl.update_delta(spark, loc, {"v": "v + 1"}, "k < 5"),
+        "merge": lambda: dl.merge_delta(
+            spark, loc, src, on="t.k = s.k", when_matched_update={"v": "s.nv"}
+        ),
+        "add_constraint": lambda: dl.add_check_constraint(
+            spark, loc, "v_pos", "v >= 0"
+        ),
+    }
+    for name, run in verbs.items():
+        calls.clear()
+        run()
+        assert len(calls) == 1, (name, len(calls))
+    monkeypatch.undo()
+    got = {r.k: r.v for r in dl.read_delta_table(spark, loc).collect()}
+    assert 1 not in got and got[2] == 7 and got[3] == 7 and got[30] is None
+    assert len(got) == 20
+
+
 def test_foreign_writer_extra_add_fields_replay_identically(
     spark, tmp_path, monkeypatch
 ):
