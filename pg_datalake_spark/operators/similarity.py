@@ -78,11 +78,12 @@ def cosine_topk_vs(
     the vector costs no separate driver job (r15: one Spark job instead
     of two per invocation, identical scores — the arithmetic is the
     same zip_with/aggregate expression over a column instead of a
-    literal). ``query`` must be a single row holding ``vec_col``; the
-    contract is enforced with ``limit(1)`` (r15 ADVICE item 4: a >1-row
-    frame would silently duplicate and corrupt the top-k via the cross
-    join; a 0-row frame still yields an empty result by construction —
-    there is nothing to score against)."""
+    literal). ``query`` must be a single row holding ``vec_col``.
+    ``limit(1)`` keeps a >1-row frame from duplicating and corrupting
+    the top-k through the cross join, but it does not reject such a
+    frame: it scores against one arbitrary row, which can differ from
+    run to run. A 0-row frame yields an empty result by construction —
+    there is nothing to score against."""
     q = query.limit(1).select(F.col(vec_col).alias("__qv"))
     score = dot(F.col(vec_col), F.col("__qv")) / (
         norm(F.col(vec_col)) * norm(F.col("__qv"))

@@ -30,6 +30,17 @@ def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def default_driver_memory() -> str:
+    """Half of the host's physical memory, clamped to [1 GB, 16 GB].
+    The driver JVM grows its heap toward the maximum before it collects
+    in earnest, so a maximum near the host's RAM lets one session (a
+    whole test run, say) push the host out of memory; a quarter is too
+    little heap for the test suite's spatial tests after the rest of
+    the run."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(max(total // 2 >> 20, 1024), 16 << 10)}m"
+
+
 def advisory_partition_bytes_for(data_bytes: int, cores: int) -> int:
     """AQE partition-coalescing target, derived from the input size:
     the 64 MB default folds every post-shuffle stage of a small input
@@ -72,7 +83,10 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # Parquet scans: keep split size moderate so local[N] parallelizes
         # small files; on a real cluster the same knob bounds task size.

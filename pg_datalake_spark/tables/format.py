@@ -22,19 +22,24 @@ Reference parity map:
 Scale design: all data-plane work (writes, delete-row identification,
 MOR anti-joins, compaction rewrites) is Spark jobs over file lists;
 the metadata JSON holds only file-level entries (like Iceberg
-manifests), never row data. Position deletes join on
-(_metadata.file_path, _metadata.row_index) — a broadcast anti-join
-when delete files are small, which is the common case.
+manifests), never row data. Planning reads only metadata: a write
+takes each new file's rows and min/max/null stats from its parquet
+footer on the driver, and a read gives Spark the schema the table
+records, so neither starts a Spark job of its own. Position deletes
+join on (_metadata.file_path, _metadata.row_index) — a broadcast
+anti-join when delete files are small, which is the common case.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
+from decimal import Decimal
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -143,7 +148,9 @@ class LakeTable:
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
-        self.root = root
+        # every path the table records is spelled the way Spark reports
+        # it back in ``_metadata.file_path``, so DML can match the two
+        self.root = _local_path(root)
 
     # -- paths ------------------------------------------------------------
     @property
@@ -264,13 +271,82 @@ class LakeTable:
     def _collect_file_entries(
         self, paths_root: str, spec: list[PartitionField], meta: dict
     ) -> list[DataFile]:
-        """Harvest per-file rows + min/max/null stats with one Spark
-        aggregation over the written files (the reference harvests the
-        same from DuckDB's COPY ... return_stats)."""
+        """Per-file rows + min/max/null stats of the files under
+        ``paths_root``, read from their parquet footers on the driver
+        (the reference takes the same from DuckDB's COPY ...
+        return_stats). The footer values go through each Spark type's
+        own conversion, so the entries equal what a Spark min/max
+        aggregation over the files returns. A column the footers cannot
+        answer exactly (INT96 timestamps, FIXED_LEN_BYTE_ARRAY decimals,
+        strings past the writer's stats size limit, a zero bound whose
+        sign Spark's order leaves to row order, a file type that is not
+        the table's) keeps that Spark aggregation, for that column
+        only; a file this session's parquet writer did not write
+        keeps it for every column. 0-row files are skipped."""
+        # a relative path names the same files for both routes: Spark
+        # would resolve it against the JVM's working directory
+        paths_root = _local_path(paths_root)
         schema = self._schema_from(meta)
         colmap = {str(f["id"]): f["name"] for f in meta["fields"]}
+        fields = [f for f in schema.fields if _statable(f.dataType)]
+        found = self._footer_stats(paths_root, fields)
+        if found is None:
+            found = self._spark_stats(paths_root, schema, [f.name for f in fields])
+        else:
+            missing = [f.name for f in fields if any(f.name not in st for _, st in found.values())]
+            if missing:
+                for path, (_, st) in self._spark_stats(paths_root, schema, missing).items():
+                    found[path][1].update(st)
+        part_names = {p.name for p in spec}
+        return [
+            DataFile(
+                path=path,
+                rows=rows,
+                bytes=os.path.getsize(path),
+                partition=_partition_values_from_path(path, part_names),
+                stats={f.name: st[f.name] for f in fields},
+                colmap=colmap,
+            )
+            for path, (rows, st) in found.items()
+        ]
+
+    def _footer_stats(
+        self, paths_root: str, fields: list[T.StructField]
+    ) -> dict[str, tuple[int, dict]] | None:
+        """``{path: (rows, {column: [min, max, nulls]})}`` from the
+        footers, leaving out the columns they cannot answer exactly;
+        None when some file must be aggregated by Spark as a whole."""
+        import pyarrow.parquet as pq
+
+        from pg_datalake_spark.tables.footer import column_bounds
+
+        paths = _spark_read_files(paths_root)
+        if paths is None:
+            return None
+        # float stats carry NaN and -0.0 the way this writer orders them
+        writer = self.spark._jvm.org.apache.parquet.Version.FULL_VERSION
+        found = {}
+        for path in paths:
+            md = pq.ParquetFile(path).metadata
+            if md.created_by != writer:
+                return None
+            if md.num_rows == 0:
+                continue
+            bounds = column_bounds(md)
+            stats = {}
+            for f in fields:
+                st = _footer_stat(f.dataType, *bounds.get(f.name, (None, None)))
+                if st is not None:
+                    stats[f.name] = st
+            found[path] = (md.num_rows, stats)
+        return found
+
+    def _spark_stats(
+        self, paths_root: str, schema: T.StructType, cols: list[str]
+    ) -> dict[str, tuple[int, dict]]:
+        """The footer route's result for ``cols``, from one Spark
+        aggregation over the files."""
         df = self.spark.read.schema(schema).parquet(paths_root)
-        cols = [f.name for f in schema.fields if _statable(f.dataType)]
         aggs = [F.count(F.lit(1)).alias("__rows")]
         for c in cols:
             aggs += [
@@ -278,28 +354,21 @@ class LakeTable:
                 F.max(c).alias(f"__max_{c}"),
                 F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__nulls_{c}"),
             ]
-        part_names = {p.name for p in spec}
         rows = (
             df.groupBy(F.col("_metadata.file_path").alias("__path"))
             .agg(*aggs)
             .collect()
         )
-        out = []
-        for r in rows:
-            path = _strip_scheme(r["__path"])
-            stats = {c: [_jval(r[f"__min_{c}"]), _jval(r[f"__max_{c}"]), r[f"__nulls_{c}"]] for c in cols}
-            partition = _partition_values_from_path(path, part_names)
-            out.append(
-                DataFile(
-                    path=path,
-                    rows=r["__rows"],
-                    bytes=os.path.getsize(path),
-                    partition=partition,
-                    stats=stats,
-                    colmap=colmap,
-                )
+        return {
+            _strip_scheme(r["__path"]): (
+                r["__rows"],
+                {
+                    c: [_jval(r[f"__min_{c}"]), _jval(r[f"__max_{c}"]), r[f"__nulls_{c}"]]
+                    for c in cols
+                },
             )
-        return out
+            for r in rows
+        }
 
     def _new_snapshot(
         self,
@@ -377,8 +446,11 @@ class LakeTable:
         """Read data files under the CURRENT schema, applying each
         file's field-id column mapping (schema evolution: files written
         before a rename keep old physical names; files written before
-        an added column simply lack it → default/NULL). Returns current
-        columns + __file/__pos lineage."""
+        an added column simply lack it → default/NULL). Each colmap
+        group is read with the schema the table records — physical
+        names from the colmap, types from ``meta["fields"]`` — so no
+        Spark job infers one. Returns current columns + __file/__pos
+        lineage."""
         groups: dict[tuple, list[DataFile]] = {}
         for f in files:
             key = tuple(sorted(f.colmap.items()))
@@ -386,12 +458,19 @@ class LakeTable:
         parts = []
         for key, fs in groups.items():
             colmap = dict(key)
-            df = self.spark.read.parquet(*[f.path for f in fs])
+            read = T.StructType(
+                [
+                    T.StructField(colmap[str(fld["id"])], _parse_type(fld["type"]))
+                    for fld in meta["fields"]
+                    if str(fld["id"]) in colmap
+                ]
+            )
+            df = self.spark.read.schema(read).parquet(*[f.path for f in fs])
             cols = []
             for fld in meta["fields"]:
                 phys = colmap.get(str(fld["id"]))
-                if phys is not None and phys in df.columns:
-                    cols.append(F.col(phys).cast(fld["type"]).alias(fld["name"]))
+                if phys is not None:
+                    cols.append(F.col(phys).alias(fld["name"]))
                 else:
                     cols.append(F.lit(fld.get("default")).cast(fld["type"]).alias(fld["name"]))
             parts.append(
@@ -410,7 +489,9 @@ class LakeTable:
         pos = [d for d in snap.delete_files if d.content == "position"]
         eqs = [d for d in snap.delete_files if d.content == "equality"]
         if pos:
-            deletes = self.spark.read.parquet(*[d.path for d in pos])
+            deletes = self.spark.read.schema("file_path string, pos long").parquet(
+                *[d.path for d in pos]
+            )
             df = df.join(
                 F.broadcast(deletes),
                 (F.col("__file") == F.col("file_path")) & (F.col("__pos") == F.col("pos")),
@@ -423,16 +504,15 @@ class LakeTable:
             if not cols or not d.applies_to:
                 continue
             keys = (
-                self.spark.read.parquet(d.path)
+                self.spark.read.schema(_written_schema(d.path))
+                .parquet(d.path)
                 .select(*[F.col(c).alias(f"__eq_{c}") for c in cols])
                 .dropDuplicates()
             )
             # in-scope rows matching a key row (null-safe on every
             # column) are removed; rows from files appended after the
             # delete commit bypass it entirely
-            scoped = F.regexp_replace(F.col("__file"), "^file:(//)?", "").isin(
-                *(d.applies_to or [])
-            )
+            scoped = _path_col(F.col("__file")).isin(*d.applies_to)
             cond = scoped
             for c in cols:
                 cond = cond & F.col(c).eqNullSafe(F.col(f"__eq_{c}"))
@@ -541,7 +621,8 @@ class LakeTable:
         files = snap.data_files
         if filters:
             spec = self._partition_spec(meta)
-            files = [f for f in files if not _prunable(f, filters, spec)]
+            types = _field_types(meta)
+            files = [f for f in files if not _prunable(f, filters, types)]
             files = self._partition_prune(files, filters, spec)
         if not files:
             return self.spark.createDataFrame([], self._schema_from(meta))
@@ -584,6 +665,7 @@ class LakeTable:
         candidates: list[DataFile] = []
         dropped = 0
         pred_filters = _parse_simple_predicate(predicate)
+        types = _field_types(meta)
         part_live: set[str] | None = None
         if pred_filters is not None:
             live = self._partition_prune(cur.data_files, pred_filters, spec)
@@ -592,9 +674,9 @@ class LakeTable:
             if part_live is not None and f.path not in part_live:
                 keep_files.append(f)  # partition transform proves no match
                 continue
-            if pred_filters is not None and _prunable(f, pred_filters, spec):
+            if pred_filters is not None and _prunable(f, pred_filters, types):
                 keep_files.append(f)  # no row can match → untouched
-            elif pred_filters is not None and _whole_file_match(f, pred_filters, spec):
+            elif pred_filters is not None and _whole_file_match(f, pred_filters, types):
                 dropped += 1  # every row matches → metadata-only drop
             else:
                 candidates.append(f)
@@ -638,9 +720,7 @@ class LakeTable:
                 # as iceberg_external.add_position_deletes_df; a single
                 # coalesced task would bottleneck a wide delete at scale
                 (
-                    matched.filter(
-                        F.regexp_replace("file_path", "^file:", "").isin(*keep_paths)
-                    )
+                    matched.filter(_path_col(F.col("file_path")).isin(*keep_paths))
                     .repartition("file_path")
                     .sortWithinPartitions("file_path", "pos")
                     .write.parquet(del_dir)
@@ -726,6 +806,7 @@ class LakeTable:
             return
         spec = self._partition_spec(meta)
         pred_filters = _parse_simple_predicate(predicate)
+        types = _field_types(meta)
 
         keep: list[DataFile] = []
         candidates: list[DataFile] = []
@@ -735,7 +816,7 @@ class LakeTable:
             live = {f.path for f in cur.data_files}
         for f in cur.data_files:
             if f.path not in live or (
-                pred_filters is not None and _prunable(f, pred_filters, spec)
+                pred_filters is not None and _prunable(f, pred_filters, types)
             ):
                 keep.append(f)  # provably no matching row → untouched
             else:
@@ -788,112 +869,112 @@ class LakeTable:
         COW strategy: only files containing matched keys are rewritten;
         untouched files carry over by reference; unmatched source rows
         are appended. Update expressions may reference source columns
-        as ``src.<col>``.
+        as ``src.<col>`` and target columns as ``tgt.<col>``. One probe
+        query checks the source keys, finds the files to rewrite and
+        counts the rows to insert; one write then produces the
+        rewritten and the inserted rows together.
+
+        Returns {"rewritten_files": target files rewritten,
+        "inserted_rows": n}.
         """
         meta = self._load()
         cur = self._current_snapshot(meta)
         spec = self._partition_spec(meta)
         keys = [on] if isinstance(on, str) else list(on)
-        # a source with duplicate join keys would silently multiply
-        # matched target rows through the rewrite join — standard MERGE
-        # semantics (SQL:2003, Spark, Iceberg) reject multiple matches
-        dup = (
-            source.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(1)
-            .count()
-        )
-        if dup:
+        files = list(cur.data_files) if cur else []
+        types = _field_types(meta)
+
+        def key_cond(left: str, right: str) -> F.Column:
+            cond = F.lit(True)
+            for k in keys:
+                cond = cond & (F.col(f"{left}.{k}") == F.col(f"{right}.{k}"))
+            return cond
+
+        # the probe: each source key's row count, joined to the target
+        # rows it matches. A source with duplicate join keys would
+        # silently multiply matched target rows through the rewrite
+        # join — standard MERGE semantics (SQL:2003, Spark, Iceberg)
+        # reject multiple matches.
+        per_key = source.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n")).alias("src")
+        if files:
+            tgt = self._apply_deletes(self._read_mapped(files, meta), cur).alias("tgt")
+            probe = per_key.join(tgt, key_cond("src", "tgt"), "left").select(
+                "src.__n", "tgt.__file"
+            )
+        else:
+            probe = per_key.select("__n", F.lit(None).cast("string").alias("__file"))
+        max_n, hit_paths, unmatched = probe.agg(
+            F.max("__n"),
+            F.collect_set("__file"),
+            F.sum(F.when(F.col("__file").isNull(), F.col("__n")).otherwise(0)),
+        ).first()
+        if max_n is not None and max_n > 1:
             raise ValueError(
                 f"MERGE source has duplicate join keys on {keys}; "
                 "deduplicate or pre-aggregate the source first"
             )
-        src = source.alias("src")
-        tgt_cols = [f.name for f in self.schema.fields]
+        hit_paths = {_strip_scheme(p) for p in hit_paths}
+        hit = [f for f in files if f.path in hit_paths]
+        rewrite = bool(hit) and bool(when_matched_update or when_matched_delete)
+        n_inserted = int(unmatched or 0) if when_not_matched_insert else 0
 
-        def key_cond(left_prefix: str) -> F.Column:
-            cond = F.lit(True)
-            for k in keys:
-                cond = cond & (F.col(f"{left_prefix}.{k}") == F.col(f"src.{k}"))
-            return cond
+        src = source.withColumn("__s", F.lit(True)).alias("src")
+        new_ids = meta.get("row_ids") and "_row_id" not in source.columns
 
-        rewritten: list[DataFile] = []
-        keep: list[DataFile] = list(cur.data_files) if cur else []
-        if cur and cur.data_files and (when_matched_update or when_matched_delete):
-            tgt = self._apply_deletes(self._read_mapped(cur.data_files, meta), cur).alias(
-                "tgt"
+        def inserted(c: str) -> F.Column:
+            if c == "_row_id" and new_ids:
+                return F.monotonically_increasing_id() + F.lit(meta["next_row_id"])
+            if c in source.columns:
+                return F.col(f"src.{c}")
+            return F.lit(None).cast(types[c])
+
+        out = None
+        if rewrite:
+            rows = (
+                self._apply_deletes(self._read_mapped(hit, meta), cur)
+                .drop("__file", "__pos")
+                .withColumn("__t", F.lit(True))
+                .alias("tgt")
             )
-            hit_files = {
-                _strip_scheme(r["__file"])
-                for r in tgt.join(src, key_cond("tgt"), "left_semi")
-                .select("__file")
-                .distinct()
-                .collect()
-            }
-            if hit_files:
-                keep = [f for f in (cur.data_files if cur else []) if f.path not in hit_files]
-                hit_entries = [f for f in cur.data_files if f.path in hit_files]
-                hit = (
-                    self._apply_deletes(self._read_mapped(hit_entries, meta), cur)
-                    .drop("__file", "__pos")
-                    .alias("tgt")
-                    .join(src, key_cond("tgt"), "left")
-                )
-                matched = F.col(f"src.{keys[0]}").isNotNull()
-                if when_matched_delete:
-                    out = hit.filter(~matched).select([F.col(f"tgt.{c}") for c in tgt_cols])
-                else:
-                    cols = []
-                    for c in tgt_cols:
-                        if when_matched_update and c in when_matched_update:
-                            cols.append(
-                                F.when(matched, F.expr(when_matched_update[c]))
-                                .otherwise(F.col(f"tgt.{c}"))
-                                .alias(c)
-                            )
-                        else:
-                            cols.append(F.col(f"tgt.{c}").alias(c))
-                    out = hit.select(*cols)
-                rw_dir = os.path.join(self.root, "data", f"m-{uuid.uuid4().hex[:12]}")
-                self._write_data(out, rw_dir, spec)
-                rewritten = self._collect_file_entries(rw_dir, spec, meta)
+            joined = rows.join(src, key_cond("tgt", "src"), "full" if n_inserted else "left")
+            is_tgt = F.col("tgt.__t").isNotNull()
+            matched = is_tgt & F.col("src.__s").isNotNull()
+            if when_matched_delete:
+                joined = joined.filter(~matched)
+            cols = []
+            for c in types:
+                v = F.col(f"tgt.{c}")
+                if not when_matched_delete and when_matched_update and c in when_matched_update:
+                    v = F.when(matched, F.expr(when_matched_update[c])).otherwise(v)
+                if n_inserted:
+                    v = F.when(is_tgt, v).otherwise(inserted(c))
+                cols.append(v.alias(c))
+            out = joined.select(*cols)
+        elif n_inserted:
+            # only rows of the hit files can match a source key
+            if hit:
+                hit_keys = self._apply_deletes(self._read_mapped(hit, meta), cur).alias("tgt")
+                src = src.join(hit_keys, key_cond("src", "tgt"), "left_anti")
+            out = src.select(*[inserted(c).alias(c) for c in types])
 
-        inserts: list[DataFile] = []
-        n_inserted = 0
-        if when_not_matched_insert:
-            existing = self.scan().select(
-                *[F.col(k).alias(f"__k_{k}") for k in keys]
-            )
-            anti_cond = F.lit(True)
-            for k in keys:
-                anti_cond = anti_cond & (F.col(f"src.{k}") == F.col(f"__k_{k}"))
-            new_rows = src.join(existing, anti_cond, "left_anti")
-            new_rows = new_rows.select(
-                *[F.col(c) if c in source.columns else F.lit(None).cast(self.schema[c].dataType).alias(c) for c in tgt_cols]
-            )
-            if meta.get("row_ids") and "_row_id" not in source.columns:
-                new_rows = new_rows.withColumn(
-                    "_row_id", F.monotonically_increasing_id() + F.lit(meta["next_row_id"])
-                )
-            n_inserted = new_rows.count()
-            if n_inserted:
-                ins_dir = os.path.join(self.root, "data", f"mi-{uuid.uuid4().hex[:12]}")
-                self._write_data(new_rows, ins_dir, spec)
-                inserts = self._collect_file_entries(ins_dir, spec, meta)
-
-        if meta.get("row_ids") and inserts:
-            maxes = [f.stats.get("_row_id", [None, None, None])[1] for f in inserts]
+        written: list[DataFile] = []
+        if out is not None:
+            out_dir = os.path.join(self.root, "data", f"m-{uuid.uuid4().hex[:12]}")
+            self._write_data(out, out_dir, spec)
+            written = self._collect_file_entries(out_dir, spec, meta)
+        if meta.get("row_ids") and n_inserted:
+            maxes = [f.stats.get("_row_id", [None, None, None])[1] for f in written]
             hi = max((m for m in maxes if m is not None), default=-1)
             meta["next_row_id"] = max(meta["next_row_id"], int(hi) + 1)
+        keep = [f for f in files if f.path not in hit_paths] if rewrite else files
         # NB: MOR delete files from prior snapshots still apply to files
         # carried over by reference (rewritten files had them applied
         # during the rewrite; their stale entries are no-ops).
         self._new_snapshot(
-            meta, "merge", keep + rewritten + inserts, cur.delete_files if cur else []
+            meta, "merge", keep + written, cur.delete_files if cur else []
         )
         return {
-            "rewritten_files": len(rewritten),
+            "rewritten_files": len(hit) if rewrite else 0,
             "inserted_rows": n_inserted,
         }
 
@@ -908,13 +989,24 @@ class LakeTable:
         """Register existing parquet files into the table without
         rewriting them (reference: add_files_to_table.c /
         test_iceberg_add_table.py; Iceberg's add_files procedure).
-        Files must match the table schema."""
+        Files must match the table schema; a table column a file lacks
+        reads as the column's default."""
+        import pyarrow.parquet as pq
+
         meta = self._load()
         spec = self._partition_spec(meta)
         cur = self._current_snapshot(meta)
         entries: list[DataFile] = []
         for p in paths:
             entries += self._collect_file_entries(p, spec, meta)
+        for e in entries:
+            # the colmap names only the columns the file holds, so
+            # _read_mapped reads the others as their default, and no
+            # stats claim they are all NULL
+            names = set(pq.read_schema(e.path).names)
+            if not names.issuperset(e.colmap.values()):
+                e.colmap = {i: c for i, c in e.colmap.items() if c in names}
+                e.stats = {c: st for c, st in e.stats.items() if c in names}
         self._new_snapshot(
             meta,
             "add_files",
@@ -1075,7 +1167,8 @@ class LakeTable:
         files = cur.data_files
         if filters:
             spec = self._partition_spec(meta)
-            files = [f for f in files if not _prunable(f, filters, spec)]
+            types = _field_types(meta)
+            files = [f for f in files if not _prunable(f, filters, types)]
             files = self._partition_prune(files, filters, spec)
         return {
             "files_total": total,
@@ -1124,7 +1217,27 @@ def _parse_type(simple: str) -> T.DataType:
 
 
 def _strip_scheme(p: str) -> str:
-    return p[5:] if p.startswith("file:") else p
+    """The local path of a Spark file URI such as ``_metadata.file_path``
+    (``file:`` + the %-escaped path); a plain path is returned as is."""
+    from urllib.parse import unquote, urlparse
+
+    return unquote(urlparse(p).path) if p.startswith("file:") else p
+
+
+def _path_col(c: F.Column) -> F.Column:
+    """``_strip_scheme`` as a Column expression. ``url_decode`` is form
+    decoding, which reads '+' as a space, so a literal '+' is escaped
+    first."""
+    bare = F.regexp_replace(c, "^file:(//)?", "")
+    return F.url_decode(F.regexp_replace(bare, "\\+", "%2B"))
+
+
+def _local_path(p: str) -> str:
+    """``p`` absolute and normalised as Spark reports it: no ``.`` or
+    ``..`` segment and one leading slash (``os.path.abspath`` keeps the
+    two that POSIX allows; Hadoop would read them as a host)."""
+    p = os.path.abspath(p)
+    return "/" + p.lstrip("/") if p.startswith("//") else p
 
 
 def _statable(dt: T.DataType) -> bool:
@@ -1151,7 +1264,111 @@ def _jval(v):
         return v.isoformat(sep=" ")
     if hasattr(v, "isoformat"):
         return v.isoformat()
+    if isinstance(v, Decimal):
+        return str(v)  # exact; _cmp_bounds reads it back by the column type
     return v
+
+
+def _written_schema(root: str) -> T.StructType:
+    """The Spark schema a Spark write under ``root`` recorded in its
+    parquet footers (the key Spark's parquet writer always sets)."""
+    import pyarrow.parquet as pq
+
+    path = _spark_read_files(root)[0]
+    row_meta = pq.read_schema(path).metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+    return T.StructType.fromJson(json.loads(row_meta))
+
+
+def _spark_read_files(root: str) -> list[str] | None:
+    """The files ``spark.read.parquet(root)`` reads (its hidden-name
+    rule), or None when ``root`` does not exist or one of them is not a
+    ``.parquet`` file."""
+    if os.path.isfile(root):
+        return [root]
+    if not os.path.isdir(root):
+        return None
+    out = []
+    for d, dirs, names in os.walk(root):
+        dirs[:] = [n for n in dirs if not _hidden(n)]
+        for n in names:
+            if _hidden(n):
+                continue
+            if not n.endswith(".parquet"):
+                return None
+            out.append(os.path.join(d, n))
+    return sorted(out)
+
+
+def _hidden(name: str) -> bool:
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+
+
+def _footer_decoder(dt: T.DataType, col):
+    """raw footer value → the value Spark's min/max returns for ``dt``,
+    or None when the column is not stored the way Spark stores ``dt``
+    with exact footer stats."""
+    phys = col.physical_type
+    logical = json.loads(col.logical_type.to_json())
+    kind = logical["Type"]
+    bits = _INT_BITS.get(type(dt))
+    if bits is not None:
+        plain = kind == "None" and bits in (32, 64)
+        annotated = kind == "Int" and logical["bitWidth"] == bits and logical["isSigned"]
+        ok = phys == ("INT64" if bits == 64 else "INT32") and (plain or annotated)
+        return int if ok else None
+    if isinstance(dt, (T.BooleanType, T.FloatType, T.DoubleType)):
+        want = {T.BooleanType: "BOOLEAN", T.FloatType: "FLOAT", T.DoubleType: "DOUBLE"}
+        return (lambda v: v) if phys == want[type(dt)] and kind == "None" else None
+    if isinstance(dt, T.StringType):
+        ok = phys == "BYTE_ARRAY" and kind == "String"
+        return (lambda v: v.decode("utf-8")) if ok else None
+    if isinstance(dt, T.DateType):
+        return dt.fromInternal if phys == "INT32" and kind == "Date" else None
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        ok = (
+            phys == "INT64"
+            and kind == "Timestamp"
+            and logical["timeUnit"] == "microseconds"
+            and logical["isAdjustedToUTC"] == isinstance(dt, T.TimestampType)
+        )
+        return dt.fromInternal if ok else None
+    if isinstance(dt, T.DecimalType):
+        ok = (
+            phys in ("INT32", "INT64")
+            and kind == "Decimal"
+            and (logical["precision"], logical["scale"]) == (dt.precision, dt.scale)
+        )
+        return (lambda v: Decimal(v).scaleb(-dt.scale)) if ok else None
+    return None
+
+
+def _footer_stat(dt: T.DataType, col, bounds) -> list | None:
+    """[min, max, null_count] as the Spark aggregation stores them, from
+    one column's footer bounds; None when the footer has no exact
+    answer."""
+    if bounds is None:
+        return None
+    decode = _footer_decoder(dt, col)
+    if decode is None:
+        return None
+    lo, hi, nulls = bounds
+    # Spark's min/max treat -0.0 and 0.0 as equal and keep whichever
+    # comes first; the footer orders -0.0 below 0.0. A zero bound is
+    # exact only when the other zero cannot be in the file.
+    if _is_zero(lo, -1.0) and not _is_zero(hi, -1.0):
+        return None
+    if _is_zero(hi, 1.0) and not _is_zero(lo, 1.0):
+        return None
+    if lo is None:
+        return [None, None, nulls]
+    return [_jval(decode(lo)), _jval(decode(hi)), nulls]
+
+
+def _is_zero(v, sign: float) -> bool:
+    return isinstance(v, float) and v == 0.0 and math.copysign(1.0, v) == sign
 
 
 def _snapshot_from_dict(s: dict) -> Snapshot:
@@ -1198,24 +1415,35 @@ def _parse_simple_predicate(predicate: str) -> list[tuple] | None:
                 value = float(raw) if "." in raw else int(raw)
             except ValueError:
                 return None  # bare identifier/boolean → full scan
+            if isinstance(value, float) and Decimal(repr(value)) != Decimal(raw):
+                return None  # a double cannot hold it: no exact decimal bound
         out.append((col, "=" if op == "==" else op, value))
     return out
 
 
-def _cmp_bounds(f: DataFile, col: str, op: str, value) -> tuple[bool, bool]:
+def _cmp_bounds(f: DataFile, col: str, op: str, value, dtype: str | None) -> tuple[bool, bool]:
     """(can_match, all_match) for one clause against file stats.
     all_match is only provable when the file has no NULLs in the column
-    (a NULL row never matches any comparison predicate)."""
+    (a NULL row never matches any comparison predicate). ``dtype`` is
+    the column's type: decimal stats are stored as exact strings."""
     st = f.stats.get(col)
     if st is None:
         return True, False
     lo, hi, nulls = st
     if lo is None or hi is None:
         return True, False
+    if any(isinstance(v, float) and math.isnan(v) for v in (lo, hi, value)):
+        return True, False  # Spark orders NaN above every number: NaN bounds nothing
     if nulls and nulls > 0:
         no_nulls = False
     else:
         no_nulls = True
+    if dtype is not None and dtype.startswith("decimal"):
+        if isinstance(value, bool) or not isinstance(value, (int, float, Decimal)):
+            return True, False
+        # a float literal as written (repr), not its binary expansion
+        value = Decimal(repr(value) if isinstance(value, float) else value)
+        lo, hi = Decimal(lo), Decimal(hi)
     if isinstance(value, (int, float)) and isinstance(lo, str):
         return True, False
     try:
@@ -1256,22 +1484,26 @@ def _filters_to_column(filters: list[tuple]) -> F.Column:
     return cond
 
 
-def _prunable(f: DataFile, filters: list[tuple], spec: list[PartitionField]) -> bool:
+def _field_types(meta: dict) -> dict[str, str]:
+    return {f["name"]: f["type"] for f in meta["fields"]}
+
+
+def _prunable(f: DataFile, filters: list[tuple], types: dict[str, str]) -> bool:
     """True if NO row of the file can match all clauses (skip the file).
     Mirrors the reference's bound-constraint evaluation
     (data_file_pruning.c:111-165)."""
     for col, op, value in filters:
-        can_match, _ = _cmp_bounds(f, col, op, value)
+        can_match, _ = _cmp_bounds(f, col, op, value, types.get(col))
         if not can_match:
             return True
     return False
 
 
-def _whole_file_match(f: DataFile, filters: list[tuple], spec: list[PartitionField]) -> bool:
+def _whole_file_match(f: DataFile, filters: list[tuple], types: dict[str, str]) -> bool:
     """True if EVERY row of the file provably matches all clauses —
     enables the metadata-only delete fast path."""
     for col, op, value in filters:
-        _, all_match = _cmp_bounds(f, col, op, value)
+        _, all_match = _cmp_bounds(f, col, op, value, types.get(col))
         if not all_match:
             return False
     return True

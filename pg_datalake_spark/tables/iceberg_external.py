@@ -40,6 +40,7 @@ so predicate pushdown / column pruning / AQE all apply unchanged.
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
 import time
@@ -343,7 +344,7 @@ def snapshot_file_entries(
 
 def _file_may_match(entry: dict, fid: int, ftype: str, op: str, val) -> bool:
     """Can any row of this data file satisfy ``col op val``, judging by
-    its manifest bounds? Missing/undeserializable bounds → True (prune
+    its manifest bounds? Missing/undeserializable/NaN bounds → True (prune
     only on proof). Non-ASCII string bounds are ignored: parquet orders
     stats by unsigned byte, Python by code point — only agree on ASCII."""
     lb = entry["lower_bounds"].get(fid)
@@ -354,6 +355,8 @@ def _file_may_match(entry: dict, fid: int, ftype: str, op: str, val) -> bool:
     hi = _bound_from_bytes(ub, ftype)
     if lo is None or hi is None:
         return True
+    if any(isinstance(v, float) and math.isnan(v) for v in (lo, hi, val)):
+        return True  # Spark orders NaN above every number: NaN bounds nothing
     if ftype == "string":
         if not (lo.isascii() and hi.isascii() and str(val).isascii()):
             return True
@@ -996,30 +999,29 @@ def _bound_from_bytes(b: bytes, ice_type: str):
 def _column_bounds(path: str, ice_schema: dict) -> tuple[list, list, list]:
     """(null_value_counts, lower_bounds, upper_bounds) for one parquet
     file, as Iceberg key-value record lists keyed by field id. Bounds
-    aggregate across row groups from footer statistics — no data read."""
+    aggregate across row groups from footer statistics — no data read.
+    A NaN bound is omitted: the Iceberg spec keeps NaN out of bounds."""
     import pyarrow.parquet as pq
 
-    md = pq.ParquetFile(path).metadata
-    by_name = {f["name"]: f for f in ice_schema["fields"]}
-    col_idx = {md.schema.column(j).name: j for j in range(md.num_columns)}
+    from pg_datalake_spark.tables.footer import column_bounds
+
+    found = column_bounds(pq.ParquetFile(path).metadata)
     nulls, lowers, uppers = [], [], []
-    for name, f in by_name.items():
-        j = col_idx.get(name)
-        if j is None:
+    for f in ice_schema["fields"]:
+        col, bounds = found.get(f["name"], (None, None))
+        if bounds is None:
             continue
-        nn, lo, hi = 0, None, None
-        ok = True
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(j).statistics
-            if st is None or not st.has_min_max:
-                ok = False
-                break
-            nn += st.null_count or 0
-            lo = st.min if lo is None or st.min < lo else lo
-            hi = st.max if hi is None or st.max > hi else hi
-        if not ok:
-            continue
+        lo, hi, nn = bounds
         nulls.append({"key": f["id"], "value": nn})
+        if lo is None or any(isinstance(v, float) and math.isnan(v) for v in (lo, hi)):
+            continue
+        if f["type"] == "string":
+            lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
+        elif f["type"] in ("timestamp", "timestamptz") and (
+            col.logical_type.type != "TIMESTAMP"
+            or json.loads(col.logical_type.to_json())["timeUnit"] != "microseconds"
+        ):
+            continue  # raw values are micros only for a micros column
         lob = _bound_to_bytes(lo, f["type"])
         hib = _bound_to_bytes(hi, f["type"])
         if lob is not None and hib is not None:

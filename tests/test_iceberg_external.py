@@ -1572,3 +1572,27 @@ def test_read_empty_snapshot_returns_typed_empty_scan(spark, tmp_path):
     )
     assert sorted(r.k for r in read_iceberg_table(spark, loc).collect()) \
         == [7, 8]
+
+
+def test_nan_bound_never_prunes(spark, tmp_path):
+    """A NaN bound bounds nothing (Spark orders NaN above every
+    number): the manifest writer omits it, as the Iceberg spec asks,
+    and the filter keeps a file whose stored bound is NaN."""
+    from pg_datalake_spark.tables.iceberg_external import (
+        _bound_to_bytes,
+        _column_bounds,
+        _file_may_match,
+    )
+
+    out = str(tmp_path / "nan")
+    spark.createDataFrame([(1.0,), (10.0,), (float("nan"),)], "x double").coalesce(1).write.parquet(out)
+    [path] = [os.path.join(out, n) for n in os.listdir(out) if n.endswith(".parquet")]
+    schema = {"fields": [{"id": 1, "name": "x", "type": "double"}]}
+    nulls, lowers, uppers = _column_bounds(path, schema)
+    assert nulls == [{"key": 1, "value": 0}] and lowers == [] and uppers == []
+    entry = {
+        "lower_bounds": {1: _bound_to_bytes(1.0, "double")},
+        "upper_bounds": {1: _bound_to_bytes(float("nan"), "double")},
+    }
+    assert _file_may_match(entry, 1, "double", ">", 5)
+    assert _file_may_match(entry, 1, "double", "=", 20.0)

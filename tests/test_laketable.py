@@ -124,7 +124,7 @@ def test_stats_pruning(spark, kv_table):
     # the pruner must actually skip the first batch's files
     from pg_datalake_spark.tables.format import _prunable
 
-    skipped = [f for f in snap.data_files if _prunable(f, [("key", ">=", 10_000)], [])]
+    skipped = [f for f in snap.data_files if _prunable(f, [("key", ">=", 10_000)], {})]
     assert len(skipped) >= 1
 
 
@@ -672,3 +672,317 @@ def test_equality_delete_expire_cleans_directory(spark, kv_table, tmp_path):
     assert kv_table.scan().count() == 800
     kv_table.expire_snapshots(keep_last=1)
     assert not os.path.exists(eq.path)
+
+
+# ---------------------------------------------------------------------------
+# write-time stats from the parquet footers
+# ---------------------------------------------------------------------------
+
+STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("k", T.LongType()),
+        T.StructField("i", T.IntegerType()),
+        T.StructField("b", T.BooleanType()),
+        T.StructField("d", T.DateType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("big", T.StringType()),
+        T.StructField("x", T.DoubleType()),
+        T.StructField("z", T.DoubleType()),
+        T.StructField("zp", T.DoubleType()),
+        T.StructField("n", T.DoubleType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("tn", T.TimestampNTZType()),
+        T.StructField("dec", T.DecimalType(10, 2)),
+        T.StructField("p", T.IntegerType()),
+    ]
+)
+
+
+def _stats_rows(n: int):
+    """Three partitions of ``p``; the ``p = 2`` files carry a string
+    past parquet-java's 4 KB stats limit, ``z`` mixes both zeros."""
+    import datetime as dt
+    from decimal import Decimal
+
+    nan = float("nan")
+    rows = []
+    for j in range(n):
+        rows.append(
+            (
+                j,
+                None if j % 7 == 0 else j % 11 - 5,
+                j % 3 == 0,
+                dt.date(1999, 12, 31) + dt.timedelta(days=j),
+                ["ä", "z", "é€", "abc", "Ω"][j % 5] + str(j),
+                ("x" * 5000 + str(j)) if j % 3 == 2 else f"short{j}",
+                [1.0, 10.0, nan, -2.5][j % 4],
+                [0.0, -0.0, 3.0, 1.0][j % 4],
+                [0.0, 2.0][j % 2],
+                None,
+                dt.datetime(2020, 1, 1) + dt.timedelta(seconds=j * 3601),
+                dt.datetime(1960, 5, 1) + dt.timedelta(microseconds=j * 12345),
+                Decimal(j * 37 - 500) / 100,
+                j % 3,
+            )
+        )
+    return rows
+
+
+def _entries_both_routes(t: LakeTable, out_dir: str, monkeypatch) -> tuple[list, list, set]:
+    """(footer-route entries, Spark-route entries, columns the footer
+    route handed to Spark), entries as sorted dicts."""
+    from dataclasses import asdict
+
+    meta = t._load()
+    spec = t._partition_spec(meta)
+    asked: set[str] = set()
+    real = LakeTable._spark_stats
+
+    def spy(self, root, schema, cols):
+        asked.update(cols)
+        return real(self, root, schema, cols)
+
+    monkeypatch.setattr(LakeTable, "_spark_stats", spy)
+    footer = t._collect_file_entries(out_dir, spec, meta)
+    footer_asked = set(asked)
+    monkeypatch.setattr(LakeTable, "_footer_stats", lambda *a: None)
+    spark_route = t._collect_file_entries(out_dir, spec, meta)
+    monkeypatch.undo()
+
+    def norm(entries):
+        import json
+
+        return sorted(json.dumps(asdict(e), sort_keys=True) for e in entries)
+
+    return norm(footer), norm(spark_route), footer_asked
+
+
+def test_footer_stats_match_spark_aggregation(spark, tmp_path, monkeypatch):
+    """The footer route stores byte-identical entries to the Spark
+    min/max/null aggregation, over a partitioned table, and hands
+    exactly the columns it cannot answer back to Spark: the INT96
+    timestamp, the string past the stats size limit and the double
+    whose file holds both zeros."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "st"), STATS_SCHEMA, partition_by=[PartitionField("p")]
+    )
+    df = spark.createDataFrame(_stats_rows(60), STATS_SCHEMA).repartition(2)
+    t.append(df)  # the commit serialises every stat, decimals included
+    out_dir = os.path.dirname(os.path.dirname(t.files().first().path))
+    footer, spark_route, asked = _entries_both_routes(t, out_dir, monkeypatch)
+    assert len(footer) == 6  # 3 partitions x 2 tasks
+    assert footer == spark_route
+    assert asked == {"ts", "big", "z"}
+
+
+def test_footer_stats_aggregate_row_groups(spark, tmp_path, monkeypatch):
+    """A file with several row groups: min/max/nulls aggregate over
+    them (NaN and zeros included) exactly as Spark's aggregation."""
+    sch = T.StructType([f for f in STATS_SCHEMA.fields if f.name not in ("big", "p")])
+    t = LakeTable.create(spark, str(tmp_path / "rg"), sch)
+    out_dir = str(tmp_path / "rg_files")
+    rows = [r[:5] + r[6:13] for r in _stats_rows(3000)]
+    (
+        spark.createDataFrame(rows, sch)
+        .coalesce(1)
+        .write.option("parquet.block.size", 4096)
+        .parquet(out_dir)
+    )
+    import glob
+
+    import pyarrow.parquet as pq
+
+    [path] = glob.glob(out_dir + "/*.parquet")
+    assert pq.ParquetFile(path).metadata.num_row_groups > 1
+    footer, spark_route, asked = _entries_both_routes(t, out_dir, monkeypatch)
+    assert footer == spark_route
+    assert asked == {"ts", "z"}
+
+
+def test_footer_stats_other_writer_keeps_spark_aggregation(spark, tmp_path, monkeypatch):
+    """add_files of a file another parquet writer produced: its float
+    stats may order NaN differently, so Spark aggregates it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "ext.parquet")
+    pq.write_table(pa.table({"key": [1, 2], "value": ["a", "b"], "grp": pa.array([1, 1], pa.int32())}), src)
+    t = LakeTable.create(spark, str(tmp_path / "ext"), KV_SCHEMA)
+    asked: list = []
+    real = LakeTable._spark_stats
+    monkeypatch.setattr(
+        LakeTable, "_spark_stats", lambda self, r, s, c: asked.append(c) or real(self, r, s, c)
+    )
+    assert t.add_files([src]) == 1
+    assert asked == [["key", "value", "grp"]]
+    assert t._current_snapshot(t._load()).data_files[0].stats["key"] == [1, 2, 0]
+
+
+def _jobs_in_group(spark, fn) -> int:
+    """Spark jobs ``fn`` starts, counted under a job group of its own.
+    A second group run after it is the control that every job event of
+    the first group has arrived (listener events arrive in order)."""
+    import time as _time
+    import uuid as _uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group, control = f"g-{_uuid.uuid4().hex}", f"c-{_uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, "counted")
+        fn()
+        sc.setJobGroup(control, "control")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = _time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(control):
+        assert _time.monotonic() < deadline, "control group never saw a job"
+        _time.sleep(0.1)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_write_verbs_start_only_their_own_jobs(spark, tmp_path):
+    """append runs exactly the jobs of writing its frame (no stats or
+    schema job); a MERGE over a table with position deletes needs at
+    most 9: one probe query and one write."""
+    t = LakeTable.create(spark, str(tmp_path / "jobs"), KV_SCHEMA)
+    batch = make_kv(spark, n=2000)
+    t.append(batch)
+    control = str(tmp_path / "plain")
+    write_jobs = _jobs_in_group(spark, lambda: batch.write.parquet(control))
+    assert _jobs_in_group(spark, lambda: t.append(batch.withColumn("key", F.col("key") + 2000))) == write_jobs
+    t.delete("key >= 100 AND key < 150")  # position deletes the merge must apply
+    src = spark.range(3900, 4100).coalesce(1).select(
+        F.col("id").alias("key"), F.lit("m").alias("value"), F.lit(7).alias("grp")
+    )
+    jobs = _jobs_in_group(
+        spark, lambda: t.merge(src, on="key", when_matched_update={"value": "src.value"})
+    )
+    assert jobs <= 9
+    got = t.scan()
+    assert got.count() == 4000 - 50 + 100
+    assert got.filter("value = 'm'").count() == 200
+
+
+def test_nan_bound_prunes_nothing(spark, tmp_path):
+    """Spark orders NaN above every number, so a file holding NaN has
+    max = NaN; that bound must not prune ``x > 5`` (NaN > 5 is true)."""
+    sch = T.StructType([T.StructField("k", T.LongType()), T.StructField("x", T.DoubleType())])
+    t = LakeTable.create(spark, str(tmp_path / "nan"), sch)
+    t.append(spark.createDataFrame([(1, 1.0), (2, 10.0), (3, float("nan"))], sch).coalesce(1))
+    [f] = t._current_snapshot(t._load()).data_files
+    assert f.stats["x"][0] == 1.0 and f.stats["x"][1] != f.stats["x"][1]  # max is NaN
+    assert sorted(r.k for r in t.scan(filters=[("x", ">", 5)]).collect()) == [2, 3]
+    t.delete("x > 5")
+    assert [r.k for r in t.scan().collect()] == [1]
+
+
+def test_decimal_stats_exact_and_pruning(spark, tmp_path):
+    """DECIMAL stats are stored as exact strings and prune by decimal
+    order; a float literal compares as written (0.1 is 0.10)."""
+    from decimal import Decimal
+
+    sch = T.StructType([T.StructField("k", T.LongType()), T.StructField("d", T.DecimalType(10, 2))])
+    t = LakeTable.create(spark, str(tmp_path / "dec"), sch)
+    lo = [(1, Decimal("0.10")), (2, Decimal("2.50")), (3, Decimal("-1.00"))]
+    hi = [(4, Decimal("10.10")), (5, Decimal("12.00"))]
+    t.append(spark.createDataFrame(lo, sch).coalesce(1))
+    t.append(spark.createDataFrame(hi, sch).coalesce(1))
+    stats = sorted(f.stats["d"] for f in t._current_snapshot(t._load()).data_files)
+    assert stats == [["-1.00", "2.50", 0], ["10.10", "12.00", 0]]
+    assert t.scan_stats(filters=[("d", ">", 5)])["files_skipped"] == 1
+    assert sorted(r.k for r in t.scan(filters=[("d", ">", 5)]).collect()) == [4, 5]
+    assert t.scan_stats(filters=[("d", "=", 0.1)])["files_scanned"] == 1
+    t.delete("d = 0.1")
+    assert sorted(r.k for r in t.scan().collect()) == [2, 3, 4, 5]
+    res = t.delete("d >= 10.1")  # every row of the second file matches
+    assert res["dropped"] == 1
+    assert sorted(r.k for r in t.scan().collect()) == [2, 3]
+
+
+def _ts_kv(spark, keys, tag: str):
+    """key, value, ts rows: the default INT96 timestamp column sends
+    its stats down the Spark aggregation route."""
+    import datetime as dt
+
+    sch = T.StructType(KV_SCHEMA.fields[:2] + [T.StructField("ts", T.TimestampType())])
+    rows = [(k, f"{tag}{k}", dt.datetime(2021, 1, 1) + dt.timedelta(hours=k)) for k in keys]
+    return spark.createDataFrame(rows, sch).coalesce(1)
+
+
+def test_relative_root_dml(spark, tmp_path, monkeypatch):
+    """A table opened by a relative, non-normalised root records the
+    paths Spark reports, so merge, update and both delete kinds find
+    their files (no duplicate inserts, no KeyError on the INT96
+    column's stats)."""
+    monkeypatch.chdir(tmp_path)
+    root = "./a/../rel"
+    t = LakeTable.create(spark, root, _ts_kv(spark, [], "").schema)
+    t.append(_ts_kv(spark, range(100), "v"))
+    [f] = t._current_snapshot(t._load()).data_files
+    assert f.path.startswith(str(tmp_path / "rel") + os.sep)
+    res = t.merge(_ts_kv(spark, range(95, 105), "m"), on="key", when_matched_update={"value": "src.value"})
+    assert res == {"rewritten_files": 1, "inserted_rows": 5}
+    t = LakeTable(spark, "rel")  # reopened by another spelling
+    assert t.scan().count() == 105
+    assert t.scan().filter("value LIKE 'm%'").count() == 10
+    t.update({"value": "'u'"}, "key < 10")
+    assert t.scan().filter("value = 'u'").count() == 10
+    t.delete("key = 50")  # 1 of 105 rows: a position delete
+    t.delete("key >= 60")  # most of the file: a copy-on-write rewrite
+    got = sorted(r.key for r in t.scan().collect())
+    assert got == [k for k in range(60) if k != 50]
+    # Spark resolves a relative path against the JVM's directory
+    _ts_kv(spark, range(200, 210), "e").write.parquet(str(tmp_path / "ext"))
+    assert t.add_files(["ext"]) == 1  # relative to this process's directory
+    t.delete("key = 205")
+    assert sorted(r.key for r in t.scan().filter("key >= 200").collect()) == [
+        k for k in range(200, 210) if k != 205
+    ]
+
+
+def test_escaped_partition_value_dml(spark, tmp_path):
+    """Identity partition values Spark's file URIs %-escape ('a b',
+    'c+d%e'): append records the decoded paths, and update, merge and
+    both delete kinds match them against Spark's paths."""
+    t = LakeTable.create(spark, str(tmp_path / "esc"), KV_SCHEMA, partition_by=[PartitionField("value")])
+    vals = ["a b", "c+d%e", "x"]
+    batch = spark.range(300).coalesce(1).select(
+        F.col("id").alias("key"),
+        F.element_at(F.array(*[F.lit(v) for v in vals]), (F.col("id") % 3 + 1).cast("int")).alias("value"),
+        F.lit(1).alias("grp"),
+    )
+    t.append(batch)
+    files = t._current_snapshot(t._load()).data_files
+    assert sorted(f.partition["__p_identity_value"] for f in files) == sorted(vals)
+    assert all(os.path.exists(f.path) for f in files)
+    assert t.scan(filters=[("value", "=", "a b")]).count() == 100
+    t.delete("key = 0")  # position delete in the 'a b' file
+    t.delete("key >= 200 AND value = 'c+d%e'")  # rewrites the 'c+d%e' file
+    t.delete_equality(spark.createDataFrame([(4,)], "key long"))  # in the 'c+d%e' file
+    t.update({"grp": "2"}, "key < 30")
+    res = t.merge(
+        spark.createDataFrame([(6, "a b", 9), (1000, "x", 9)], KV_SCHEMA),
+        on="key",
+        when_matched_update={"grp": "src.grp"},
+    )
+    assert res == {"rewritten_files": 1, "inserted_rows": 1}
+    got = {r.key: (r.value, r.grp) for r in t.scan().collect()}
+    gone = {0, 4} | {k for k in range(200, 300) if k % 3 == 1}
+    assert set(got) == (set(range(300)) - gone) | {1000}
+    assert got[6] == ("a b", 9) and got[9] == ("a b", 2) and got[100] == ("c+d%e", 1)
+
+
+def test_add_files_missing_column_reads_default(spark, kv_table, tmp_path):
+    """A table column an added file lacks reads as the column's
+    default, and no stats of that file prune on it."""
+    kv_table.add_column("c", "int", default=5)
+    ext = str(tmp_path / "no_c")
+    make_kv(spark, n=10).withColumn("key", F.col("key") + 5000).write.parquet(ext)
+    kv_table.add_files([ext])
+    got = kv_table.scan(filters=[("c", "=", 5), ("key", ">=", 5000)])
+    assert got.count() == 10
+    assert {r.c for r in got.collect()} == {5}
+    assert kv_table.scan(filters=[("c", "=", 5)]).count() == 1010
