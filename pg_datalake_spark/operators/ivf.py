@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pg_datalake_spark.operators.similarity import cosine, dot
+from pg_datalake_spark.session import local_frame
 
 
 def _centroid_argmin(vec_col: Column, centroids: list[list[float]]) -> Column:
@@ -175,7 +176,7 @@ def save_ivf_index(spark, centroids: list[list[float]], path: str) -> None:
     """Persist trained centroids as a tiny parquet (k rows) so repeated
     query sessions skip the k-means entirely."""
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    spark.createDataFrame(rows, "cluster int, centroid array<double>").write.mode(
+    local_frame(spark, rows, "cluster int, centroid array<double>").write.mode(
         "overwrite"
     ).parquet(path)
 

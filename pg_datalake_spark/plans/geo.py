@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pg_datalake_spark.catalog import load_tables
 from pg_datalake_spark.functions import spatial as S
 from pg_datalake_spark.plans.registry import register
+from pg_datalake_spark.session import local_frame
 
 
 def _stage_fixture(df: DataFrame) -> DataFrame:
@@ -271,7 +272,8 @@ def geo02(spark: SparkSession, sf_dir: str) -> DataFrame:
             S.st_point(F.lit(cx), F.lit(cy - r)),
         )
 
-    rings = spark.createDataFrame(
+    rings = local_frame(
+        spark,
         [(1,), (2,), (3,)], "ring_id int"
     ).withColumn(
         "ring",
@@ -602,7 +604,8 @@ def geo07(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("c_custkey") % 160).cast("double") - 80.0 + 0.25).alias("lat"),
         (((F.col("c_custkey") * 7) % 360).cast("double") - 180.0 + 0.5).alias("lon"),
     )
-    anchors = spark.createDataFrame(
+    anchors = local_frame(
+        spark,
         [("alpha", 51.5, -0.1), ("beta", 40.7, -74.0),
          ("gamma", -33.9, 151.2), ("delta", 35.7, 139.7)],
         "aname string, alat double, alon double",
@@ -1073,7 +1076,8 @@ def geo11(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("c_custkey") % 160).cast("double") - 80.0 + 0.25).alias("lat"),
         (((F.col("c_custkey") * 7) % 360).cast("double") - 180.0 + 0.5).alias("lon"),
     )
-    anchors = spark.createDataFrame(
+    anchors = local_frame(
+        spark,
         [("alpha", 51.5, -0.1), ("beta", 40.7, -74.0),
          ("gamma", -33.9, 151.2), ("delta", 35.7, 139.7)],
         "aname string, alat double, alon double",

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pg_datalake_spark.catalog import load_tables
 from pg_datalake_spark.plans import registry
 from pg_datalake_spark.plans.registry import register
+from pg_datalake_spark.session import local_frame
 from pg_datalake_spark.tables import LakeTable
 from pg_datalake_spark.tables.format import PartitionField
 
@@ -357,7 +358,7 @@ def lake08(spark: SparkSession, sf_dir: str) -> DataFrame:
         loc, doomed.select(F.col("fp").alias("file_path"), "pos")
     )
     snap3 = add_equality_deletes(
-        loc, spark.createDataFrame([("P",)], "o_orderstatus string")
+        loc, local_frame(spark, [("P",)], "o_orderstatus string")
     )
     from pg_datalake_spark.tables.iceberg_external import append_snapshot
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from pg_datalake_spark.catalog import load_tables
 from pg_datalake_spark.plans.registry import register
+from pg_datalake_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # Joins (§2.3) — inner/left equi-joins are exercised throughout tpch.py;
@@ -108,7 +109,8 @@ def j03(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j04(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["orders"])
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("low", 0.0, 20000.0), ("mid", 20000.0, 100000.0), ("high", 100000.0, 1e9)],
         "band string, lo double, hi double",
     )

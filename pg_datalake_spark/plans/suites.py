@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pg_datalake_spark.catalog import load_tables
 from pg_datalake_spark.plans.registry import ORACLES, QUERIES, register
 from pg_datalake_spark.plans.tpch import davg, dsum
+from pg_datalake_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # Window frames: ROWS + RANGE + EXCLUDE emulation (w02 + w03 + w06)
@@ -1315,7 +1316,8 @@ def j_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # j04: theta/band join against an O(1)-row broadcast dim
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("low", 0.0, 20000.0), ("mid", 20000.0, 100000.0), ("high", 100000.0, 1e9)],
         "band string, lo double, hi double",
     )

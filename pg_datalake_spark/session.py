@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -60,6 +60,35 @@ def shuffle_partitions_for(data_bytes: int, cores: int) -> int:
     counts a real cluster needs. AQE still re-coalesces at runtime."""
     by_size = max(1, data_bytes // (64 * 1024 * 1024))
     return int(min(max(by_size, max(1, cores // 4)), cores * 4))
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame of rows the driver already holds (tuples, nested
+    structs as tuples, maps as dicts, or a ``pyarrow.Table`` built
+    column-wise), typed by ``schema`` (a StructType or a DDL string).
+    The rows reach the JVM as one Arrow table: ``spark.createDataFrame``
+    of a Python list pickles them through a Python-worker RDD instead,
+    a fixed ~0.4 s per call even for ``[]`` against ~0.04 s for the
+    same rows as Arrow."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(rows, pa.Table):
+        table = rows.cast(arrow_schema)
+    else:
+        rows = list(rows)
+        table = pa.Table.from_arrays(
+            [
+                pa.array([r[i] for r in rows], type=f.type)
+                for i, f in enumerate(arrow_schema)
+            ],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(table, schema)
 
 
 def build_session(

@@ -43,6 +43,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pg_datalake_spark.session import local_frame
+
 __all__ = ["read_fgb", "write_fgb_points", "fgb_header"]
 
 _MAGIC = b"fgb\x03fgb\x01"
@@ -447,7 +449,8 @@ def read_fgb(
                     out[name] = [r[3].get(name) for r in rows]
                 yield pd.DataFrame(out)
 
-    files = spark.createDataFrame(
+    files = local_frame(
+        spark,
         [(p, s, e) for p, s, e in tasks], "path string, start long, end long"
     )
     return files.repartition(len(tasks)).mapInPandas(parse, schema)

@@ -40,6 +40,8 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pg_datalake_spark.session import local_frame
+
 _SHP_POINT = 1
 _SHP_POLYLINE = 3
 _SHP_POLYGON = 5
@@ -251,7 +253,7 @@ def read_shapefile(spark: SparkSession, path_or_glob: str) -> DataFrame:
                     out[name] = [a[i] for a in attrs]
                 yield pd.DataFrame(out)
 
-    files = spark.createDataFrame([(p,) for p in paths], "path string")
+    files = local_frame(spark, [(p,) for p in paths], "path string")
     return files.repartition(len(paths)).mapInPandas(parse, schema)
 
 
@@ -466,7 +468,7 @@ def read_kml(spark: SparkSession, path_or_glob: str) -> DataFrame:
                         out[a].append(data.get(a))
                 yield pd.DataFrame(out)
 
-    files = spark.createDataFrame([(p,) for p in paths], "path string")
+    files = local_frame(spark, [(p,) for p in paths], "path string")
     return files.repartition(len(paths)).mapInPandas(parse, schema)
 
 
@@ -554,7 +556,8 @@ def read_gpkg(
                         out[n].append(r[1 + i])
                 yield pd.DataFrame(out)
 
-    parts = spark.createDataFrame(
+    parts = local_frame(
+        spark,
         ranges, "path string, table string, geom string, rlo long, rhi long"
     )
     return parts.repartition(len(ranges)).mapInPandas(parse, schema)
@@ -870,7 +873,7 @@ def read_gml(spark: SparkSession, path_or_glob: str) -> DataFrame:
                         out[a].append(data.get(a))
                 yield pd.DataFrame(out)
 
-    files = spark.createDataFrame([(p,) for p in paths], "path string")
+    files = local_frame(spark, [(p,) for p in paths], "path string")
     return files.repartition(len(paths)).mapInPandas(parse, schema)
 
 
@@ -1076,7 +1079,7 @@ def read_mapinfo(spark: SparkSession, path_or_glob: str) -> DataFrame:
                         )
                 yield pd.DataFrame(out)
 
-    files = spark.createDataFrame([(p,) for p in paths], "path string")
+    files = local_frame(spark, [(p,) for p in paths], "path string")
     return files.repartition(len(paths)).mapInPandas(parse, schema)
 
 
@@ -1213,7 +1216,7 @@ def read_dxf(spark: SparkSession, path_or_glob: str) -> DataFrame:
                     )
                 yield pd.DataFrame(out)
 
-    files = spark.createDataFrame([(p,) for p in paths], "path string")
+    files = local_frame(spark, [(p,) for p in paths], "path string")
     return files.repartition(len(paths)).mapInPandas(parse, schema)
 
 
@@ -1316,5 +1319,5 @@ def read_xodr(spark: SparkSession, path_or_glob: str) -> DataFrame:
                     )
                 yield pd.DataFrame(out)
 
-    files = spark.createDataFrame([(p,) for p in paths], "path string")
+    files = local_frame(spark, [(p,) for p in paths], "path string")
     return files.repartition(len(paths)).mapInPandas(parse, schema)

@@ -40,6 +40,8 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pg_datalake_spark.session import local_frame
+
 # TIFF type sizes: 1 BYTE, 2 ASCII, 3 SHORT, 4 LONG, 5 RATIONAL,
 # 8 SSHORT, 9 SLONG, 11 FLOAT, 12 DOUBLE
 _TYPE_FMT = {
@@ -611,7 +613,7 @@ def read_geotiff(
         "dtype string, comp long, pred long, sx double, sy double, "
         "tpx double, tpy double, tx double, ty double"
     )
-    files = spark.createDataFrame(tasks, cols)
+    files = local_frame(spark, tasks, cols)
     out_schema = (
         "path string, band int, x long, y long, value double, "
         "geo_x double, geo_y double"

@@ -28,6 +28,8 @@ import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pg_datalake_spark.session import local_frame
+
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 
 
@@ -291,5 +293,5 @@ def read_xlsx(
                     out[n] = col
                 yield pd.DataFrame(out)
 
-    files = spark.createDataFrame([(p,) for p in paths], "path string")
+    files = local_frame(spark, [(p,) for p in paths], "path string")
     return files.repartition(len(paths)).mapInPandas(parse, schema)

@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pg_datalake_spark.session import local_frame
+
 # extension → (format, compression); mirrors the reference's table in
 # docs/file-formats-reference.md:26-36
 _EXT_FORMATS: list[tuple[str, str, str | None]] = [
@@ -175,7 +177,7 @@ def list_files(spark: SparkSession, pattern: str) -> DataFrame:
         for p in sorted(_glob.glob(pattern, recursive=True))
         if os.path.isfile(p)
     ]
-    return spark.createDataFrame(rows, "path string, size_bytes long, mtime_ms long")
+    return local_frame(spark, rows, "path string, size_bytes long, mtime_ms long")
 
 
 def file_exists(path: str) -> bool:
@@ -199,4 +201,4 @@ def preview_schema(spark: SparkSession, path: str, fmt: str | None = None) -> Da
     without creating a table."""
     df = read_files(spark, path, fmt)
     rows = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
-    return spark.createDataFrame(rows, "column_name string, column_type string")
+    return local_frame(spark, rows, "column_name string, column_type string")

@@ -51,6 +51,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pg_datalake_spark.session import local_frame
+
 _log = logging.getLogger(__name__)
 
 
@@ -265,7 +267,8 @@ class CatalogView:
             )
             for name, e in sorted(self._tables.items())
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "table_name string, format string, location string, "
             "metadata_location string, catalog_version int",
@@ -290,7 +293,7 @@ class CatalogView:
             if "snapshot-id" in entry and entry["snapshot-id"] is None:
                 # pinned while the table was still empty
                 meta = lt._load()
-                return spark.createDataFrame([], lt._schema_from(meta))
+                return local_frame(spark, [], lt._schema_from(meta))
             return lt.scan(snapshot_id=entry.get("snapshot-id"))
         raise ValueError(f"unknown table format {entry['format']!r} for {name}")
 

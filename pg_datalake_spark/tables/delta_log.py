@@ -35,10 +35,16 @@ DELETION VECTORS (r8; PROTOCOL.md "Deletion Vectors" — the default
 row-delete mechanism of modern Delta writers) are fully applied on
 read: descriptors (inline ``"i"``, UUID sidecar
 ``"u"``, absolute ``"p"``) are decoded from their Z85 / portable-
-roaring-bitmap encoding EXECUTOR-side (tables/dv_codec.py via
-``mapInPandas``) and anti-joined on ``(_metadata.file_path,
-_metadata.row_index)`` — the same merge-on-read shape as Iceberg
-position deletes. Still-unsupported reader features (column mapping,
+roaring-bitmap encoding (tables/dv_codec.py) and anti-joined on
+``(_metadata.file_path, _metadata.row_index)`` — the same
+merge-on-read shape as Iceberg position deletes. Where the decode runs
+follows the join strategy: tombstones within
+:data:`_DV_BROADCAST_ROWS` are broadcast, so the driver decodes them
+and hands Spark one Arrow table; larger (or unknown) ones are decoded
+executor-side (``mapInPandas``) and shuffled. Rows the driver holds
+(descriptor frames, checkpoint actions, empty frames) reach Spark
+through :func:`~pg_datalake_spark.session.local_frame`, never a
+Python-worker RDD. Still-unsupported reader features (column mapping,
 reader protocol > 3) fail loud rather than silently dropping or
 duplicating rows.
 
@@ -62,6 +68,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pg_datalake_spark.session import local_frame
 
 _LOG_DIR = "_delta_log"
 # Reader versions this implementation understands. 2 adds column
@@ -573,9 +581,7 @@ def _replay_checkpoint_spark(
     if tail_bytes <= _TAIL_DRIVER_BYTES:
         tail_adds, touched = _replay_tail_touched(tail_paths, state)
         if touched:
-            tdf = spark.createDataFrame(
-                [(p,) for p in sorted(touched)], "path string"
-            )
+            tdf = local_frame(spark, [(p,) for p in sorted(touched)], "path string")
             cp_df = cp_df.join(F.broadcast(tdf), "path", "left_anti")
     else:
         tail_adds, winners = _replay_tail_distributed(
@@ -918,7 +924,7 @@ def _dataframe_for_adds(
     if _cm_mode(meta) == "id":
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     if not adds:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     _abs = _make_abs(location)
     has_dv = any(a.get("deletionVector") for a in adds)
@@ -960,6 +966,14 @@ def _dataframe_for_adds(
     return out
 
 
+# Total deleted cardinality (sum of the descriptors' ``cardinality``)
+# up to which a DV read broadcasts its tombstones — ~100 MB of (path,
+# pos) pairs. A broadcast side is collected to the driver anyway, so
+# below it the bitmaps are decoded there too; tests pin it to 0 to force
+# the executor decode and the shuffle join.
+_DV_BROADCAST_ROWS = 4_000_000
+
+
 def _apply_deletion_vectors(
     spark: SparkSession, df: DataFrame, adds: list[dict], location: str, _abs
 ) -> DataFrame:
@@ -967,31 +981,70 @@ def _apply_deletion_vectors(
     descriptor into (data-file path, row position) tombstones and
     anti-join on ``(_metadata.file_path, _metadata.row_index)`` — the
     identical merge-on-read shape as Iceberg position deletes
-    (iceberg_external.py plan). Scale: descriptors are O(files) driver
-    metadata; the ROARING BITMAPS are decoded EXECUTOR-side
-    (mapInPandas over the descriptor frame, dv_codec is pure local
-    bytes), so the driver never holds a position list. Total deleted
-    cardinality is known exactly from the descriptors, so the
-    tombstone side is broadcast only when it provably fits."""
-    import pandas as pd  # noqa: F401  (executor-side decode)
+    (iceberg_external.py plan). Where the bitmaps are decoded follows
+    the join strategy. The total deleted cardinality is known exactly
+    from the descriptors: when it is within :data:`_DV_BROADCAST_ROWS`
+    the tombstones are broadcast, so the bitmaps are decoded on the
+    driver (an inline ``"i"`` DV is log bytes there already) and reach
+    Spark as one Arrow table — no Python worker starts. Past the bound,
+    or when a descriptor carries no ``cardinality``, the descriptors go
+    to the executors, which decode the bitmaps (``mapInPandas``) so the
+    driver never holds the position list, and the anti-join shuffles."""
+    descs = [
+        (_abs(a["path"]), a["deletionVector"])
+        for a in adds
+        if a.get("deletionVector")
+    ]
+    cards = [d.get("cardinality") for _, d in descs]
+    if None not in cards and sum(cards) <= _DV_BROADCAST_ROWS:
+        deletes = F.broadcast(_decoded_tombstones(spark, descs, location))
+    else:
+        deletes = _executor_tombstones(spark, descs, location)
+    return df.join(
+        deletes,
+        (F.col("__path") == F.col("__del_path"))
+        & (F.col("__pos") == F.col("__del_pos")),
+        "left_anti",
+    ).drop("__path", "__pos")
 
-    rows = []
-    total_card = 0
-    for a in adds:
-        d = a.get("deletionVector")
-        if not d:
-            continue
-        rows.append(
-            (
-                _abs(a["path"]),
-                d["storageType"],
-                d["pathOrInlineDv"],
-                d.get("offset"),
-                d["sizeInBytes"],
-            )
-        )
-        total_card += d.get("cardinality") or 0
-    desc_df = spark.createDataFrame(
+
+_TOMBSTONE_SCHEMA = "__del_path string, __del_pos long"
+
+
+def _decoded_tombstones(
+    spark: SparkSession, descs: list[tuple[str, dict]], location: str
+) -> DataFrame:
+    """The (path, position) tombstones of ``descs``, decoded here on
+    the driver: numpy positions per file, one Arrow table in all."""
+    import numpy as np
+    import pyarrow as pa
+
+    from pg_datalake_spark.tables import dv_codec
+
+    positions = [
+        dv_codec.decode_descriptor_positions(d, location) for _, d in descs
+    ]
+    owner = np.repeat(np.arange(len(descs)), [len(p) for p in positions])
+    table = pa.table(
+        {
+            "__del_path": pa.array([p for p, _ in descs]).take(owner),
+            "__del_pos": pa.array(np.concatenate(positions), pa.int64()),
+        }
+    )
+    return local_frame(spark, table, _TOMBSTONE_SCHEMA)
+
+
+def _executor_tombstones(
+    spark: SparkSession, descs: list[tuple[str, dict]], location: str
+) -> DataFrame:
+    """The (path, position) tombstones of ``descs``, decoded on the
+    executors: the driver ships only the descriptors."""
+    rows = [
+        (p, d["storageType"], d["pathOrInlineDv"], d.get("offset"), d["sizeInBytes"])
+        for p, d in descs
+    ]
+    desc_df = local_frame(
+        spark,
         rows,
         "path string, storageType string, pathOrInlineDv string, "
         "offset long, sizeInBytes long",
@@ -1019,15 +1072,7 @@ def _apply_deletion_vectors(
                     {"__del_path": [r.path] * len(pos), "__del_pos": pos}
                 )
 
-    deletes = desc_df.mapInPandas(decode, "__del_path string, __del_pos long")
-    if total_card <= 4_000_000:  # ~100 MB of (path, pos) pairs
-        deletes = F.broadcast(deletes)
-    return df.join(
-        deletes,
-        (F.col("__path") == F.col("__del_path"))
-        & (F.col("__pos") == F.col("__del_pos")),
-        "left_anti",
-    ).drop("__path", "__pos")
+    return desc_df.mapInPandas(decode, _TOMBSTONE_SCHEMA)
 
 
 def delta_table_version(location: str) -> int:
@@ -1964,7 +2009,7 @@ def _delete_where_dv(
     old_schema = (
         "__path string, o_st string, o_dv string, o_off long, o_size long"
     )
-    old_df = spark.createDataFrame(old_rows, old_schema)
+    old_df = local_frame(spark, old_rows, old_schema)
     keyed = matched.join(F.broadcast(old_df), "__path", "left")
 
     def _serialize_file_dv(key, pdf):
@@ -2271,7 +2316,7 @@ def write_delta_checkpoint(
         for i in range(n):
             chunk = rows[i::n]
             _write_single(
-                spark.createDataFrame(chunk, cp_schema),
+                local_frame(spark, chunk, cp_schema),
                 os.path.join(
                     _log_dir(location),
                     f"{version:020d}.checkpoint.{i + 1:010d}.{n:010d}.parquet",
@@ -2279,7 +2324,7 @@ def write_delta_checkpoint(
             )
     elif not v2:
         _write_single(
-            spark.createDataFrame(rows, cp_schema),
+            local_frame(spark, rows, cp_schema),
             _checkpoint_path(location, version),
         )
     else:
@@ -2307,7 +2352,7 @@ def write_delta_checkpoint(
         for chunk in chunks:
             name = f"{uuid.uuid4()}.parquet"
             dest = os.path.join(_log_dir(location), "_sidecars", name)
-            _write_single(spark.createDataFrame(chunk, cp_schema), dest)
+            _write_single(local_frame(spark, chunk, cp_schema), dest)
             sidecar_rows.append(
                 (
                     None,
@@ -2322,7 +2367,7 @@ def write_delta_checkpoint(
             (None, None, None, None, None, (version,))
         ]
         _write_single(
-            spark.createDataFrame(manifest_rows, v2_schema),
+            local_frame(spark, manifest_rows, v2_schema),
             os.path.join(
                 _log_dir(location),
                 f"{version:020d}.checkpoint.{uuid.uuid4()}.parquet",
@@ -3045,7 +3090,7 @@ def delta_changes(
             scan = _dataframe_for_adds(
                 spark, location, meta, bare, with_position=True
             )
-            pos_df = spark.createDataFrame(new_pos, "__path string, __pos long")
+            pos_df = local_frame(spark, new_pos, "__path string, __pos long")
             chunk = (
                 scan.join(F.broadcast(pos_df), ["__path", "__pos"])
                 .drop("__path", "__pos")
@@ -3084,5 +3129,5 @@ def delta_changes(
                 T.StructField("_commit_timestamp", T.LongType()),
             ]
         )
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return out

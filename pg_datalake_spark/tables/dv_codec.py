@@ -29,8 +29,9 @@ manifests:
   array / bitset / run containers).
 
 Everything is numpy-vectorized per container; no per-row Python in
-any hot path (decode is invoked executor-side from ``mapInPandas`` in
-delta_log.py, one call per DV blob).
+any hot path. Decode is one call per DV blob, made where delta_log.py
+runs the tombstone join: on the driver when the tombstones are
+broadcast, executor-side from ``mapInPandas`` when they are not.
 """
 
 from __future__ import annotations

@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pg_datalake_spark.session import local_frame
+
 COW_THRESHOLD = 0.2  # rewrite a file when >20% of its rows are deleted
 TARGET_FILE_MB = 512  # compaction target (reference: writable_table.h:28)
 
@@ -377,14 +379,24 @@ class LakeTable:
         data_files: list[DataFile],
         delete_files: list[DeleteFile],
     ) -> None:
+        """Commit a snapshot of ``data_files``. A delete entry whose
+        ``applies_to`` names no live data file is dropped: every file it
+        pointed at was rewritten (with the delete applied) or removed,
+        so every later scan would read and broadcast it for nothing.
+        Entries without ``applies_to`` (older tables) are kept."""
         cur = self._current_snapshot(meta)
+        live = {f.path for f in data_files}
         snap = Snapshot(
             snapshot_id=(cur.snapshot_id + 1) if cur else 1,
             parent_id=cur.snapshot_id if cur else None,
             timestamp_ms=int(time.time() * 1000),
             operation=operation,
             data_files=data_files,
-            delete_files=delete_files,
+            delete_files=[
+                d
+                for d in delete_files
+                if d.applies_to is None or not live.isdisjoint(d.applies_to)
+            ],
         )
         meta["snapshots"].append(_df_to_dict(snap))
         meta["current_snapshot_id"] = snap.snapshot_id
@@ -617,15 +629,15 @@ class LakeTable:
         meta = self._load()
         snap = self._resolve_snapshot(meta, snapshot_id, as_of_timestamp_ms)
         if snap is None or not snap.data_files:
-            return self.spark.createDataFrame([], self._schema_from(meta))
+            return local_frame(self.spark, [], self._schema_from(meta))
         files = snap.data_files
         if filters:
             spec = self._partition_spec(meta)
-            types = _field_types(meta)
-            files = [f for f in files if not _prunable(f, filters, types)]
+            fields = _fields_by_name(meta)
+            files = [f for f in files if not _prunable(f, filters, fields)]
             files = self._partition_prune(files, filters, spec)
         if not files:
-            return self.spark.createDataFrame([], self._schema_from(meta))
+            return local_frame(self.spark, [], self._schema_from(meta))
         df = self._apply_deletes(self._read_mapped(files, meta), snap)
         if filters:
             df = df.filter(_filters_to_column(filters))
@@ -665,7 +677,7 @@ class LakeTable:
         candidates: list[DataFile] = []
         dropped = 0
         pred_filters = _parse_simple_predicate(predicate)
-        types = _field_types(meta)
+        fields = _fields_by_name(meta)
         part_live: set[str] | None = None
         if pred_filters is not None:
             live = self._partition_prune(cur.data_files, pred_filters, spec)
@@ -674,9 +686,9 @@ class LakeTable:
             if part_live is not None and f.path not in part_live:
                 keep_files.append(f)  # partition transform proves no match
                 continue
-            if pred_filters is not None and _prunable(f, pred_filters, types):
+            if pred_filters is not None and _prunable(f, pred_filters, fields):
                 keep_files.append(f)  # no row can match → untouched
-            elif pred_filters is not None and _whole_file_match(f, pred_filters, types):
+            elif pred_filters is not None and _whole_file_match(f, pred_filters, fields):
                 dropped += 1  # every row matches → metadata-only drop
             else:
                 candidates.append(f)
@@ -730,7 +742,9 @@ class LakeTable:
                         p = os.path.join(del_dir, fn)
                         n = pq.ParquetFile(p).metadata.num_rows
                         if n:
-                            new_deletes.append(DeleteFile(path=p, rows=n))
+                            new_deletes.append(
+                                DeleteFile(path=p, rows=n, applies_to=sorted(keep_paths))
+                            )
                 new_files += mor_files
 
             if cow_files:
@@ -806,7 +820,7 @@ class LakeTable:
             return
         spec = self._partition_spec(meta)
         pred_filters = _parse_simple_predicate(predicate)
-        types = _field_types(meta)
+        fields = _fields_by_name(meta)
 
         keep: list[DataFile] = []
         candidates: list[DataFile] = []
@@ -816,7 +830,7 @@ class LakeTable:
             live = {f.path for f in cur.data_files}
         for f in cur.data_files:
             if f.path not in live or (
-                pred_filters is not None and _prunable(f, pred_filters, types)
+                pred_filters is not None and _prunable(f, pred_filters, fields)
             ):
                 keep.append(f)  # provably no matching row → untouched
             else:
@@ -849,9 +863,8 @@ class LakeTable:
                 rw_dir = os.path.join(self.root, "data", f"u-{uuid.uuid4().hex[:12]}")
                 self._write_data(rows.select(*cols), rw_dir, spec)
                 new_files += self._collect_file_entries(rw_dir, spec, meta)
-        # delete entries pointing at rewritten files are no-ops (their
-        # paths no longer appear); entries for carried-over files still
-        # apply, so the delete-file list is preserved as-is.
+        # entries for carried-over files still apply; _new_snapshot
+        # drops those that pointed only at rewritten files
         self._new_snapshot(meta, "update", new_files, cur.delete_files)
 
     def merge(
@@ -967,9 +980,9 @@ class LakeTable:
             hi = max((m for m in maxes if m is not None), default=-1)
             meta["next_row_id"] = max(meta["next_row_id"], int(hi) + 1)
         keep = [f for f in files if f.path not in hit_paths] if rewrite else files
-        # NB: MOR delete files from prior snapshots still apply to files
+        # MOR delete files from prior snapshots still apply to files
         # carried over by reference (rewritten files had them applied
-        # during the rewrite; their stale entries are no-ops).
+        # during the rewrite; _new_snapshot drops their stale entries).
         self._new_snapshot(
             meta, "merge", keep + written, cur.delete_files if cur else []
         )
@@ -1070,10 +1083,10 @@ class LakeTable:
             df.select(*[f["name"] for f in meta["fields"]]), rw_dir, spec, n_files=n_out
         )
         new_files = big + self._collect_file_entries(rw_dir, spec, meta)
-        # deletes for surviving big files must be retained; deletes that
-        # pointed only at compacted files are now dead weight but
-        # harmless (their file_paths no longer appear). Keep them iff
-        # any big file remains (conservative), else drop all.
+        # deletes for surviving big files must be retained; _new_snapshot
+        # drops those that pointed only at compacted files. An entry
+        # without applies_to is kept iff any big file remains
+        # (conservative), else dropped with the rest.
         self._new_snapshot(meta, "compact", new_files, cur.delete_files if big else [])
         return len(small)
 
@@ -1123,7 +1136,8 @@ class LakeTable:
             )
             for s in meta["snapshots"]
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "snapshot_id long, parent_id long, timestamp_ms long, operation string, "
             "n_data_files int, n_delete_files int, total_rows long",
@@ -1136,7 +1150,8 @@ class LakeTable:
             (f.path, f.rows, f.bytes, json.dumps(f.partition, default=str))
             for f in (cur.data_files if cur else [])
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows, "path string, rows long, bytes long, partition string"
         )
 
@@ -1167,8 +1182,8 @@ class LakeTable:
         files = cur.data_files
         if filters:
             spec = self._partition_spec(meta)
-            types = _field_types(meta)
-            files = [f for f in files if not _prunable(f, filters, types)]
+            fields = _fields_by_name(meta)
+            files = [f for f in files if not _prunable(f, filters, fields)]
             files = self._partition_prune(files, filters, spec)
         return {
             "files_total": total,
@@ -1421,14 +1436,19 @@ def _parse_simple_predicate(predicate: str) -> list[tuple] | None:
     return out
 
 
-def _cmp_bounds(f: DataFile, col: str, op: str, value, dtype: str | None) -> tuple[bool, bool]:
-    """(can_match, all_match) for one clause against file stats.
-    all_match is only provable when the file has no NULLs in the column
-    (a NULL row never matches any comparison predicate). ``dtype`` is
-    the column's type: decimal stats are stored as exact strings."""
-    st = f.stats.get(col)
+def _cmp_bounds(f: DataFile, fld: dict | None, op: str, value) -> tuple[bool, bool]:
+    """(can_match, all_match) for one clause on table field ``fld``
+    against file stats. all_match is only provable when the file has no
+    NULLs in the column (a NULL row never matches any comparison
+    predicate). Stats are keyed by the name the file was written with,
+    so the field is found by id through the file's colmap: after a
+    rename (and an added column taking the old name) the old name's
+    stats belong to another field. A field the colmap lacks has no
+    stats. Decimal stats are stored as exact strings."""
+    st = f.stats.get(f.colmap.get(str(fld["id"]))) if fld else None
     if st is None:
         return True, False
+    dtype = fld["type"]
     lo, hi, nulls = st
     if lo is None or hi is None:
         return True, False
@@ -1438,7 +1458,7 @@ def _cmp_bounds(f: DataFile, col: str, op: str, value, dtype: str | None) -> tup
         no_nulls = False
     else:
         no_nulls = True
-    if dtype is not None and dtype.startswith("decimal"):
+    if dtype.startswith("decimal"):
         if isinstance(value, bool) or not isinstance(value, (int, float, Decimal)):
             return True, False
         # a float literal as written (repr), not its binary expansion
@@ -1488,22 +1508,27 @@ def _field_types(meta: dict) -> dict[str, str]:
     return {f["name"]: f["type"] for f in meta["fields"]}
 
 
-def _prunable(f: DataFile, filters: list[tuple], types: dict[str, str]) -> bool:
+def _fields_by_name(meta: dict) -> dict[str, dict]:
+    return {f["name"]: f for f in meta["fields"]}
+
+
+def _prunable(f: DataFile, filters: list[tuple], fields: dict[str, dict]) -> bool:
     """True if NO row of the file can match all clauses (skip the file).
     Mirrors the reference's bound-constraint evaluation
-    (data_file_pruning.c:111-165)."""
+    (data_file_pruning.c:111-165). ``fields`` maps the table's column
+    names to their fields (:func:`_fields_by_name`)."""
     for col, op, value in filters:
-        can_match, _ = _cmp_bounds(f, col, op, value, types.get(col))
+        can_match, _ = _cmp_bounds(f, fields.get(col), op, value)
         if not can_match:
             return True
     return False
 
 
-def _whole_file_match(f: DataFile, filters: list[tuple], types: dict[str, str]) -> bool:
+def _whole_file_match(f: DataFile, filters: list[tuple], fields: dict[str, dict]) -> bool:
     """True if EVERY row of the file provably matches all clauses —
     enables the metadata-only delete fast path."""
     for col, op, value in filters:
-        _, all_match = _cmp_bounds(f, col, op, value, types.get(col))
+        _, all_match = _cmp_bounds(f, fields.get(col), op, value)
         if not all_match:
             return False
     return True

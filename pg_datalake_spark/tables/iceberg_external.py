@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pg_datalake_spark.session import local_frame
 from pg_datalake_spark.tables.avro_codec import read_avro, write_avro
 
 
@@ -594,7 +595,7 @@ def read_iceberg_table(
                     )
                 ]
         if not data:
-            return spark.createDataFrame([], _spark_ddl(ice_schema))
+            return local_frame(spark, [], _spark_ddl(ice_schema))
     pos_del = [e for e in entries if e["content"] == 1]
     eq_del = [e for e in entries if e["content"] == 2]
     if not data:
@@ -602,7 +603,7 @@ def read_iceberg_table(
         # delete/overwrite that removed every row) — an empty typed
         # scan, not an error (r15 concurrent-fuzzer find: a truncate
         # racing other writers left readers crashing on the winner)
-        return spark.createDataFrame([], _spark_ddl(ice_schema))
+        return local_frame(spark, [], _spark_ddl(ice_schema))
     # mergeSchema: files written before a schema evolution lack the
     # added columns — the merged scan surfaces them as nulls (footer
     # reads only, distributed)
@@ -2168,7 +2169,8 @@ def iceberg_metadata(spark: SparkSession, location: str) -> DataFrame:
     """One-row summary of the table's current metadata."""
     meta = load_table_metadata(location)
     schema = current_schema(meta)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 meta["table-uuid"],
@@ -2199,7 +2201,8 @@ def iceberg_snapshots(spark: SparkSession, location: str) -> DataFrame:
         )
         for s in meta.get("snapshots", [])
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "snapshot_id long, sequence_number long, timestamp_ms long, "
         "operation string, is_current boolean",
@@ -2221,7 +2224,8 @@ def iceberg_files(
         )
         for d in _live_entries(location, snapshot_id)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "file_path string, content int, file_format string, "
         "record_count long, file_size_in_bytes long",
@@ -2254,7 +2258,8 @@ def iceberg_data_file_stats(
         rows.append(
             (d["file_path"], md.num_rows, os.path.getsize(p), md.num_row_groups, comp)
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "file_path string, num_rows long, file_size_bytes long, "
         "num_row_groups int, total_uncompressed_bytes long",
@@ -2281,7 +2286,8 @@ def iceberg_partitions(
         slot[1] += d.get("record_count") or 0
         slot[2] += d.get("file_size_in_bytes") or 0
     rows = [(k, v[0], v[1], v[2]) for k, v in sorted(agg.items())]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "partition string, file_count long, record_count long, total_bytes long"
     )
 

@@ -2241,3 +2241,133 @@ def test_id_mode_writer_verbs_stamp_field_ids(spark, tmp_path):
     dl.optimize_delta(spark, loc)
     got = {r.id: r.v for r in dl.read_delta_table(spark, loc).collect()}
     assert got == {1: 11, 2: 21, 4: 400, 5: 500}
+
+
+def _cp_files(loc: str, version: int) -> list[tuple]:
+    """The checkpoint files of ``version`` in read order, each as
+    (parquet schema, Arrow schema, rows): classic and multipart parts
+    by name; a V2 manifest followed by its sidecars in manifest order,
+    with the sidecar references (a fresh UUID name and write time per
+    write) blanked."""
+    import pyarrow.parquet as pq
+
+    log = os.path.join(loc, "_delta_log")
+    names = sorted(
+        n for n in os.listdir(log)
+        if n.startswith(f"{version:020d}.checkpoint.") and n.endswith(".parquet")
+    )
+    out = []
+    for n in names:
+        p = os.path.join(log, n)
+        rows = pq.read_table(p).to_pylist()
+        sidecars = [r["sidecar"]["path"] for r in rows if r.get("sidecar")]
+        for r in rows:
+            if r.get("sidecar"):
+                r["sidecar"] = None
+        out.append((_parquet_schema(p), pq.read_schema(p), rows))
+        for s in sidecars:
+            sp = os.path.join(log, "_sidecars", s)
+            out.append((_parquet_schema(sp), pq.read_schema(sp), pq.read_table(sp).to_pylist()))
+    return out
+
+
+def _parquet_schema(path: str) -> str:
+    """The file's parquet schema as text (its first line names the
+    Python object, not the schema)."""
+    import pyarrow.parquet as pq
+
+    return str(pq.ParquetFile(path).schema).split("\n", 1)[1]
+
+
+@pytest.mark.parametrize("cp_kind", ["classic", "multipart", "v2_sidecars"])
+def test_checkpoint_files_match_python_list_route(
+    spark, tmp_path, monkeypatch, cp_kind
+):
+    """The checkpoint writer's rows reach Spark through ``local_frame``;
+    each layout's files hold the same parquet schema and rows as when
+    they went through ``spark.createDataFrame`` of the Python rows."""
+    import shutil
+
+    loc = str(tmp_path / "cp_arrow")
+    _checkpointed_log(spark, loc, cp_kind)
+    ref = str(tmp_path / "cp_list")
+    shutil.copytree(loc, ref)
+    kw = {
+        "v2": cp_kind == "v2_sidecars",
+        "multipart": 3 if cp_kind == "multipart" else None,
+    }
+    v = dl.write_delta_checkpoint(spark, loc, **kw)
+    monkeypatch.setattr(
+        dl, "local_frame", lambda s, rows, schema: s.createDataFrame(rows, schema)
+    )
+    assert dl.write_delta_checkpoint(spark, ref, **kw) == v
+    got, want = _cp_files(loc, v), _cp_files(ref, v)
+    assert len(got) == len(want) == {"classic": 1, "multipart": 3, "v2_sidecars": 3}[cp_kind]
+    assert got == want
+
+
+def _dv_table(spark, loc: str) -> None:
+    """A two-file table with an inline DV, a sidecar DV and a second
+    delete stacked on both."""
+    dl.write_delta_table(
+        spark.range(200).selectExpr("id", "id % 2 AS part").repartition(2),
+        loc,
+        partition_by=["part"],
+    )
+    dl.delete_where_delta(spark, loc, "id % 10 = 0", mode="dv", inline_threshold=1 << 20)
+    dl.delete_where_delta(spark, loc, "id % 7 = 1", mode="dv", inline_threshold=0)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_dv_read_decodes_on_the_driver_within_broadcast_bound(
+    spark, tmp_path, monkeypatch
+):
+    """Within ``_DV_BROADCAST_ROWS`` the tombstones are decoded on the
+    driver: the plan has no Python node, and the rows equal those read
+    with the bound pinned to 0 (executor decode, shuffle join)."""
+    loc = str(tmp_path / "dv_route")
+    exp = sorted(i for i in range(200) if i % 10 and i % 7 != 1)
+    _dv_table(spark, loc)
+    kinds = {
+        a["deletionVector"]["storageType"]
+        for a in dl._snapshot_state(spark, loc, None)["adds"].values()
+        if a.get("deletionVector")
+    }
+    assert kinds == {"u"}
+    dl.delete_where_delta(spark, loc, "id = 3", mode="dv", inline_threshold=1 << 20)
+    exp.remove(3)
+    state = dl._snapshot_state(spark, loc, None)
+    kinds = [a["deletionVector"]["storageType"] for a in state["adds"].values()]
+    assert "i" in kinds
+    driver = dl.read_delta_table(spark, loc)
+    assert sorted(r.id for r in driver.collect()) == exp
+    plan = _plan(driver)
+    assert "MapInPandas" not in plan and "PythonMapInArrow" not in plan
+    monkeypatch.setattr(dl, "_DV_BROADCAST_ROWS", 0)
+    executor = dl.read_delta_table(spark, loc)
+    assert sorted(r.id for r in executor.collect()) == exp
+    assert "MapInPandas" in _plan(executor)
+
+
+def test_dv_without_cardinality_decodes_on_executors(spark, tmp_path):
+    """A descriptor without ``cardinality`` has an unknown size: it
+    takes the executor decode, never the driver one."""
+    loc = str(tmp_path / "dv_nocard")
+    _dv_table(spark, loc)
+    state = dl._snapshot_state(spark, loc, None)
+    adds = [
+        {
+            **a,
+            "deletionVector": {
+                k: v for k, v in a["deletionVector"].items() if k != "cardinality"
+            },
+        }
+        for a in state["adds"].values()
+    ]
+    df = dl._dataframe_for_adds(spark, loc, state["metaData"], adds)
+    assert "MapInPandas" in _plan(df)
+    exp = sorted(i for i in range(200) if i % 10 and i % 7 != 1)
+    assert sorted(r.id for r in df.collect()) == exp

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pg_datalake_spark.tables import LakeTable
-from pg_datalake_spark.tables.format import PartitionField
+from pg_datalake_spark.tables.format import DeleteFile, PartitionField
 from tests.conftest import SF_DIR
 
 KV_SCHEMA = T.StructType(
@@ -122,9 +122,13 @@ def test_stats_pruning(spark, kv_table):
     pruned = kv_table.scan(filters=[("key", ">=", 10_000)])
     assert pruned.count() == 1000
     # the pruner must actually skip the first batch's files
-    from pg_datalake_spark.tables.format import _prunable
+    from pg_datalake_spark.tables.format import _fields_by_name, _prunable
 
-    skipped = [f for f in snap.data_files if _prunable(f, [("key", ">=", 10_000)], {})]
+    skipped = [
+        f
+        for f in snap.data_files
+        if _prunable(f, [("key", ">=", 10_000)], _fields_by_name(meta))
+    ]
     assert len(skipped) >= 1
 
 
@@ -986,3 +990,61 @@ def test_add_files_missing_column_reads_default(spark, kv_table, tmp_path):
     assert got.count() == 10
     assert {r.c for r in got.collect()} == {5}
     assert kv_table.scan(filters=[("c", "=", 5)]).count() == 1010
+
+
+def test_stats_follow_field_id_after_rename(spark, tmp_path):
+    """Stats are keyed by the name a file was written with. After
+    ``a`` is renamed to ``b`` and a new ``a`` is added, a predicate on
+    the new ``a`` must not read the old file's ``a`` stats: that
+    dropped the whole file by metadata and deleted rows whose new ``a``
+    is NULL."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "ren"), T.StructType([T.StructField("a", T.LongType())])
+    )
+    t.append(spark.createDataFrame([(10,), (20,)], "a long"))
+    t.rename_column("a", "b")
+    t.add_column("a", "bigint")
+    res = t.delete("a > 5")
+    assert res["dropped"] == 0
+    assert sorted((r.b, r.a) for r in t.scan().collect()) == [(10, None), (20, None)]
+    assert t.scan(filters=[("b", ">", 15)]).count() == 1
+    assert t.scan_stats(filters=[("a", ">", 5)])["files_skipped"] == 0
+
+
+def test_stale_delete_entries_dropped_on_rewrite(spark, kv_table):
+    """A position-delete entry records the data files it applies to;
+    once an UPDATE rewrites every one of them (applying the delete),
+    the next snapshot no longer carries it. Earlier snapshots keep it,
+    so time travel still applies the delete."""
+    res = kv_table.delete("key < 100")
+    assert res["mor"] == 1 and res["cow"] == 0
+    meta = kv_table._load()
+    deleted_snap = kv_table._current_snapshot(meta)
+    [entry] = deleted_snap.delete_files
+    assert entry.applies_to == [f.path for f in deleted_snap.data_files]
+    kv_table.update({"value": "concat(value, '!')"}, "key >= 500")
+    cur = kv_table._current_snapshot(kv_table._load())
+    assert cur.delete_files == []
+    got = kv_table.scan()
+    assert got.count() == 900
+    assert got.agg(F.min("key")).first()[0] == 100
+    assert got.filter("value LIKE '%!'").count() == 500
+    assert kv_table.scan(snapshot_id=deleted_snap.snapshot_id).count() == 900
+
+
+def test_delete_entry_kept_while_a_target_file_lives(spark, kv_table):
+    """An entry stays while any file it applies to is live: a merge
+    that rewrites another file leaves it, and entries written before
+    ``applies_to`` existed are always kept."""
+    kv_table.append(make_kv(spark).withColumn("key", F.col("key") + 1000))
+    kv_table.delete("key < 100")
+    meta = kv_table._load()
+    cur = kv_table._current_snapshot(meta)
+    # an entry as older tables recorded it: no applies_to
+    legacy = DeleteFile(path=cur.delete_files[0].path, rows=0)
+    kv_table._new_snapshot(meta, "delete", cur.data_files, cur.delete_files + [legacy])
+    src = spark.createDataFrame([(1500, "m", 0)], "key long, value string, grp int")
+    kv_table.merge(src, "key", when_matched_update={"value": "src.value"})
+    cur = kv_table._current_snapshot(kv_table._load())
+    assert len(cur.delete_files) == 2
+    assert kv_table.scan().count() == 1900
