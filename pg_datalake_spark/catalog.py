@@ -6,17 +6,22 @@ temp view over ``spark.read.parquet`` so both the DataFrame API and
 ``spark.sql`` see the same relations, and Catalyst pushes filters and
 projections into the parquet scan.
 
-r16: ``load_tables`` is on the hot path of every timed query (each
+``load_tables`` is on the hot path of every timed query (each
 registered query calls it), so everything driver-side it does is
 memoized per session and keyed on the file's identity
 ``(path, mtime_ns, size)``:
 
-- the inferred parquet schema (footer read ~0.1 s -> ~0 after first),
 - the constructed DataFrame (plan object, immutable — reusing it skips
   the relation build, the events-ts cast and the floor decision,
   ~25 ms/table of py4j chatter),
 - the temp-view registration (skipped when the view already points at
   the same DataFrame).
+
+A single-file table seen for the first time gets its schema from its
+parquet footer, read on the driver by Spark's own schema converter
+(``_footer_reader``), and is read with that schema: ``spark.read.parquet``
+would run a schema-inference job per table. A first ``load_tables``
+of the ten tables therefore starts no Spark job.
 
 Only METADATA and plan objects are memoized — never data or results;
 an identical plan is what every call produced before, so cache lookups
@@ -27,6 +32,7 @@ silently misreading (r15 ADVICE item 1).
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,31 +82,37 @@ def _path_sig(path: str) -> tuple[int, int, int]:
     return st.st_size, 1, st.st_mtime_ns
 
 
-# Per-process parquet-schema memo: schema inference (footer read +
-# relation build) costs ~0.1 s of driver time per spark.read.parquet
-# call, paid again for every table of every timed query; supplying the
-# schema explicitly cuts that to ~25 ms with an identical analyzed plan
-# (cache lookups still match — verified). Metadata only, never data.
-_SCHEMA_MEMO: dict[tuple, T.StructType] = {}
+def _footer_reader(spark: SparkSession):
+    """``schema_of(path)``: the schema Spark's inference gives a
+    single-file table, read from its parquet footer on the driver — no
+    Spark job, where ``spark.read.parquet`` runs one schema-inference
+    job per table. Spark's own converter applies the session's parquet
+    settings (``nanosAsLong``, INT96, binary-as-string, timestamp_ntz),
+    so build the reader after ``load_tables`` has set its conf. Returns
+    None, to leave the table to Spark, for a directory (its file
+    listing and schema choice stay Spark's) and where the footer cannot
+    be read or converted (Spark then raises as it would have)."""
+    from py4j.protocol import Py4JJavaError
 
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    converter = pq.ParquetToSparkSchemaConverter(state.conf())
 
-def _read_table(
-    spark: SparkSession, path: str, sig: tuple[int, int, int] | None
-) -> DataFrame:
-    key = (path, sig)
-    sch = _SCHEMA_MEMO.get(key) if sig is not None else None
-    if sch is None:
-        df = spark.read.parquet(path)
-        if sig is not None:
-            _SCHEMA_MEMO[key] = df.schema
-        return df
-    return spark.read.schema(sch).parquet(path)
+    def schema_of(path: str) -> T.StructType | None:
+        if os.path.isdir(path):
+            return None
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        try:
+            meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf, hpath)
+            footer = jvm.org.apache.parquet.hadoop.Footer(hpath, meta)
+            schema = pq.ParquetFileFormat.readSchemaFromFooter(footer, converter)
+        except Py4JJavaError:
+            return None
+        return T.StructType.fromJson(json.loads(schema.json()))
 
-
-def _scan_layout(path: str) -> tuple[int, int]:
-    """(total_bytes, n_files) of a parquet file or directory of files."""
-    total, n, _mt = _path_sig(path)
-    return total, n
+    return schema_of
 
 
 def _max_partition_bytes(spark: SparkSession) -> int:
@@ -123,7 +135,11 @@ def _spread_partitions(
     returns the round-robin partition count to spread to, or 0 for "no
     exchange". Spread only when the file layout cannot produce at
     least defaultParallelism scan tasks AND the table is big enough to
-    benefit; at real scale (many files / row groups) this is always 0."""
+    benefit; at real scale (many files / row groups) this is always 0.
+    The driver testdata is one single-row-group file per table, so
+    without the spread every scan, and every stage fed by it, is one
+    task wide; Catalyst still pushes filters and column pruning below
+    the Repartition into the parquet scan."""
     if total_bytes < _PAR_FLOOR_MIN_BYTES:
         return 0
     if par is None:
@@ -134,32 +150,21 @@ def _spread_partitions(
     return par
 
 
-def _with_scan_parallelism(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    """Scale-adaptive scan-parallelism floor (optimization guide §2.5:
-    "one huge unsplittable file ... repartition immediately after the
-    read"). The driver testdata ships ONE single-row-group parquet file
-    per table, so every scan — and any cache built from it — is a
-    single task no matter how many cores the session has; every
-    downstream map stage then runs 1-wide. When the file layout cannot
-    produce at least defaultParallelism scan tasks (few files, bytes
-    below maxPartitionBytes·cores) the rows are spread round-robin
-    once, restoring full-width map stages; at real scale (many files /
-    row groups) the condition is false and NO exchange is added.
-    Catalyst still pushes filters and column pruning below the
-    Repartition into the parquet scan (verified in plans/r15)."""
+def _sig_or_none(path: str) -> tuple[int, int, int] | None:
+    """``_path_sig``, or None for a missing table."""
     try:
-        total_bytes, n_files = _scan_layout(path)
+        return _path_sig(path)
     except OSError:
-        return df
-    n = _spread_partitions(spark, total_bytes, n_files)
-    return df.repartition(n) if n else df
+        return None
 
 
 def _session_state(spark: SparkSession) -> dict:
     """Per-SparkSession memo bag, stored on the (Python) session object
     so it dies with the session. Holds the conf-init flag, the derived
     AQE advisory currently applied, the DataFrame memo and the
-    registered-view map."""
+    registered-view map. ``reads``, while a memoized query plan is
+    being built (``registry._memoized``), maps each table path
+    ``load_tables`` resolves to its ``_path_sig``."""
     st = getattr(spark, "_pg_datalake_state", None)
     if st is None:
         st = {
@@ -168,6 +173,7 @@ def _session_state(spark: SparkSession) -> dict:
             "par": None,
             "dfs": {},
             "views": {},
+            "reads": None,
         }
         spark._pg_datalake_state = st
     return st
@@ -251,12 +257,12 @@ def load_tables(
     if st["par"] is None:
         st["par"] = spark.sparkContext.defaultParallelism
     out: dict[str, DataFrame] = {}
+    schema_of = None  # built on the first table not memoized
     for name in names if names is not None else TABLE_NAMES:
         path = table_path(sf_dir, name)
-        try:
-            sig = _path_sig(path)
-        except OSError:
-            sig = None
+        sig = _sig_or_none(path)
+        if st["reads"] is not None:
+            st["reads"][path] = sig
         if spread and sig is not None:
             n_spread = _spread_partitions(spark, sig[0], sig[1], st["par"])
         else:
@@ -264,7 +270,11 @@ def load_tables(
         key = (path, sig, n_spread)
         df = st["dfs"].get(key)
         if df is None:
-            df = _read_table(spark, path, sig)
+            schema_of = schema_of or _footer_reader(spark)
+            schema = schema_of(path)
+            # the reader makes every field nullable, as inference does
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            df = reader.parquet(path)
             if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
                 # TIMESTAMP(NANOS) read as long nanos → timestamp_ntz (µs)
                 # floor division in exact integer arithmetic: `div`

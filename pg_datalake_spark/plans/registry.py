@@ -73,13 +73,13 @@ ORDER_SENSITIVE = {
 # registered query fn is a pure plan builder for these modules — no
 # writes, no tempdirs, no streaming state — so the DataFrame it
 # returns for a given (session, sf_dir) is the same immutable plan
-# every time, and rebuilding it only re-pays the py4j expression
-# chatter (~0.1-0.65 s per query). Modules whose fns have
-# construction-time side effects (fixture writes, DML, streaming
-# checkpoints: delta_q, lakeops, sources_*, streaming_*) and the
-# merged suites that may invoke them are NOT memoized. Only plan
-# objects are memoized — never query results; execution recomputes
-# from the parquet inputs every time.
+# every time the table files it reads are unchanged, and rebuilding it
+# only re-pays the py4j expression chatter (~0.1-0.65 s per query).
+# Modules whose fns have construction-time side effects (fixture
+# writes, DML, streaming checkpoints: delta_q, lakeops, sources_*,
+# streaming_*) and the merged suites that may invoke them are NOT
+# memoized. Only plan objects are memoized — never query results;
+# execution recomputes from the parquet inputs every time.
 _PURE_PLAN_MODULES = {
     "clickbench",
     "funcs_coverage",
@@ -105,16 +105,29 @@ def _memoized(name: str, fn: QueryFn) -> QueryFn:
         # callers) that toggle it get a freshly-planned variant
         key = (name, sf_dir, catalog._PAR_FLOOR_MIN_BYTES)
         memo = st.setdefault("qplans", {})
+        # the tables an enclosing memoized build reads, if any
+        outer = st["reads"]
         hit = memo.get(key)
-        if hit is not None:
-            df, advisory_key = hit
+        # a plan is reused only over the table files it was built on: a
+        # rewritten table replaces the entry with a fresh plan
+        if hit is not None and all(catalog._sig_or_none(p) == s for p, s in hit[0].items()):
+            reads, df, advisory_key = hit
+            if outer is not None:
+                outer.update(reads)
             # a memo hit skips load_tables, which is what pins the
             # AQE advisory this plan was built under — re-pin it so
             # execution behaves identically to a fresh construction
             catalog.reapply_advisory(spark, advisory_key)
             return df
-        df = fn(spark, sf_dir)
-        memo[key] = (df, st.get("advisory_key"))
+        # load_tables records here each table it resolves for the plan
+        st["reads"] = reads = {}
+        try:
+            df = fn(spark, sf_dir)
+        finally:
+            st["reads"] = outer
+        if outer is not None:
+            outer.update(reads)
+        memo[key] = (reads, df, st.get("advisory_key"))
         return df
 
     return wrapper

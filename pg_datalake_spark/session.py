@@ -95,7 +95,6 @@ def build_session(
     app_name: str = "pg_datalake_spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
-    advisory_partition_bytes: int | None = None,
 ) -> SparkSession:
     """Create (or fetch) the tuned SparkSession."""
     n = cpus or cpu_count()
@@ -103,10 +102,7 @@ def build_session(
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            str(advisory_partition_bytes or 64 * 1024 * 1024),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(64 * 1024 * 1024))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -142,7 +142,9 @@ def test_order_sensitive_opt_outs_pinned(spark):
     # r15 ADVICE item 2: the raw-double opt-out list is centralized in
     # registry.ORDER_SENSITIVE; each member must actually skip the scan
     # floor (spread=False) and keep a Repartition-free native plan.
-    import inspect
+    import ast
+
+    from source_ast import calls, function_def
 
     from pg_datalake_spark import plans
     from pg_datalake_spark.plans.registry import ORDER_SENSITIVE, QUERIES
@@ -151,8 +153,62 @@ def test_order_sensitive_opt_outs_pinned(spark):
     assert ORDER_SENSITIVE <= set(QUERIES)
     for name in sorted(ORDER_SENSITIVE):
         fn = QUERIES[name]
-        src = inspect.getsource(getattr(fn, "__wrapped__", fn))
-        assert "spread=False" in src, name
+        node = function_def(getattr(fn, "__wrapped__", fn))
+        assert any(
+            k.arg == "spread" and isinstance(k.value, ast.Constant) and k.value.value is False
+            for c in calls(node, "load_tables")
+            for k in c.keywords
+        ), name
         df = fn(spark, SF_DIR)
         logical = df._jdf.queryExecution().logical().toString()
         assert "Repartition" not in logical, name
+
+
+def test_plan_memo_keys_on_file_identity(spark, tmp_path):
+    # a memoized query plan is reused only over the table files it was
+    # built on: after `orders` is rewritten with other rows (same
+    # schema) the query returns the new rows, not the stale plan's
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pg_datalake_spark.plans.registry import _memoized
+
+    sf = str(tmp_path)
+    p = cat.table_path(sf, "orders")
+
+    def write(keys):
+        pq.write_table(pa.table({"o_orderkey": pa.array(keys, pa.int64())}), p)
+
+    q = _memoized(
+        "orders_keys",
+        lambda s, d: cat.load_tables(s, d, ["orders"])["orders"].select("o_orderkey"),
+    )
+    write(range(10))
+    first = q(spark, sf)
+    assert sorted(r[0] for r in first.collect()) == list(range(10))
+    assert q(spark, sf) is first  # unchanged files: a memo hit
+    mtime = os.stat(p).st_mtime_ns
+    write(range(100, 120))
+    os.utime(p, ns=(mtime + 10**9, mtime + 10**9))
+    second = q(spark, sf)
+    assert second is not first
+    assert sorted(r[0] for r in second.collect()) == list(range(100, 120))
+    # a table the query does not read is not checked: writing it keeps
+    # the plan
+    lineitem = pa.table({"l_orderkey": pa.array([1], pa.int64())})
+    pq.write_table(lineitem, cat.table_path(sf, "lineitem"))
+    assert q(spark, sf) is second
+    [(reads, _df, _adv)] = [
+        v for k, v in cat._session_state(spark)["qplans"].items() if k[0] == "orders_keys"
+    ]
+    assert list(reads) == [p]
+    # a memoized query built on another (x11 on d05) reads its tables,
+    # also when the inner plan comes from the memo
+    outer = _memoized("orders_keys_outer", lambda s, d: q(s, d).filter("o_orderkey % 2 = 0"))
+    third = outer(spark, sf)
+    assert outer(spark, sf) is third
+    write(range(200, 210))
+    os.utime(p, ns=(mtime + 2 * 10**9, mtime + 2 * 10**9))
+    fourth = outer(spark, sf)
+    assert fourth is not third
+    assert sorted(r[0] for r in fourth.collect()) == list(range(200, 210, 2))

@@ -448,12 +448,14 @@ def test_dv_delete_source_has_no_row_collect():
     """Guard the r9 scale property in code: the DV delete writer never
     materializes row positions on the driver — its single collect is
     the O(touched-files) descriptor list out of applyInPandas."""
-    import inspect
+    from source_ast import calls, function_def, mentions, method_calls
 
-    src = inspect.getsource(dl._delete_where_dv)
-    assert src.count(".collect()") == 1 and "applyInPandas" in src
-    assert "toPandas" not in src
-    assert 'select("__path", "__pos").collect' not in src
+    node = function_def(dl._delete_where_dv)
+    collects = method_calls(node, "collect")
+    assert len(collects) == 1 and calls(node, "applyInPandas")
+    assert not mentions(node, "toPandas")
+    # the one collect is not of the row-position projection
+    assert not method_calls(collects[0].func.value, "select", "__path", "__pos")
 
 
 def test_read_files_dispatch_uses_log_reader_offline(spark, delta_orders):

@@ -1057,13 +1057,14 @@ def test_position_deletes_df_distributed_path(spark):
 def test_position_deletes_source_has_no_row_collect():
     """Guard the scale property in code: the DataFrame delete path and
     its commit helper never materialize delete rows on the driver."""
-    import inspect
+    from source_ast import function_def, mentions, method_calls
 
     from pg_datalake_spark.tables import iceberg_external as ie
 
     for fn in (ie.add_position_deletes_df, ie._commit_delete_files):
-        src = inspect.getsource(fn)
-        assert ".collect()" not in src and "toPandas" not in src, fn.__name__
+        node = function_def(fn)
+        assert not method_calls(node, "collect"), fn.__name__
+        assert not mentions(node, "toPandas"), fn.__name__
 
 
 # -- hidden transform partitions (round 5) ------------------------------

@@ -68,14 +68,13 @@ def test_mor_tombstone_write_is_distributed(spark, kv_table):
     same distribution as the external add_position_deletes_df) — never
     a coalesce(1) single-task funnel. Registered DeleteFile row counts
     must match the parquet footers exactly."""
-    import inspect
-
     import pyarrow.parquet as pq
+    from source_ast import function_def, method_calls
 
-    src = inspect.getsource(LakeTable.delete)
-    assert "coalesce(1)" not in src
-    assert 'repartition("file_path")' in src
-    assert 'sortWithinPartitions("file_path", "pos")' in src
+    node = function_def(LakeTable.delete)
+    assert not method_calls(node, "coalesce", 1)
+    assert method_calls(node, "repartition", "file_path")
+    assert method_calls(node, "sortWithinPartitions", "file_path", "pos")
 
     res = kv_table.delete("key % 11 = 0 AND key < 100")  # sparse → MOR
     assert res["mor"] >= 1 and res["cow"] == 0

@@ -999,13 +999,13 @@ def test_lsh_hot_bucket_cap_bounds_pairs_and_keeps_links(spark):
 def test_lsh_candidate_source_has_no_collect_set():
     """The hot-bucket fix is structural: bucket membership must never be
     collected into a single array row."""
-    import inspect
+    from source_ast import function_def, mentions
 
     from pg_datalake_spark.operators import dedup
 
-    src = inspect.getsource(dedup.lsh_candidate_pairs)
-    assert "collect_set" not in src
-    assert "collect_list" not in src
+    node = function_def(dedup.lsh_candidate_pairs)
+    assert not mentions(node, "collect_set")
+    assert not mentions(node, "collect_list")
 
 
 def test_jaccard_verify_broadcast_is_conditional(spark):

@@ -1,5 +1,6 @@
 """r15 optimization: the scan-parallelism floor and the conditional
-operator spread (catalog._with_scan_parallelism / dedup._spread).
+operator spread (the spread decision inside catalog.load_tables /
+dedup._spread).
 
 The driver testdata is one single-row-group parquet file per table, so
 without the floor every scan — and every cache built from one — is a
@@ -22,35 +23,39 @@ from pg_datalake_spark.operators.dedup import _spread
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def _bare_scan(df) -> bool:
+    """The frame is the parquet relation itself: nothing, no exchange
+    in particular, was put on top of the read."""
+    analyzed = df._jdf.queryExecution().analyzed()
+    return analyzed.getClass().getSimpleName() == "LogicalRelation"
+
+
 def test_floor_spreads_single_file_table(spark, tmp_path):
     # one file, well over the size floor, far fewer estimated tasks
     # than cores -> round-robin spread to defaultParallelism
-    p = str(tmp_path / "one.parquet")
+    sf = str(tmp_path)
+    p = cat.table_path(sf, "lineitem")
     spark.range(0, 200_000).withColumn("pad", F.lit("x" * 64)).coalesce(1).write.parquet(p)
-    df = spark.read.parquet(p)
-    assert df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
-    out = cat._with_scan_parallelism(spark, df, p)
+    assert spark.read.parquet(p).rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    out = cat.load_tables(spark, sf, ["lineitem"])["lineitem"]
     assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
 def test_floor_leaves_tiny_tables_alone(spark):
-    p = cat.table_path(SF_DIR, "nation")
-    df = spark.read.parquet(p)
-    out = cat._with_scan_parallelism(spark, df, p)
-    assert out is df
+    assert _bare_scan(cat.load_tables(spark, SF_DIR, ["nation"])["nation"])
 
 
 def test_floor_leaves_many_file_layouts_alone(spark, tmp_path):
     # a directory whose file count already meets the parallelism -> no
     # exchange added (the 100 TB shape)
     par = spark.sparkContext.defaultParallelism
-    p = str(tmp_path / "many")
+    sf = str(tmp_path)
+    p = cat.table_path(sf, "lineitem")
     spark.range(0, 100_000).withColumn("pad", F.lit("y" * 64)).repartition(
         par
     ).write.parquet(p)
-    df = spark.read.parquet(p)
-    out = cat._with_scan_parallelism(spark, df, p)
-    assert out is df
+    assert cat._path_sig(p)[0] >= cat._PAR_FLOOR_MIN_BYTES
+    assert _bare_scan(cat.load_tables(spark, sf, ["lineitem"])["lineitem"])
 
 
 def test_floor_preserves_pushdown(spark):
