@@ -267,8 +267,10 @@ def load_tables(
             n_spread = _spread_partitions(spark, sig[0], sig[1], st["par"])
         else:
             n_spread = 0
-        key = (path, sig, n_spread)
-        df = st["dfs"].get(key)
+        # one entry per path and spread: a rewritten file replaces it
+        key = (path, n_spread)
+        hit = st["dfs"].get(key)
+        df = hit[1] if hit is not None and hit[0] == sig else None
         if df is None:
             schema_of = schema_of or _footer_reader(spark)
             schema = schema_of(path)
@@ -293,7 +295,7 @@ def load_tables(
             if n_spread:
                 df = df.repartition(n_spread)
             if sig is not None:
-                st["dfs"][key] = df
+                st["dfs"][key] = (sig, df)
         if st["views"].get(name) is not df:
             df.createOrReplaceTempView(name)
             st["views"][name] = df

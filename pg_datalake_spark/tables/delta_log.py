@@ -39,9 +39,10 @@ roaring-bitmap encoding (tables/dv_codec.py) and anti-joined on
 ``(_metadata.file_path, _metadata.row_index)`` — the same
 merge-on-read shape as Iceberg position deletes. Where the decode runs
 follows the join strategy: tombstones within
-:data:`_DV_BROADCAST_ROWS` are broadcast, so the driver decodes them
-and hands Spark one Arrow table; larger (or unknown) ones are decoded
-executor-side (``mapInPandas``) and shuffled. Rows the driver holds
+:data:`~pg_datalake_spark.tables.tombstones.DRIVER_ROWS` are broadcast,
+so the driver decodes them and hands Spark one Arrow table; larger (or
+unknown) ones are decoded executor-side (``mapInPandas``) and shuffled.
+A DV delete follows the same bound on its write side. Rows the driver holds
 (descriptor frames, checkpoint actions, empty frames) reach Spark
 through :func:`~pg_datalake_spark.session.local_frame`, never a
 Python-worker RDD. Still-unsupported reader features (column mapping,
@@ -70,6 +71,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pg_datalake_spark.session import local_frame
+from pg_datalake_spark.tables import tombstones
 
 _LOG_DIR = "_delta_log"
 # Reader versions this implementation understands. 2 adds column
@@ -966,14 +968,6 @@ def _dataframe_for_adds(
     return out
 
 
-# Total deleted cardinality (sum of the descriptors' ``cardinality``)
-# up to which a DV read broadcasts its tombstones — ~100 MB of (path,
-# pos) pairs. A broadcast side is collected to the driver anyway, so
-# below it the bitmaps are decoded there too; tests pin it to 0 to force
-# the executor decode and the shuffle join.
-_DV_BROADCAST_ROWS = 4_000_000
-
-
 def _apply_deletion_vectors(
     spark: SparkSession, df: DataFrame, adds: list[dict], location: str, _abs
 ) -> DataFrame:
@@ -983,8 +977,9 @@ def _apply_deletion_vectors(
     identical merge-on-read shape as Iceberg position deletes
     (iceberg_external.py plan). Where the bitmaps are decoded follows
     the join strategy. The total deleted cardinality is known exactly
-    from the descriptors: when it is within :data:`_DV_BROADCAST_ROWS`
-    the tombstones are broadcast, so the bitmaps are decoded on the
+    from the descriptors: when it is within
+    :data:`~pg_datalake_spark.tables.tombstones.DRIVER_ROWS` the
+    tombstones are broadcast, so the bitmaps are decoded on the
     driver (an inline ``"i"`` DV is log bytes there already) and reach
     Spark as one Arrow table — no Python worker starts. Past the bound,
     or when a descriptor carries no ``cardinality``, the descriptors go
@@ -996,7 +991,7 @@ def _apply_deletion_vectors(
         if a.get("deletionVector")
     ]
     cards = [d.get("cardinality") for _, d in descs]
-    if None not in cards and sum(cards) <= _DV_BROADCAST_ROWS:
+    if None not in cards and sum(cards) <= tombstones.DRIVER_ROWS:
         deletes = F.broadcast(_decoded_tombstones(spark, descs, location))
     else:
         deletes = _executor_tombstones(spark, descs, location)
@@ -1708,10 +1703,14 @@ def delete_where_delta(
     positions unioned in — descriptors replace, they don't stack).
     Blobs ≤ ``inline_threshold`` bytes are stored inline (``"i"``,
     Z85); larger ones go to UUID-named sidecar files (``"u"``), one per
-    touched data file, WRITTEN BY THE EXECUTORS (r9): matched positions
-    are hash-partitioned per data file and each file's roaring bitmap
-    is built + serialized inside ``applyInPandas`` — no row position
-    ever transits the driver, which only registers the O(files)
+    touched data file. Where the bitmaps are built follows
+    :data:`~pg_datalake_spark.tables.tombstones.DRIVER_ROWS`, checked
+    against the adds' ``stats.numRecords`` before any job runs: within
+    it, the matched positions come to the driver in one collect and the
+    driver builds each bitmap; past it, or when an add has no count,
+    matched positions are hash-partitioned per data file and each
+    file's bitmap is built + serialized inside ``applyInPandas``, so no
+    row position transits the driver, which only registers the O(files)
     descriptor list (same scale shape as
     iceberg_external.add_position_deletes_df). The commit also upgrades
     the protocol to readerVersion 3 / writerVersion 7 with the
@@ -1720,7 +1719,8 @@ def delete_where_delta(
     requirements), and carries the PRIOR deletionVector on the paired
     remove so vacuum can reclaim superseded sidecars."""
     location = _norm_location(location)
-    state = _snapshot_state(spark, location, None)
+    # a DV delete sizes its route by the adds' stats.numRecords
+    state = _snapshot_state(spark, location, None, need_stats=mode == "dv")
     cfg = (state["metaData"] or {}).get("configuration") or {}
     if cfg.get("delta.appendOnly", "").lower() == "true":
         # PROTOCOL.md table property: appendOnly tables reject DELETE /
@@ -1972,8 +1972,8 @@ def _delete_where_dv(
     _abs = _make_abs(location)
 
     # raw per-partition-group scan (NO existing-DV filtering: already-
-    # deleted rows may re-match; the per-file bitmap union below —
-    # executor-side — absorbs them)
+    # deleted rows may re-match; the per-file bitmap union of
+    # _serialize_file_dv absorbs them)
     groups: dict[tuple, list[str]] = {}
     for a in state["adds"].values():
         pv = a.get("partitionValues") or {}
@@ -1997,100 +1997,20 @@ def _delete_where_dv(
         scan = scan.unionByName(p)
     matched = scan.filter(predicate).select("__path", "__pos")
 
-    # prior descriptors: O(files) driver metadata, joined in so each
-    # executor can union already-deleted positions into its bitmap
-    # (descriptors REPLACE, they don't stack)
     abs_to_add = {_abs(a["path"]): a for a in state["adds"].values()}
-    old_rows = [
-        (p, d["storageType"], d["pathOrInlineDv"], d.get("offset"), d["sizeInBytes"])
-        for p, a in sorted(abs_to_add.items())
-        if (d := a.get("deletionVector"))
-    ]
-    old_schema = (
-        "__path string, o_st string, o_dv string, o_off long, o_size long"
-    )
-    old_df = local_frame(spark, old_rows, old_schema)
-    keyed = matched.join(F.broadcast(old_df), "__path", "left")
-
-    def _serialize_file_dv(key, pdf):
-        """One group per data file: union new + prior positions, build
-        the roaring bitmap, spill big blobs to a per-file UUID sidecar
-        — all executor-local; only the descriptor row returns."""
-        import uuid as _uuid
-
-        import numpy as np
-        import pandas as pd
-
-        from pg_datalake_spark.tables import dv_codec
-
-        path, o_st, o_dv, o_off, o_size = key
-        positions = np.unique(pdf["__pos"].to_numpy(dtype=np.int64))
-        if o_st is not None:
-            # Null LONG group keys arrive as float NaN (Arrow null int64
-            # -> pandas float64): an inline ("i") prior descriptor has
-            # offset=null, so NaN here is the COMMON case when stacking a
-            # second DV delete on a file whose first blob fit inline.
-            old_desc = {
-                "storageType": o_st,
-                "pathOrInlineDv": o_dv,
-                "offset": None if o_off is None or pd.isna(o_off) else int(o_off),
-                "sizeInBytes": 0 if o_size is None or pd.isna(o_size) else int(o_size),
-            }
-            positions = np.union1d(
-                positions, dv_codec.decode_descriptor_positions(old_desc, location)
-            )
-        blob = dv_codec.serialize_dv(positions)
-        card = int(len(positions))
-        if len(blob) <= inline_threshold:
-            desc = {
-                "path": path,
-                "storageType": "i",
-                "pathOrInlineDv": dv_codec.z85_encode(blob),
-                "offset": None,
-                "sizeInBytes": len(blob),
-                "cardinality": card,
-            }
-        else:
-            u = _uuid.uuid4()
-            [off] = dv_codec.write_dv_file(
-                os.path.join(location, f"deletion_vector_{u}.bin"), [blob]
-            )
-            desc = {
-                "path": path,
-                "storageType": "u",
-                "pathOrInlineDv": dv_codec.make_uuid_descriptor_path(u),
-                "offset": off,
-                "sizeInBytes": len(blob),
-                "cardinality": card,
-            }
-        return pd.DataFrame([desc])
-
-    desc_schema = (
-        "path string, storageType string, pathOrInlineDv string, "
-        "offset long, sizeInBytes long, cardinality long"
-    )
-    desc_rows = (
-        keyed.groupBy("__path", "o_st", "o_dv", "o_off", "o_size")
-        .applyInPandas(_serialize_file_dv, desc_schema)
-        .collect()  # O(touched files) descriptors — never row positions
-    )
+    if (rows := _physical_rows(state["adds"].values())) is not None and (
+        rows <= tombstones.DRIVER_ROWS
+    ):
+        descs = _driver_dvs(matched, abs_to_add, location, inline_threshold)
+    else:
+        descs = _executor_dvs(spark, matched, abs_to_add, location, inline_threshold)
     now_ms = int(time.time() * 1000)
-    if not desc_rows:
+    if not descs:
         return _write_commit(
             location,
             state["version"] + 1,
             [{"commitInfo": {"operation": "DELETE", "timestamp": now_ms}}],
         )
-    descs = {
-        r["path"]: {
-            k: r[k]
-            for k in (
-                "storageType", "pathOrInlineDv", "offset", "sizeInBytes", "cardinality"
-            )
-            if r[k] is not None
-        }
-        for r in desc_rows
-    }
 
     actions: list[dict] = [
         {"commitInfo": {"operation": "DELETE", "timestamp": now_ms}}
@@ -2136,6 +2056,146 @@ def _delete_where_dv(
         new_add.update(dataChange=True, deletionVector=descs[path])
         actions.append({"add": new_add})
     return _write_commit(location, state["version"] + 1, actions)
+
+
+def _physical_rows(adds) -> int | None:
+    """Rows in the data files of ``adds``, deleted ones included, from
+    each add's ``stats.numRecords``; None when an add has no count."""
+    total = 0
+    for a in adds:
+        try:
+            total += int(json.loads(a.get("stats") or "{}")["numRecords"])
+        except (KeyError, TypeError, ValueError):
+            return None
+    return total
+
+
+def _serialize_file_dv(
+    positions, prior: dict | None, location: str, inline_threshold: int
+) -> dict:
+    """The deletion-vector descriptor of one data file: ``positions``
+    unioned with those of its ``prior`` descriptor (descriptors
+    replace, they do not stack), as a roaring bitmap stored inline when
+    it fits ``inline_threshold`` bytes, else in a UUID-named sidecar
+    file of its own. Both delete routes call it, the driver for the
+    positions it holds and the executors per file group."""
+    import numpy as np
+
+    from pg_datalake_spark.tables import dv_codec
+
+    positions = np.unique(np.asarray(positions, dtype=np.int64))
+    if prior is not None:
+        positions = np.union1d(
+            positions, dv_codec.decode_descriptor_positions(prior, location)
+        )
+    blob = dv_codec.serialize_dv(positions)
+    desc = {"sizeInBytes": len(blob), "cardinality": int(len(positions))}
+    if len(blob) <= inline_threshold:
+        return {
+            "storageType": "i",
+            "pathOrInlineDv": dv_codec.z85_encode(blob),
+            "offset": None,
+            **desc,
+        }
+    u = uuid.uuid4()
+    [off] = dv_codec.write_dv_file(
+        os.path.join(location, f"deletion_vector_{u}.bin"), [blob]
+    )
+    return {
+        "storageType": "u",
+        "pathOrInlineDv": dv_codec.make_uuid_descriptor_path(u),
+        "offset": off,
+        **desc,
+    }
+
+
+def _driver_dvs(
+    matched: DataFrame, abs_to_add: dict, location: str, inline_threshold: int
+) -> dict[str, dict]:
+    """The new descriptor of each file ``matched`` touches, keyed by
+    its absolute path: the matched positions come to the driver in one
+    collect, which builds every bitmap and sidecar itself."""
+    paths = sorted(abs_to_add)
+    positions = tombstones._held_positions(
+        matched, F.col("__path"), F.col("__pos"), paths
+    )
+    out = {}
+    for path, pos in zip(paths, positions):
+        if len(pos):
+            desc = _serialize_file_dv(
+                pos, abs_to_add[path].get("deletionVector"), location, inline_threshold
+            )
+            out[path] = {k: v for k, v in desc.items() if v is not None}
+    return out
+
+
+def _executor_dvs(
+    spark: SparkSession,
+    matched: DataFrame,
+    abs_to_add: dict,
+    location: str,
+    inline_threshold: int,
+) -> dict[str, dict]:
+    """:func:`_driver_dvs` with the bitmaps built by the executors:
+    matched positions are hash-partitioned per data file, and each
+    file's bitmap is built and serialized inside ``applyInPandas`` — no
+    row position reaches the driver, which collects only the
+    O(touched files) descriptors (the same scale shape as
+    iceberg_external.add_position_deletes_df)."""
+    # prior descriptors: O(files) driver metadata, joined in so each
+    # executor can union already-deleted positions into its bitmap
+    old_rows = [
+        (p, d["storageType"], d["pathOrInlineDv"], d.get("offset"), d["sizeInBytes"])
+        for p, a in sorted(abs_to_add.items())
+        if (d := a.get("deletionVector"))
+    ]
+    old_schema = (
+        "__path string, o_st string, o_dv string, o_off long, o_size long"
+    )
+    old_df = local_frame(spark, old_rows, old_schema)
+    keyed = matched.join(F.broadcast(old_df), "__path", "left")
+
+    def serialize(key, pdf):
+        import numpy as np
+        import pandas as pd
+
+        path, o_st, o_dv, o_off, o_size = key
+        prior = None
+        if o_st is not None:
+            # Null LONG group keys arrive as float NaN (Arrow null int64
+            # -> pandas float64): an inline ("i") prior descriptor has
+            # offset=null, so NaN here is the COMMON case when stacking a
+            # second DV delete on a file whose first blob fit inline.
+            prior = {
+                "storageType": o_st,
+                "pathOrInlineDv": o_dv,
+                "offset": None if o_off is None or pd.isna(o_off) else int(o_off),
+                "sizeInBytes": 0 if o_size is None or pd.isna(o_size) else int(o_size),
+            }
+        desc = _serialize_file_dv(
+            pdf["__pos"].to_numpy(dtype=np.int64), prior, location, inline_threshold
+        )
+        return pd.DataFrame([{"path": path, **desc}])
+
+    desc_schema = (
+        "path string, storageType string, pathOrInlineDv string, "
+        "offset long, sizeInBytes long, cardinality long"
+    )
+    desc_rows = (
+        keyed.groupBy("__path", "o_st", "o_dv", "o_off", "o_size")
+        .applyInPandas(serialize, desc_schema)
+        .collect()  # O(touched files) descriptors — never row positions
+    )
+    return {
+        r["path"]: {
+            k: r[k]
+            for k in (
+                "storageType", "pathOrInlineDv", "offset", "sizeInBytes", "cardinality"
+            )
+            if r[k] is not None
+        }
+        for r in desc_rows
+    }
 
 
 def write_delta_checkpoint(

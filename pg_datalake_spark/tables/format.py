@@ -27,11 +27,17 @@ takes each new file's rows and min/max/null stats from its parquet
 footer on the driver, and a read gives Spark the schema the table
 records, so neither starts a Spark job of its own. Position deletes
 join on (_metadata.file_path, _metadata.row_index) — a broadcast
-anti-join when delete files are small, which is the common case.
+anti-join when delete files are small, which is the common case. A
+DELETE or UPDATE whose candidate files hold at most
+``tombstones.DRIVER_ROWS`` rows (per the metadata) collects its matched
+positions in one job; the driver then picks MOR or COW per file and
+writes the position-delete file itself. Past that bound the executors
+count the matches and write the tombstones.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -47,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pg_datalake_spark.session import local_frame
+from pg_datalake_spark.tables import tombstones
 
 COW_THRESHOLD = 0.2  # rewrite a file when >20% of its rows are deleted
 TARGET_FILE_MB = 512  # compaction target (reference: writable_table.h:28)
@@ -665,6 +672,11 @@ class LakeTable:
         3. partial files → MOR position-delete file, or COW rewrite
            when >20% of the file's rows match.
 
+        When the tier-3 files hold at most ``tombstones.DRIVER_ROWS``
+        rows, the matched positions come to the driver in one job and
+        the driver writes the position-delete file; past it the
+        executors count the matches and write the tombstones.
+
         Returns {"dropped": n, "mor": n, "cow": n}.
         """
         meta = self._load()
@@ -705,10 +717,26 @@ class LakeTable:
                 .withColumnRenamed("__pos", "pos")
             )
             matched = df.filter(predicate).select("file_path", "pos")
-            counts = {
-                _strip_scheme(r["file_path"]): r["n"]
-                for r in matched.groupBy("file_path").agg(F.count("*").alias("n")).collect()
-            }
+            held: dict | None = None
+            if sum(f.rows for f in candidates) <= tombstones.DRIVER_ROWS:
+                # within the bound the driver holds every matched position
+                # and writes the tombstones itself; past it the executors
+                # count and write them, and no position reaches the driver
+                positions = tombstones._held_positions(
+                    matched,
+                    _path_col(F.col("file_path")),
+                    F.col("pos"),
+                    [f.path for f in candidates],
+                )
+                held = {f.path: p for f, p in zip(candidates, positions)}
+                counts = {path: len(p) for path, p in held.items()}
+            else:
+                counts = {
+                    _strip_scheme(r["file_path"]): r["n"]
+                    for r in matched.groupBy("file_path")
+                    .agg(F.count("*").alias("n"))
+                    .collect()
+                }
             cow_files = [
                 f for f in candidates if counts.get(f.path, 0) / f.rows > COW_THRESHOLD
             ]
@@ -721,30 +749,11 @@ class LakeTable:
             new_files += untouched
 
             if mor_files:
-                import pyarrow.parquet as pq
-
                 mor = len(mor_files)
-                del_dir = os.path.join(self.root, "deletes", f"d-{uuid.uuid4().hex[:12]}")
-                keep_paths = {f.path for f in mor_files}
-                # tombstones are written BY THE EXECUTORS, hash-partitioned
-                # per data file with (file_path, pos)-sorted rows — the
-                # Iceberg delete-file convention, and the same distribution
-                # as iceberg_external.add_position_deletes_df; a single
-                # coalesced task would bottleneck a wide delete at scale
-                (
-                    matched.filter(_path_col(F.col("file_path")).isin(*keep_paths))
-                    .repartition("file_path")
-                    .sortWithinPartitions("file_path", "pos")
-                    .write.parquet(del_dir)
-                )
-                for fn in sorted(os.listdir(del_dir)):
-                    if fn.endswith(".parquet"):
-                        p = os.path.join(del_dir, fn)
-                        n = pq.ParquetFile(p).metadata.num_rows
-                        if n:
-                            new_deletes.append(
-                                DeleteFile(path=p, rows=n, applies_to=sorted(keep_paths))
-                            )
+                if held is None:
+                    new_deletes += self._executor_position_deletes(matched, mor_files)
+                else:
+                    new_deletes += self._driver_position_deletes(held, mor_files)
                 new_files += mor_files
 
             if cow_files:
@@ -762,6 +771,65 @@ class LakeTable:
 
         self._new_snapshot(meta, "delete", new_files, new_deletes)
         return {"dropped": dropped, "mor": mor, "cow": cow}
+
+    def _driver_position_deletes(
+        self, held: dict, mor_files: list[DataFile]
+    ) -> list[DeleteFile]:
+        """One position-delete file of the held positions of
+        ``mor_files``, written here with pyarrow, rows sorted by
+        (file_path, pos) as the Iceberg delete-file convention asks.
+        ``file_path`` is spelled as Spark reports ``_metadata.file_path``
+        (``file:`` and the %-escaped path), which a scan joins it on."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        hadoop_path = self.spark._jvm.org.apache.hadoop.fs.Path
+        files = sorted(
+            ("file:" + hadoop_path(f.path).toUri().toString(), f.path) for f in mor_files
+        )
+        owner = np.repeat(np.arange(len(files)), [len(held[p]) for _, p in files])
+        table = pa.table(
+            {
+                "file_path": pa.array([uri for uri, _ in files]).take(owner),
+                "pos": pa.array(np.concatenate([held[p] for _, p in files]), pa.int64()),
+            }
+        )
+        path = os.path.join(self.root, "deletes", f"d-{uuid.uuid4().hex[:12]}.parquet")
+        pq.write_table(table, path)
+        return [
+            DeleteFile(
+                path=path, rows=table.num_rows, applies_to=sorted(p for _, p in files)
+            )
+        ]
+
+    def _executor_position_deletes(
+        self, matched: DataFrame, mor_files: list[DataFile]
+    ) -> list[DeleteFile]:
+        """Position-delete files of the matched rows of ``mor_files``,
+        written by the executors: hash-partitioned per data file with
+        (file_path, pos)-sorted rows (the Iceberg delete-file
+        convention, and the same distribution as
+        iceberg_external.add_position_deletes_df). A single coalesced
+        task would bottleneck a wide delete at scale."""
+        import pyarrow.parquet as pq
+
+        del_dir = os.path.join(self.root, "deletes", f"d-{uuid.uuid4().hex[:12]}")
+        keep_paths = {f.path for f in mor_files}
+        (
+            matched.filter(_path_col(F.col("file_path")).isin(*keep_paths))
+            .repartition("file_path")
+            .sortWithinPartitions("file_path", "pos")
+            .write.parquet(del_dir)
+        )
+        out = []
+        for fn in sorted(os.listdir(del_dir)):
+            if fn.endswith(".parquet"):
+                p = os.path.join(del_dir, fn)
+                n = pq.ParquetFile(p).metadata.num_rows
+                if n:
+                    out.append(DeleteFile(path=p, rows=n, applies_to=sorted(keep_paths)))
+        return out
 
     def delete_equality(self, keys: DataFrame, columns: list[str] | None = None) -> int:
         """Merge-on-read EQUALITY delete (internal-format parity with
@@ -839,10 +907,20 @@ class LakeTable:
         new_files = list(keep)
         if candidates:
             df = self._apply_deletes(self._read_mapped(candidates, meta), cur)
-            hit_paths = {
-                _strip_scheme(r["__file"])
-                for r in df.filter(predicate).select("__file").distinct().collect()
-            }
+            matched = df.filter(predicate)
+            if sum(f.rows for f in candidates) <= tombstones.DRIVER_ROWS:
+                positions = tombstones._held_positions(
+                    matched,
+                    _path_col(F.col("__file")),
+                    F.col("__pos"),
+                    [f.path for f in candidates],
+                )
+                hit_paths = {f.path for f, p in zip(candidates, positions) if len(p)}
+            else:
+                hit_paths = {
+                    _strip_scheme(r["__file"])
+                    for r in matched.select("__file").distinct().collect()
+                }
             new_files += [f for f in candidates if f.path not in hit_paths]
             hit = [f for f in candidates if f.path in hit_paths]
             if hit:
@@ -1225,7 +1303,12 @@ def _transform_sql(p: PartitionField, lit: str) -> str:
     raise ValueError(p.transform)
 
 
+@functools.lru_cache(maxsize=1024)
 def _parse_type(simple: str) -> T.DataType:
+    """The type a field's recorded type string names. The JVM's DDL
+    parser does the work, a round trip per call, and every read and
+    write parses each field, so the results are kept (``lru_cache`` is
+    safe across threads; callers must not mutate the returned type)."""
     from pyspark.sql.types import _parse_datatype_string
 
     return _parse_datatype_string(simple)

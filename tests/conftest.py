@@ -29,6 +29,20 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def executor_route(monkeypatch):
+    """Row-level deletes and DV reads take the executor route: the
+    tombstone bound is pinned to 0, and holding positions on the driver
+    fails the test."""
+    from pg_datalake_spark.tables import tombstones
+
+    def held(*_args):
+        raise AssertionError("a delete held its positions past the bound")
+
+    monkeypatch.setattr(tombstones, "DRIVER_ROWS", 0)
+    monkeypatch.setattr(tombstones, "_held_positions", held)
+
+
 @pytest.fixture(scope="session")
 def ddb():
     con = duckdb.connect()

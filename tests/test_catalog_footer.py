@@ -12,8 +12,6 @@ from __future__ import annotations
 import decimal
 import os
 import shutil
-import time
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -23,34 +21,12 @@ from pyspark.sql import types as T
 
 import pg_datalake_spark.catalog as cat
 from tests.conftest import SF_DIR
+from tests.spark_jobs import jobs_in_group
 
 # the driver testdata: one directory per scale factor
 TESTDATA = os.path.dirname(SF_DIR)
 SFS = ("sf0.001", "sf0.01", "sf0.1")
 NANOS = "spark.sql.legacy.parquet.nanosAsLong"
-
-
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` starts, counted under a job group of its own.
-    A control group that infers a parquet schema runs after it: listener
-    events arrive in order, so once the control's jobs are visible the
-    counted group's would be too."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group, control = f"g-{uuid.uuid4().hex}", f"c-{uuid.uuid4().hex}"
-    try:
-        sc.setJobGroup(group, "counted")
-        fn()
-        sc.setJobGroup(control, "control")
-        spark.read.parquet(cat.table_path(SF_DIR, "nation"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(control):
-        assert time.monotonic() < deadline, "control group never saw a job"
-        time.sleep(0.1)
-    return len(tracker.getJobIdsForGroup(group))
 
 
 def _copy_catalog(src: str, dst: str, names=cat.TABLE_NAMES) -> str:
@@ -98,10 +74,10 @@ def test_first_load_starts_no_spark_job(spark, tmp_path):
     sf = _copy_catalog(SF_DIR, str(tmp_path / "fresh"))
     fresh = spark.newSession()
     loaded = {}
-    assert _jobs(fresh, lambda: loaded.update(cat.load_tables(fresh, sf))) == 0
+    assert jobs_in_group(fresh, lambda: loaded.update(cat.load_tables(fresh, sf))) == 0
     assert set(loaded) == set(cat.TABLE_NAMES)
     # the control: inferring the same schemas does start jobs
-    assert _jobs(fresh, lambda: [_inferred(fresh, cat.table_path(sf, n)) for n in loaded]) > 0
+    assert jobs_in_group(fresh, lambda: [_inferred(fresh, cat.table_path(sf, n)) for n in loaded]) > 0
 
 
 def test_vanilla_session_reads_nanos_as_timestamp_ntz(spark, tmp_path):
@@ -112,7 +88,7 @@ def test_vanilla_session_reads_nanos_as_timestamp_ntz(spark, tmp_path):
     vanilla.conf.unset(NANOS)
     assert vanilla.conf.get(NANOS) == "false"
     loaded = {}
-    assert _jobs(vanilla, lambda: loaded.update(cat.load_tables(vanilla, sf, ["events"]))) == 0
+    assert jobs_in_group(vanilla, lambda: loaded.update(cat.load_tables(vanilla, sf, ["events"]))) == 0
     events = loaded["events"]
     assert isinstance(events.schema["ts"].dataType, T.TimestampNTZType)
     assert events.count() == pq.ParquetFile(cat.table_path(sf, "events")).metadata.num_rows
@@ -168,7 +144,7 @@ def test_edge_footers_equal_inference(spark, tmp_path):
     names = ["customer", "part", "supplier"]
     fresh = spark.newSession()
     loaded = {}
-    assert _jobs(fresh, lambda: loaded.update(cat.load_tables(fresh, sf, names))) == 0
+    assert jobs_in_group(fresh, lambda: loaded.update(cat.load_tables(fresh, sf, names))) == 0
     for name in names:
         assert loaded[name].schema.json() == _inferred(fresh, cat.table_path(sf, name)), name
     # the pyarrow file: REQUIRED reads nullable, NANOS as long under
@@ -192,7 +168,7 @@ def test_disagreeing_directory_takes_spark_route(spark, tmp_path):
     fresh = spark.newSession()
     assert cat._footer_reader(fresh)(p) is None
     loaded = {}
-    assert _jobs(fresh, lambda: loaded.update(cat.load_tables(fresh, sf, ["lineitem"]))) > 0
+    assert jobs_in_group(fresh, lambda: loaded.update(cat.load_tables(fresh, sf, ["lineitem"]))) > 0
     assert loaded["lineitem"].schema.json() == _inferred(fresh, p)
 
 
@@ -208,5 +184,5 @@ def test_directory_takes_spark_route(spark, tmp_path):
     fresh = spark.newSession()
     assert cat._footer_reader(fresh)(p) is None
     loaded = {}
-    assert _jobs(fresh, lambda: loaded.update(cat.load_tables(fresh, sf, ["orders"]))) > 0
+    assert jobs_in_group(fresh, lambda: loaded.update(cat.load_tables(fresh, sf, ["orders"]))) > 0
     assert loaded["orders"].schema.json() == _inferred(fresh, p)

@@ -212,3 +212,23 @@ def test_plan_memo_keys_on_file_identity(spark, tmp_path):
     fourth = outer(spark, sf)
     assert fourth is not third
     assert sorted(r[0] for r in fourth.collect()) == list(range(200, 210, 2))
+
+
+def test_frame_memo_keeps_one_entry_per_table(spark, tmp_path):
+    # a rewritten table replaces its frame in the memo: five rewrites of
+    # `orders`, each followed by load_tables, leave one entry, and the
+    # frame reads the newest rows
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = cat.table_path(str(tmp_path), "orders")
+    mtime = None
+    for i in range(5):
+        keys = range(100 * i, 100 * i + 10)
+        pq.write_table(pa.table({"o_orderkey": pa.array(keys, pa.int64())}), p)
+        mtime = mtime or os.stat(p).st_mtime_ns
+        os.utime(p, ns=(mtime + i * 10**9, mtime + i * 10**9))
+        df = cat.load_tables(spark, str(tmp_path), ["orders"])["orders"]
+        assert sorted(r[0] for r in df.collect()) == list(keys)
+    entries = [k for k in cat._session_state(spark)["dfs"] if k[0] == p]
+    assert len(entries) == 1

@@ -25,7 +25,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from pg_datalake_spark.tables import delta_log as dl
+from pg_datalake_spark.tables import tombstones
 from tests.conftest import SF_DIR
+from tests.spark_jobs import jobs_in_group, spark_work
 
 
 @pytest.fixture()
@@ -445,12 +447,13 @@ def test_dv_add_carries_stats_and_remove_carries_old_dv(spark, delta_orders):
 
 
 def test_dv_delete_source_has_no_row_collect():
-    """Guard the r9 scale property in code: the DV delete writer never
-    materializes row positions on the driver — its single collect is
-    the O(touched-files) descriptor list out of applyInPandas."""
+    """Guard the r9 scale property in code: past the tombstone bound
+    the DV delete writer never materializes row positions on the
+    driver — its single collect is the O(touched-files) descriptor list
+    out of applyInPandas."""
     from source_ast import calls, function_def, mentions, method_calls
 
-    node = function_def(dl._delete_where_dv)
+    node = function_def(dl._executor_dvs)
     collects = method_calls(node, "collect")
     assert len(collects) == 1 and calls(node, "applyInPandas")
     assert not mentions(node, "toPandas")
@@ -1988,34 +1991,15 @@ def test_small_checkpointed_snapshot_starts_no_spark_job(
     spark, tmp_path, monkeypatch
 ):
     """Within the byte rule the whole replay — V2 manifest, sidecars
-    and tail — runs on the driver: no Spark job in the job group. The
-    Spark route under a second group is the control: listener events
-    arrive in order, so once its jobs are visible the first group's
-    would be too."""
-    import time as _time
-    import uuid as _uuid
-
+    and tail — runs on the driver: no Spark job. The Spark route is
+    the control that the count sees jobs."""
     loc = str(tmp_path / "nojobs")
     _checkpointed_log(spark, loc, "v2_sidecars")
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    driver_group = f"driver-{_uuid.uuid4().hex}"
-    spark_group = f"spark-{_uuid.uuid4().hex}"
-    try:
-        sc.setJobGroup(driver_group, "driver route")
-        st = dl._snapshot_state(spark, loc, None)
-        sc.setJobGroup(spark_group, "spark route")
-        monkeypatch.setattr(dl, "_TAIL_DRIVER_BYTES", 0)
-        dl._snapshot_state(spark, loc, None)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    deadline = _time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(spark_group):
-        assert _time.monotonic() < deadline, "control group never saw a job"
-        _time.sleep(0.1)
-    assert st["adds"]
-    assert list(tracker.getJobIdsForGroup(driver_group)) == []
+    driver = spark_work(spark, lambda: dl._snapshot_state(spark, loc, None))
+    monkeypatch.setattr(dl, "_TAIL_DRIVER_BYTES", 0)
+    assert jobs_in_group(spark, lambda: dl._snapshot_state(spark, loc, None)) > 0
+    assert driver.result["adds"]
+    assert driver.jobs == 0
 
 
 def test_write_verbs_replay_the_log_once(spark, tmp_path, monkeypatch):
@@ -2327,7 +2311,7 @@ def _plan(df) -> str:
 def test_dv_read_decodes_on_the_driver_within_broadcast_bound(
     spark, tmp_path, monkeypatch
 ):
-    """Within ``_DV_BROADCAST_ROWS`` the tombstones are decoded on the
+    """Within ``tombstones.DRIVER_ROWS`` the tombstones are decoded on the
     driver: the plan has no Python node, and the rows equal those read
     with the bound pinned to 0 (executor decode, shuffle join)."""
     loc = str(tmp_path / "dv_route")
@@ -2348,7 +2332,7 @@ def test_dv_read_decodes_on_the_driver_within_broadcast_bound(
     assert sorted(r.id for r in driver.collect()) == exp
     plan = _plan(driver)
     assert "MapInPandas" not in plan and "PythonMapInArrow" not in plan
-    monkeypatch.setattr(dl, "_DV_BROADCAST_ROWS", 0)
+    monkeypatch.setattr(tombstones, "DRIVER_ROWS", 0)
     executor = dl.read_delta_table(spark, loc)
     assert sorted(r.id for r in executor.collect()) == exp
     assert "MapInPandas" in _plan(executor)
@@ -2373,3 +2357,148 @@ def test_dv_without_cardinality_decodes_on_executors(spark, tmp_path):
     assert "MapInPandas" in _plan(df)
     exp = sorted(i for i in range(200) if i % 10 and i % 7 != 1)
     assert sorted(r.id for r in df.collect()) == exp
+
+
+# --- the two DV delete routes ---------------------------------------------
+# Within tombstones.DRIVER_ROWS of physical rows (stats.numRecords) a DV
+# delete holds its matched positions on the driver, which builds every
+# bitmap; past it the executors build them in applyInPandas. The checks
+# below rerun on the executor route.
+
+
+@pytest.mark.parametrize(
+    "check",
+    [
+        test_delete_cow_keeps_null_predicate_rows,
+        test_dv_delete_on_empty_table_is_noop,
+        test_deletion_vector_delete_inline_and_sidecar,
+        test_dv_delete_on_encoded_partition_path,
+        test_dv_add_carries_stats_and_remove_carries_old_dv,
+        test_stacked_dv_delete_on_inline_prior,
+    ],
+    ids=lambda f: f.__name__,
+)
+def test_executor_route(check, request, executor_route):
+    import inspect
+
+    check(**{n: request.getfixturevalue(n) for n in inspect.signature(check).parameters})
+
+
+def test_dv_driver_route_follows_the_row_count_check():
+    """The DV delete builds bitmaps on the driver only inside the branch
+    of the numRecords check against the bound."""
+    import ast
+
+    from source_ast import calls, function_def, mentions
+
+    node = function_def(dl._delete_where_dv)
+    [driver] = calls(node, "_driver_dvs")
+    gates = [
+        n
+        for n in ast.walk(node)
+        if isinstance(n, ast.If) and any(driver in ast.walk(b) for b in n.body)
+    ]
+    assert any(
+        mentions(g.test, "DRIVER_ROWS") and mentions(g.test, "_physical_rows")
+        for g in gates
+    )
+    assert calls(function_def(dl._driver_dvs), "_held_positions")
+
+
+def test_dv_delete_without_record_counts_takes_executor_route(
+    spark, tmp_path, monkeypatch
+):
+    """An add without ``stats.numRecords`` leaves the table's size
+    unknown: the delete builds its bitmaps on the executors."""
+    loc = str(tmp_path / "nostats")
+    dl.write_delta_table(spark.range(50).selectExpr("id"), loc)
+    commit = dl._commit_path(loc, 0)
+    with open(commit) as fh:
+        actions = [json.loads(line) for line in fh]
+    for a in actions:
+        if "add" in a:
+            del a["add"]["stats"]
+    with open(commit, "w") as fh:
+        fh.write("".join(json.dumps(a) + "\n" for a in actions))
+    assert dl._physical_rows(dl._snapshot_state(spark, loc, None)["adds"].values()) is None
+
+    def held(*_args):
+        raise AssertionError("held positions of a table of unknown size")
+
+    monkeypatch.setattr(tombstones, "_held_positions", held)
+    dl.delete_where_delta(spark, loc, "id % 4 = 0", mode="dv")
+    got = sorted(r.id for r in dl.read_delta_table(spark, loc).collect())
+    assert got == [i for i in range(50) if i % 4]
+
+
+def _python_nodes(plans: list[str]) -> list[str]:
+    import re
+
+    return [m for p in plans for m in re.findall(r"\w*(?:Python|Pandas)\w*", p)]
+
+
+def test_dv_delete_within_the_bound_is_one_job(spark, tmp_path, monkeypatch):
+    """Within the bound a DV delete is one collect, with no Python or
+    pandas node in any plan it runs. On the executor route (the
+    control) the bitmaps are built in applyInPandas."""
+    loc = str(tmp_path / "dvjobs")
+    dl.write_delta_table(spark.range(300).selectExpr("id", "id % 3 AS g"), loc)
+    work = spark_work(
+        spark, lambda: dl.delete_where_delta(spark, loc, "id % 10 = 0", mode="dv")
+    )
+    assert work.jobs == 1
+    assert work.plans and not _python_nodes(work.plans)
+    monkeypatch.setattr(tombstones, "DRIVER_ROWS", 0)
+    control = spark_work(
+        spark, lambda: dl.delete_where_delta(spark, loc, "id % 10 = 1", mode="dv")
+    )
+    assert "FlatMapGroupsInPandas" in _python_nodes(control.plans)
+    got = sorted(r.id for r in dl.read_delta_table(spark, loc).collect())
+    assert got == [i for i in range(300) if i % 10 not in (0, 1)]
+
+
+def test_dv_routes_leave_identical_tables(spark, tmp_path, monkeypatch):
+    """The same DV deletes on two copies of a partitioned table, one per
+    route, leave the same rows and each file the same deleted
+    positions, inline and sidecar alike."""
+    import re
+
+    from pg_datalake_spark.tables import dv_codec
+
+    df = spark.range(400).selectExpr(
+        "id", "CASE WHEN id % 11 = 0 THEN NULL ELSE id % 50 END AS qty", "id % 3 AS part"
+    )
+    locs = {r: str(tmp_path / r) for r in ("driver", "executor")}
+    for loc in locs.values():
+        dl.write_delta_table(df.repartition(2), loc, partition_by=["part"])
+
+    def state(loc):
+        adds = dl._snapshot_state(spark, loc, None)["adds"]
+        dvs = {
+            # the path without the write's UUID
+            re.sub(r"-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "", p): (
+                a["deletionVector"]["storageType"],
+                sorted(dv_codec.decode_descriptor_positions(a["deletionVector"], loc)),
+            )
+            for p, a in adds.items()
+            if a.get("deletionVector")
+        }
+        rows = sorted(tuple(r) for r in dl.read_delta_table(spark, loc).collect())
+        return rows, dvs
+
+    for pred, threshold in (
+        ("qty < 5", 1 << 20),  # inline; NULL-qty rows kept
+        ("id % 7 = 0", 0),  # sidecars stacked on inline priors
+        ("id % 5 = 0 AND part = 1", 1 << 20),  # inline stacked on sidecars
+    ):
+        out = {}
+        for route, loc in locs.items():
+            monkeypatch.setattr(
+                tombstones, "DRIVER_ROWS", 4_000_000 if route == "driver" else 0
+            )
+            dl.delete_where_delta(spark, loc, pred, mode="dv", inline_threshold=threshold)
+            out[route] = state(loc)
+        assert out["driver"] == out["executor"], pred
+    rows, dvs = out["driver"]
+    assert {kind for kind, _ in dvs.values()} == {"i", "u"}
+    assert all(r[1] is None or r[1] >= 5 for r in rows)

@@ -173,9 +173,15 @@ def test_dml_fuzz_sweep_schema_evo(spark, dml_con, tmp_path_factory):
         assert evo_ops.get(kind, 0) > 0, f"{kind} never generated: {evo_ops}"
 
 
-def test_dml_fuzz_regression_seeds(spark, dml_con, tmp_path_factory):
+@pytest.mark.parametrize("route", ["driver", "executor"])
+def test_dml_fuzz_regression_seeds(spark, dml_con, tmp_path_factory, request, route):
+    """The pinned seeds on both tombstone routes: the driver holds the
+    matched positions (these tables are far within the bound), or the
+    executors build the tombstones (the bound pinned to 0)."""
     from pg_datalake_spark.fuzz_dml import run_sequence_delta
 
+    if route == "executor":
+        request.getfixturevalue("executor_route")
     base = tmp_path_factory.mktemp("dml_fuzz_pinned")
     for seed in DML_REGRESSION_SEEDS:
         problems, _ = run_sequence(

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import ast
+import inspect
 import os
 
 import pytest
@@ -12,6 +14,7 @@ from pyspark.sql import types as T
 from pg_datalake_spark.tables import LakeTable
 from pg_datalake_spark.tables.format import DeleteFile, PartitionField
 from tests.conftest import SF_DIR
+from tests.spark_jobs import jobs_in_group, spark_work
 
 KV_SCHEMA = T.StructType(
     [
@@ -63,22 +66,35 @@ def test_mor_small_delete(spark, kv_table):
 
 
 def test_mor_tombstone_write_is_distributed(spark, kv_table):
-    """r9: the MOR tombstone write is hash-partitioned per data file
-    with (file_path, pos)-sorted rows (Iceberg delete-file convention,
-    same distribution as the external add_position_deletes_df) — never
-    a coalesce(1) single-task funnel. Registered DeleteFile row counts
-    must match the parquet footers exactly."""
-    import pyarrow.parquet as pq
+    """Past the tombstone bound the MOR tombstone write is
+    hash-partitioned per data file with (file_path, pos)-sorted rows
+    (Iceberg delete-file convention, same distribution as the external
+    add_position_deletes_df) — never a coalesce(1) single-task funnel.
+    Within it (this table) the driver writes one sorted file. On both
+    routes the registered DeleteFile row counts match the parquet
+    footers exactly."""
     from source_ast import function_def, method_calls
 
-    node = function_def(LakeTable.delete)
+    node = function_def(LakeTable._executor_position_deletes)
     assert not method_calls(node, "coalesce", 1)
     assert method_calls(node, "repartition", "file_path")
     assert method_calls(node, "sortWithinPartitions", "file_path", "pos")
+    _check_sorted_tombstones(kv_table)
+    [entry] = kv_table._current_snapshot(kv_table._load()).delete_files
+    assert entry.path.endswith(".parquet") and os.path.isfile(entry.path)
+
+
+def test_mor_tombstone_write_executor_route(spark, kv_table, executor_route):
+    _check_sorted_tombstones(kv_table)
+
+
+def _check_sorted_tombstones(kv_table):
+    import pyarrow.parquet as pq
 
     res = kv_table.delete("key % 11 = 0 AND key < 100")  # sparse → MOR
     assert res["mor"] >= 1 and res["cow"] == 0
     snap = kv_table._current_snapshot(kv_table._load())
+    [data] = snap.data_files
     total = 0
     for d in snap.delete_files:
         meta = pq.ParquetFile(d.path).metadata
@@ -86,6 +102,8 @@ def test_mor_tombstone_write_is_distributed(spark, kv_table):
         t = pq.read_table(d.path).to_pydict()
         pairs = list(zip(t["file_path"], t["pos"]))
         assert pairs == sorted(pairs)
+        # the path is spelled as Spark reports _metadata.file_path
+        assert {p for p, _ in pairs} == {"file:" + data.path}
         total += d.rows
     assert total == 10  # keys 0,11,22,...,99
     assert kv_table.scan().count() == 990
@@ -821,46 +839,27 @@ def test_footer_stats_other_writer_keeps_spark_aggregation(spark, tmp_path, monk
     assert t._current_snapshot(t._load()).data_files[0].stats["key"] == [1, 2, 0]
 
 
-def _jobs_in_group(spark, fn) -> int:
-    """Spark jobs ``fn`` starts, counted under a job group of its own.
-    A second group run after it is the control that every job event of
-    the first group has arrived (listener events arrive in order)."""
-    import time as _time
-    import uuid as _uuid
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group, control = f"g-{_uuid.uuid4().hex}", f"c-{_uuid.uuid4().hex}"
-    try:
-        sc.setJobGroup(group, "counted")
-        fn()
-        sc.setJobGroup(control, "control")
-        spark.range(1).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    deadline = _time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(control):
-        assert _time.monotonic() < deadline, "control group never saw a job"
-        _time.sleep(0.1)
-    return len(tracker.getJobIdsForGroup(group))
-
-
 def test_write_verbs_start_only_their_own_jobs(spark, tmp_path):
     """append runs exactly the jobs of writing its frame (no stats or
-    schema job); a MERGE over a table with position deletes needs at
-    most 9: one probe query and one write."""
+    schema job). Within the tombstone bound a MOR-only DELETE is one
+    collect and an UPDATE over a table with position deletes needs at
+    most 4 jobs; a MERGE over such a table needs at most 9: one probe
+    query and one write."""
     t = LakeTable.create(spark, str(tmp_path / "jobs"), KV_SCHEMA)
     batch = make_kv(spark, n=2000)
     t.append(batch)
     control = str(tmp_path / "plain")
-    write_jobs = _jobs_in_group(spark, lambda: batch.write.parquet(control))
-    assert _jobs_in_group(spark, lambda: t.append(batch.withColumn("key", F.col("key") + 2000))) == write_jobs
-    t.delete("key >= 100 AND key < 150")  # position deletes the merge must apply
+    write_jobs = jobs_in_group(spark, lambda: batch.write.parquet(control))
+    assert jobs_in_group(spark, lambda: t.append(batch.withColumn("key", F.col("key") + 2000))) == write_jobs
+    # position deletes the update and the merge must apply
+    delete = spark_work(spark, lambda: t.delete("key >= 100 AND key < 150"))
+    assert delete.jobs == 1 and delete.result == {"dropped": 0, "mor": 1, "cow": 0}
+    assert jobs_in_group(spark, lambda: t.update({"grp": "9"}, "key >= 2000 AND key < 2010")) <= 4
+    assert t.scan().filter("grp = 9").count() == 10
     src = spark.range(3900, 4100).coalesce(1).select(
         F.col("id").alias("key"), F.lit("m").alias("value"), F.lit(7).alias("grp")
     )
-    jobs = _jobs_in_group(
+    jobs = jobs_in_group(
         spark, lambda: t.merge(src, on="key", when_matched_update={"value": "src.value"})
     )
     assert jobs <= 9
@@ -1047,3 +1046,130 @@ def test_delete_entry_kept_while_a_target_file_lives(spark, kv_table):
     cur = kv_table._current_snapshot(kv_table._load())
     assert len(cur.delete_files) == 2
     assert kv_table.scan().count() == 1900
+
+
+# --- the two delete routes ------------------------------------------------
+# Within tombstones.DRIVER_ROWS (every table above) a delete or update
+# holds its matched positions on the driver; past it the executors
+# count them and write the tombstones. The checks below rerun on the
+# executor route.
+
+
+def test_update_rewrites_only_hit_files(spark, kv_table):
+    """An UPDATE rewrites the files holding a matched row and carries
+    every other file over by reference."""
+    import pyarrow.parquet as pq
+
+    kv_table.append(make_kv(spark).withColumn("key", F.col("key") + 1000))
+    before = {f.path for f in kv_table._current_snapshot(kv_table._load()).data_files}
+    kv_table.update({"value": "'u'"}, "key % 100 = 7 AND key >= 1000")
+    after = {f.path for f in kv_table._current_snapshot(kv_table._load()).data_files}
+    assert len(before) == len(after) == 2 and len(before & after) == 1
+    [kept] = before & after
+    assert pq.read_table(kept, columns=["key"]).column("key").to_pylist() == list(range(1000))
+    got = kv_table.scan()
+    assert got.count() == 2000
+    assert {r.key for r in got.filter("value = 'u'").collect()} == {
+        k for k in range(1000, 2000) if k % 100 == 7
+    }
+
+
+@pytest.mark.parametrize(
+    "check",
+    [
+        test_mor_small_delete,
+        test_cow_large_delete,
+        test_update,
+        test_cow_after_mor_does_not_resurrect,
+        test_cow_keeps_null_predicate_rows,
+        test_whole_file_match_blocked_by_nulls,
+        test_update_null_predicate_rows_kept,
+        test_update_rewrites_only_hit_files,
+        test_stale_delete_entries_dropped_on_rewrite,
+        test_relative_root_dml,
+        test_escaped_partition_value_dml,
+    ],
+    ids=lambda f: f.__name__,
+)
+def test_executor_route(check, request, executor_route):
+    check(**{n: request.getfixturevalue(n) for n in inspect.signature(check).parameters})
+
+
+def test_driver_route_follows_the_row_count_check():
+    """DELETE and UPDATE hold positions on the driver only inside the
+    branch of the metadata row-count check against the bound."""
+    from source_ast import calls, function_def, mentions
+
+    for fn in (LakeTable.delete, LakeTable.update):
+        node = function_def(fn)
+        held = calls(node, "_held_positions")
+        assert len(held) == 1
+        gates = [
+            n
+            for n in ast.walk(node)
+            if isinstance(n, ast.If)
+            and any(h in ast.walk(b) for b in n.body for h in held)
+        ]
+        assert any(
+            mentions(g.test, "DRIVER_ROWS") and mentions(g.test, "rows") for g in gates
+        )
+
+
+def test_routes_leave_identical_tables(spark, tmp_path, monkeypatch):
+    """The same DML on two copies of a table, one per route, leaves the
+    same rows, the same data-file layout and the same tombstones."""
+    import pyarrow.parquet as pq
+
+    from pg_datalake_spark.tables import tombstones
+
+    held = []
+    real = tombstones._held_positions
+    monkeypatch.setattr(
+        tombstones, "_held_positions", lambda *a: held.append(1) or real(*a)
+    )
+    batch = spark.range(400).coalesce(1).select(
+        F.col("id").alias("key"),
+        F.when(F.col("id") % 9 == 0, F.lit(None))
+        .otherwise(F.concat(F.lit("v"), F.col("id")))
+        .alias("value"),
+        (F.col("id") % 4).cast("int").alias("grp"),
+    )
+    tables = {}
+    for route in ("driver", "executor"):
+        t = LakeTable.create(spark, str(tmp_path / route), KV_SCHEMA)
+        t.append(batch)
+        t.append(batch.withColumn("key", F.col("key") + 400))
+        tables[route] = t
+
+    def state(t):
+        snap = t._current_snapshot(t._load())
+        order = {"file:" + f.path: i for i, f in enumerate(snap.data_files)}
+        tomb = set()
+        for d in snap.delete_files:
+            rows = pq.read_table(d.path).to_pydict()
+            tomb |= {(order.get(p), q) for p, q in zip(rows["file_path"], rows["pos"])}
+        scan = sorted(tuple(r) for r in t.scan().collect())
+        return scan, [f.rows for f in snap.data_files], tomb
+
+    steps = [
+        ("delete", "key % 13 = 0"),  # sparse in both files: MOR
+        ("delete", "key >= 700"),  # most of the second file: COW
+        ("delete", "value < 'v2'"),  # NULL rows do not match
+        ("update", "key < 50"),
+        ("delete", "grp = 1 AND key < 300"),
+    ]
+    for kind, pred in steps:
+        out = {}
+        for route, t in tables.items():
+            monkeypatch.setattr(
+                tombstones, "DRIVER_ROWS", 4_000_000 if route == "driver" else 0
+            )
+            n = len(held)
+            if kind == "delete":
+                out[route] = (t.delete(pred), state(t))
+            else:
+                t.update({"value": "concat(value, '!')"}, pred)
+                out[route] = (None, state(t))
+            assert len(held) == n + (route == "driver")
+        assert out["driver"] == out["executor"], (kind, pred)
+    assert out["driver"][1][2]  # tombstones were compared
