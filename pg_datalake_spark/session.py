@@ -91,6 +91,39 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a back-quoted SQL identifier. A projection spelled in
+    SQL reaches the JVM in one ``selectExpr`` call, where the same
+    projection built of Columns costs several round trips a column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_literal(value) -> str:
+    """A scalar (None, bool, int, float or str) as the SQL literal of the
+    type ``F.lit`` gives it. A string holding a quote or a backslash is
+    spelled as its UTF-8 bytes, which no string-escape setting reads
+    differently."""
+    import math
+
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "TRUE" if value else "FALSE"
+    if isinstance(value, int):
+        return str(value)
+    if isinstance(value, float):
+        if math.isnan(value):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(value):
+            return f"CAST('{'-' if value < 0 else ''}Infinity' AS DOUBLE)"
+        return f"{value!r}D"
+    if isinstance(value, str):
+        if "'" in value or "\\" in value:
+            return f"CAST(X'{value.encode().hex()}' AS STRING)"
+        return f"'{value}'"
+    raise TypeError(f"no SQL literal for {type(value).__name__}")
+
+
 def build_session(
     app_name: str = "pg_datalake_spark",
     cpus: int | None = None,

@@ -35,10 +35,11 @@ DELETION VECTORS (r8; PROTOCOL.md "Deletion Vectors" — the default
 row-delete mechanism of modern Delta writers) are fully applied on
 read: descriptors (inline ``"i"``, UUID sidecar
 ``"u"``, absolute ``"p"``) are decoded from their Z85 / portable-
-roaring-bitmap encoding (tables/dv_codec.py) and anti-joined on
-``(_metadata.file_path, _metadata.row_index)`` — the same
-merge-on-read shape as Iceberg position deletes. Where the decode runs
-follows the join strategy: tombstones within
+roaring-bitmap encoding (tables/dv_codec.py) and anti-joined on the
+raw ``(_metadata.file_path, _metadata.row_index)`` — the same
+merge-on-read shape as Iceberg position deletes. Each tombstone names
+its file as the URI Spark reports, so no row has its path decoded.
+Where the decode runs follows the join strategy: tombstones within
 :data:`~pg_datalake_spark.tables.tombstones.DRIVER_ROWS` are broadcast,
 so the driver decodes them and hands Spark one Arrow table; larger (or
 unknown) ones are decoded executor-side (``mapInPandas``) and shuffled.
@@ -70,7 +71,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pg_datalake_spark.session import local_frame
+from pg_datalake_spark.session import local_frame, sql_ident, sql_literal
 from pg_datalake_spark.tables import tombstones
 
 _LOG_DIR = "_delta_log"
@@ -776,27 +777,6 @@ def _make_abs(location: str):
     return _abs
 
 
-def _decoded_path_col():
-    """``_metadata.file_path`` as a normalized local filesystem path
-    column. Spark renders the path as a URI, so percent-encoding
-    survives (a space is ``%20``); the descriptor side (:func:`_make_abs`)
-    urllib-unquotes add.path — both sides must decode identically or
-    DV-deleted rows in encodable paths silently reappear. A literal
-    ``+`` is protected first (``url_decode`` is URLDecoder semantics,
-    which would turn a bare ``+`` into a space; ``unquote`` does not)."""
-    raw = F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/")
-    return F.url_decode(F.regexp_replace(raw, r"\+", "%2B"))
-
-
-def _partition_literal(value: str | None, dtype: T.DataType):
-    """Typed literal from a partitionValues entry (null stays null;
-    strings cast per the Delta partition-value serialization rules,
-    which match Spark's CAST for all primitive types)."""
-    if value is None:
-        return F.lit(None).cast(dtype)
-    return F.lit(value).cast(dtype)
-
-
 def _scan_plan(meta: dict):
     """Shared scan planning for the reader and the DV-delete scan:
     logical schema, partition columns, and — under COLUMN MAPPING
@@ -810,7 +790,11 @@ def _scan_plan(meta: dict):
     ``spark.sql.parquet.fieldId.read.enabled`` so the scan binds by id
     even when file column names differ from the log's physicalName
     (the point of id mode — renames never rewrite data). Returns
-    (schema, part_cols, by_type, phys, data_schema, out_cols)."""
+    (schema, part_cols, by_type, phys, data_schema, out_cols):
+    ``out_cols`` holds each data column's projection, in schema order,
+    as SQL text when the table has no column mapping (one
+    ``selectExpr`` call projects them all) and as a Column under it;
+    partition columns hold None (:func:`_scan_files` fills them)."""
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     part_cols = list(meta.get("partitionColumns") or [])
     by_type = {f.name: f.dataType for f in schema.fields}
@@ -869,12 +853,76 @@ def _scan_plan(meta: dict):
         ]
     )
     out_cols = [
-        F.col(f.name)
+        None
         if f.name in part_cols
+        else sql_ident(f.name)
+        if cm_mode == "none"
         else F.col(phys[f.name]).cast(f.dataType).alias(f.name)
         for f in schema.fields
     ]
     return schema, part_cols, by_type, phys, data_schema, out_cols
+
+
+# a scan's raw file coordinates: the DV anti-join key and a delete's
+# matched positions
+_FILE_POS = ["_metadata.file_path AS __file", "_metadata.row_index AS __pos"]
+
+
+def _scan_adds(
+    spark: SparkSession, plan: tuple, adds: list[dict], _abs, extra: list[str]
+) -> DataFrame:
+    """The union of :func:`_scan_files` over ``adds`` grouped by
+    partition tuple (keys are PHYSICAL names under column mapping):
+    one read per distinct tuple, the same fan-out the delta-spark
+    reader plans internally."""
+    _schema, part_cols, _by_type, phys, _data_schema, _out_cols = plan
+    groups: dict[tuple, list[str]] = {}
+    for a in adds:
+        pv = a.get("partitionValues") or {}
+        key = tuple(pv.get(phys[c], pv.get(c)) for c in part_cols)
+        groups.setdefault(key, []).append(_abs(a["path"]))
+    parts = [
+        _scan_files(spark, plan, files, key, extra)
+        for key, files in sorted(groups.items(), key=lambda kv: str(kv[0]))
+    ]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+def _scan_files(
+    spark: SparkSession, plan: tuple, files: list[str], key: tuple, extra: list[str]
+) -> DataFrame:
+    """One parquet read of ``files``, whose partition values are
+    ``key``, projected to the table's columns (partition columns as
+    typed literals of the log's values) and then the SQL expressions
+    ``extra``: one ``selectExpr`` call when the table has no column
+    mapping."""
+    schema, part_cols, by_type, _phys, data_schema, out_cols = plan
+    df = spark.read.schema(data_schema).parquet(*files)
+    # partition values are log metadata, not file content; their
+    # strings cast per the Delta serialization rules, which match
+    # Spark's CAST for all primitive types
+    lits = {
+        c: f"CAST({sql_literal(v)} AS {by_type[c].simpleString()})"
+        for c, v in zip(part_cols, key)
+    }
+    if all(isinstance(c, str) for c in out_cols if c is not None):
+        return df.selectExpr(
+            *[
+                c if c is not None else f"{lits[f.name]} AS {sql_ident(f.name)}"
+                for f, c in zip(schema.fields, out_cols)
+            ],
+            *extra,
+        )
+    return df.select(
+        *[
+            c if c is not None else F.expr(lits[f.name]).alias(f.name)
+            for f, c in zip(schema.fields, out_cols)
+        ],
+        *[F.expr(e) for e in extra],
+    )
 
 
 def read_delta_table(
@@ -918,121 +966,71 @@ def _dataframe_for_adds(
     read, OPTIMIZE's candidate-subset rewrite, and the change feed):
     per-partition-tuple parquet groups with typed literal partition
     columns, DV anti-join when any add carries a descriptor.
-    ``with_position=True`` keeps the normalized (__path, __pos) file
-    coordinates in the output — they must be selected AT the scan
-    (``_metadata`` does not survive a projection), so callers that
-    need positions cannot bolt them on afterwards."""
-    schema, part_cols, by_type, phys, data_schema, out_cols = _scan_plan(meta)
+    ``with_position=True`` keeps each row's raw file coordinates
+    (``__file``, the URI Spark reports, and ``__pos``) in the output —
+    they must be selected AT the scan (``_metadata`` does not survive a
+    projection), so callers that need positions cannot bolt them on
+    afterwards."""
+    plan = _scan_plan(meta)
     if _cm_mode(meta) == "id":
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     if not adds:
-        return local_frame(spark, [], schema)
+        return local_frame(spark, [], plan[0])
 
     _abs = _make_abs(location)
     has_dv = any(a.get("deletionVector") for a in adds)
-    meta_cols = (
-        [
-            # normalized data-file path + in-file row position, the
-            # anti-join key against the decoded deletion vectors
-            _decoded_path_col().alias("__path"),
-            F.col("_metadata.row_index").alias("__pos"),
-        ]
-        if has_dv or with_position
-        else []
-    )
-
-    if not part_cols:
-        df = spark.read.schema(data_schema).parquet(*[_abs(a["path"]) for a in adds])
-        out = df.select(*out_cols, *meta_cols)
-    else:
-        # Group files by partition tuple; attach typed literal partition
-        # columns per group (partition values are log metadata, not file
-        # content; keys are PHYSICAL names under column mapping).
-        # Union count = |distinct partition tuples|.
-        groups: dict[tuple, list[str]] = {}
-        for a in adds:
-            pv = a.get("partitionValues") or {}
-            key = tuple(pv.get(phys[c], pv.get(c)) for c in part_cols)
-            groups.setdefault(key, []).append(_abs(a["path"]))
-        parts = []
-        for key, files in sorted(groups.items(), key=lambda kv: str(kv[0])):
-            df = spark.read.schema(data_schema).parquet(*files)
-            for c, v in zip(part_cols, key):
-                df = df.withColumn(c, _partition_literal(v, by_type[c]))
-            parts.append(df.select(*out_cols, *meta_cols))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+    out = _scan_adds(spark, plan, adds, _abs, _FILE_POS if has_dv or with_position else [])
     if has_dv:
         out = _apply_deletion_vectors(spark, out, adds, location, _abs)
+        if not with_position:
+            out = out.drop("__file", "__pos")
     return out
 
 
 def _apply_deletion_vectors(
     spark: SparkSession, df: DataFrame, adds: list[dict], location: str, _abs
 ) -> DataFrame:
-    """Filter DV-deleted rows: decode every ``deletionVector``
-    descriptor into (data-file path, row position) tombstones and
-    anti-join on ``(_metadata.file_path, _metadata.row_index)`` — the
-    identical merge-on-read shape as Iceberg position deletes
-    (iceberg_external.py plan). Where the bitmaps are decoded follows
-    the join strategy. The total deleted cardinality is known exactly
-    from the descriptors: when it is within
+    """Filter DV-deleted rows: every ``deletionVector`` descriptor
+    becomes (data-file URI, row position) tombstones, anti-joined on the
+    raw ``(_metadata.file_path, _metadata.row_index)`` that ``df``
+    carries as ``__file``/``__pos`` — the same merge-on-read shape as
+    the LakeTable's and Iceberg's position deletes. Each file's URI is
+    spelled on the driver as Spark reports it
+    (:func:`~pg_datalake_spark.tables.tombstones.spark_uri`), so no row
+    has its path decoded. The total deleted cardinality is known
+    exactly from the descriptors: when it is within
     :data:`~pg_datalake_spark.tables.tombstones.DRIVER_ROWS` the
-    tombstones are broadcast, so the bitmaps are decoded on the
-    driver (an inline ``"i"`` DV is log bytes there already) and reach
-    Spark as one Arrow table — no Python worker starts. Past the bound,
-    or when a descriptor carries no ``cardinality``, the descriptors go
-    to the executors, which decode the bitmaps (``mapInPandas``) so the
-    driver never holds the position list, and the anti-join shuffles."""
+    driver decodes the bitmaps (an inline ``"i"`` DV is log bytes
+    there already) and broadcasts them as one Arrow table — no Python
+    worker starts. Past the bound, or when a descriptor carries no
+    ``cardinality``, the descriptors go to the executors, which decode
+    the bitmaps (``mapInPandas``) so the driver never holds the
+    position list, and the anti-join shuffles."""
+    from pg_datalake_spark.tables import dv_codec
+
     descs = [
-        (_abs(a["path"]), a["deletionVector"])
+        (tombstones.spark_uri(_abs(a["path"])), a["deletionVector"])
         for a in adds
         if a.get("deletionVector")
     ]
     cards = [d.get("cardinality") for _, d in descs]
     if None not in cards and sum(cards) <= tombstones.DRIVER_ROWS:
-        deletes = F.broadcast(_decoded_tombstones(spark, descs, location))
+        deletes = F.broadcast(
+            tombstones.frame(
+                spark,
+                [u for u, _ in descs],
+                [dv_codec.decode_descriptor_positions(d, location) for _, d in descs],
+            )
+        )
     else:
         deletes = _executor_tombstones(spark, descs, location)
-    return df.join(
-        deletes,
-        (F.col("__path") == F.col("__del_path"))
-        & (F.col("__pos") == F.col("__del_pos")),
-        "left_anti",
-    ).drop("__path", "__pos")
-
-
-_TOMBSTONE_SCHEMA = "__del_path string, __del_pos long"
-
-
-def _decoded_tombstones(
-    spark: SparkSession, descs: list[tuple[str, dict]], location: str
-) -> DataFrame:
-    """The (path, position) tombstones of ``descs``, decoded here on
-    the driver: numpy positions per file, one Arrow table in all."""
-    import numpy as np
-    import pyarrow as pa
-
-    from pg_datalake_spark.tables import dv_codec
-
-    positions = [
-        dv_codec.decode_descriptor_positions(d, location) for _, d in descs
-    ]
-    owner = np.repeat(np.arange(len(descs)), [len(p) for p in positions])
-    table = pa.table(
-        {
-            "__del_path": pa.array([p for p, _ in descs]).take(owner),
-            "__del_pos": pa.array(np.concatenate(positions), pa.int64()),
-        }
-    )
-    return local_frame(spark, table, _TOMBSTONE_SCHEMA)
+    return tombstones.anti_join(df, deletes)
 
 
 def _executor_tombstones(
     spark: SparkSession, descs: list[tuple[str, dict]], location: str
 ) -> DataFrame:
-    """The (path, position) tombstones of ``descs``, decoded on the
+    """The (file URI, position) tombstones of ``descs``, decoded on the
     executors: the driver ships only the descriptors."""
     rows = [
         (p, d["storageType"], d["pathOrInlineDv"], d.get("offset"), d["sizeInBytes"])
@@ -1067,7 +1065,7 @@ def _executor_tombstones(
                     {"__del_path": [r.path] * len(pos), "__del_pos": pos}
                 )
 
-    return desc_df.mapInPandas(decode, _TOMBSTONE_SCHEMA)
+    return desc_df.mapInPandas(decode, tombstones.SCHEMA)
 
 
 def delta_table_version(location: str) -> int:
@@ -1557,10 +1555,10 @@ def _physical_stage_args(meta: dict, df: DataFrame) -> tuple[DataFrame, list[str
     binds by field id, so a writer verb staging id-less files breaks
     every subsequent scan (r15 combo-fuzzer find, seed 20002: append /
     COW delete / update / merge / optimize all stage through here)."""
-    schema, part_cols, _bt, phys, _ds, _oc = _scan_plan(meta)
     cm = _cm_mode(meta)
-    if cm != "id" and all(phys[c] == c for c in phys):
-        return df, part_cols
+    if cm == "none":
+        return df, list(meta.get("partitionColumns") or [])
+    schema, part_cols, _bt, phys, _ds, _oc = _scan_plan(meta)
     id_meta: dict[str, dict] = {}
     if cm == "id":
         id_meta = {
@@ -1966,36 +1964,14 @@ def _delete_where_dv(
         # truncate → DV delete raised IndexError building the scan
         # union). No commit; the current version is returned.
         return state["version"]
-    schema, part_cols, by_type, phys, data_schema, out_cols = _scan_plan(meta)
     if _cm_mode(meta) == "id":
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     _abs = _make_abs(location)
-
-    # raw per-partition-group scan (NO existing-DV filtering: already-
-    # deleted rows may re-match; the per-file bitmap union of
-    # _serialize_file_dv absorbs them)
-    groups: dict[tuple, list[str]] = {}
-    for a in state["adds"].values():
-        pv = a.get("partitionValues") or {}
-        groups.setdefault(
-            tuple(pv.get(phys[c], pv.get(c)) for c in part_cols), []
-        ).append(_abs(a["path"]))
-    parts = []
-    for key, files in sorted(groups.items(), key=lambda kv: str(kv[0])):
-        df = spark.read.schema(data_schema).parquet(*files)
-        for c, v in zip(part_cols, key):
-            df = df.withColumn(c, _partition_literal(v, by_type[c]))
-        parts.append(
-            df.select(
-                _decoded_path_col().alias("__path"),
-                F.col("_metadata.row_index").alias("__pos"),
-                *out_cols,
-            )
-        )
-    scan = parts[0]
-    for p in parts[1:]:
-        scan = scan.unionByName(p)
-    matched = scan.filter(predicate).select("__path", "__pos")
+    # the raw files (NO existing-DV filtering: already-deleted rows may
+    # re-match; the per-file bitmap union of _serialize_file_dv absorbs
+    # them)
+    scan = _scan_adds(spark, _scan_plan(meta), state["adds"].values(), _abs, _FILE_POS)
+    matched = scan.filter(predicate).select("__file", "__pos")
 
     abs_to_add = {_abs(a["path"]): a for a in state["adds"].values()}
     if (rows := _physical_rows(state["adds"].values())) is not None and (
@@ -2117,7 +2093,7 @@ def _driver_dvs(
     collect, which builds every bitmap and sidecar itself."""
     paths = sorted(abs_to_add)
     positions = tombstones._held_positions(
-        matched, F.col("__path"), F.col("__pos"), paths
+        matched, [tombstones.spark_uri(p) for p in paths]
     )
     out = {}
     for path, pos in zip(paths, positions):
@@ -2144,22 +2120,23 @@ def _executor_dvs(
     iceberg_external.add_position_deletes_df)."""
     # prior descriptors: O(files) driver metadata, joined in so each
     # executor can union already-deleted positions into its bitmap
+    by_uri = {tombstones.spark_uri(p): p for p in abs_to_add}
     old_rows = [
-        (p, d["storageType"], d["pathOrInlineDv"], d.get("offset"), d["sizeInBytes"])
-        for p, a in sorted(abs_to_add.items())
-        if (d := a.get("deletionVector"))
+        (u, d["storageType"], d["pathOrInlineDv"], d.get("offset"), d["sizeInBytes"])
+        for u, p in sorted(by_uri.items())
+        if (d := abs_to_add[p].get("deletionVector"))
     ]
     old_schema = (
-        "__path string, o_st string, o_dv string, o_off long, o_size long"
+        "__file string, o_st string, o_dv string, o_off long, o_size long"
     )
     old_df = local_frame(spark, old_rows, old_schema)
-    keyed = matched.join(F.broadcast(old_df), "__path", "left")
+    keyed = matched.join(F.broadcast(old_df), "__file", "left")
 
     def serialize(key, pdf):
         import numpy as np
         import pandas as pd
 
-        path, o_st, o_dv, o_off, o_size = key
+        uri, o_st, o_dv, o_off, o_size = key
         prior = None
         if o_st is not None:
             # Null LONG group keys arrive as float NaN (Arrow null int64
@@ -2175,19 +2152,19 @@ def _executor_dvs(
         desc = _serialize_file_dv(
             pdf["__pos"].to_numpy(dtype=np.int64), prior, location, inline_threshold
         )
-        return pd.DataFrame([{"path": path, **desc}])
+        return pd.DataFrame([{"uri": uri, **desc}])
 
     desc_schema = (
-        "path string, storageType string, pathOrInlineDv string, "
+        "uri string, storageType string, pathOrInlineDv string, "
         "offset long, sizeInBytes long, cardinality long"
     )
     desc_rows = (
-        keyed.groupBy("__path", "o_st", "o_dv", "o_off", "o_size")
+        keyed.groupBy("__file", "o_st", "o_dv", "o_off", "o_size")
         .applyInPandas(serialize, desc_schema)
         .collect()  # O(touched files) descriptors — never row positions
     )
     return {
-        r["path"]: {
+        by_uri[r["uri"]]: {
             k: r[k]
             for k in (
                 "storageType", "pathOrInlineDv", "offset", "sizeInBytes", "cardinality"
@@ -3139,8 +3116,8 @@ def delta_changes(
                         a["deletionVector"], location
                     )
                 )
-                for p in sorted(new - old):
-                    new_pos.append((_abs(a["path"]), int(p)))
+                uri = tombstones.spark_uri(_abs(a["path"]))
+                new_pos += [(uri, int(p)) for p in sorted(new - old)]
             # strip the DV so the scan yields ALL rows (positions must
             # be selected AT the scan), then keep newly-deleted ones
             bare = [
@@ -3150,10 +3127,10 @@ def delta_changes(
             scan = _dataframe_for_adds(
                 spark, location, meta, bare, with_position=True
             )
-            pos_df = local_frame(spark, new_pos, "__path string, __pos long")
+            pos_df = local_frame(spark, new_pos, "__file string, __pos long")
             chunk = (
-                scan.join(F.broadcast(pos_df), ["__path", "__pos"])
-                .drop("__path", "__pos")
+                scan.join(F.broadcast(pos_df), ["__file", "__pos"])
+                .drop("__file", "__pos")
                 .select("*", F.lit("delete").alias("_change_type"))
             )
         else:

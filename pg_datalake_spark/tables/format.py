@@ -26,13 +26,15 @@ manifests), never row data. Planning reads only metadata: a write
 takes each new file's rows and min/max/null stats from its parquet
 footer on the driver, and a read gives Spark the schema the table
 records, so neither starts a Spark job of its own. Position deletes
-join on (_metadata.file_path, _metadata.row_index) — a broadcast
-anti-join when delete files are small, which is the common case. A
-DELETE or UPDATE whose candidate files hold at most
-``tombstones.DRIVER_ROWS`` rows (per the metadata) collects its matched
-positions in one job; the driver then picks MOR or COW per file and
-writes the position-delete file itself. Past that bound the executors
-count the matches and write the tombstones.
+join on the raw (_metadata.file_path, _metadata.row_index) as a
+broadcast anti-join; within ``tombstones.DRIVER_ROWS`` rows the driver
+reads them with pyarrow and hands Spark one Arrow table. A DELETE or
+UPDATE whose candidate files hold at most ``tombstones.DRIVER_ROWS``
+rows (per the metadata) collects the matched positions of the raw files
+in one job and drops those its held tombstones already delete; the
+driver then picks MOR or COW per file and writes the position-delete
+file itself. Past that bound the executors count the matches and
+write the tombstones.
 """
 
 from __future__ import annotations
@@ -52,7 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pg_datalake_spark.session import local_frame
+from pg_datalake_spark.session import local_frame, sql_ident, sql_literal
 from pg_datalake_spark.tables import tombstones
 
 COW_THRESHOLD = 0.2  # rewrite a file when >20% of its rows are deleted
@@ -201,7 +203,9 @@ class LakeTable:
             # check-then-replace pair is a TOCTOU race: two writers
             # could both pass the check and one snapshot would vanish)
             with open(path, "x") as f:
-                json.dump(meta, f, default=_df_to_dict)
+                # json.dumps runs the C encoder; json.dump streams through
+                # the pure-Python one, ~5x slower on a long snapshot list
+                f.write(json.dumps(meta, default=_df_to_dict))
         except FileExistsError:
             raise RuntimeError(
                 f"concurrent commit detected at version {new_version}"
@@ -489,14 +493,13 @@ class LakeTable:
             for fld in meta["fields"]:
                 phys = colmap.get(str(fld["id"]))
                 if phys is not None:
-                    cols.append(F.col(phys).alias(fld["name"]))
+                    cols.append(f"{sql_ident(phys)} AS {sql_ident(fld['name'])}")
                 else:
-                    cols.append(F.lit(fld.get("default")).cast(fld["type"]).alias(fld["name"]))
+                    default = sql_literal(fld.get("default"))
+                    cols.append(f"CAST({default} AS {fld['type']}) AS {sql_ident(fld['name'])}")
             parts.append(
-                df.select(
-                    *cols,
-                    F.col("_metadata.file_path").alias("__file"),
-                    F.col("_metadata.row_index").alias("__pos"),
+                df.selectExpr(
+                    *cols, "_metadata.file_path AS __file", "_metadata.row_index AS __pos"
                 )
             )
         out = parts[0]
@@ -504,39 +507,86 @@ class LakeTable:
             out = out.unionByName(p)
         return out
 
-    def _apply_deletes(self, df: DataFrame, snap: Snapshot) -> DataFrame:
-        pos = [d for d in snap.delete_files if d.content == "position"]
-        eqs = [d for d in snap.delete_files if d.content == "equality"]
-        if pos:
-            deletes = self.spark.read.schema("file_path string, pos long").parquet(
-                *[d.path for d in pos]
+    def _read_live(
+        self,
+        files: list[DataFile],
+        meta: dict,
+        snap: Snapshot,
+        held: dict | None = None,
+    ) -> DataFrame:
+        """:meth:`_read_mapped` of ``files`` less the rows the
+        snapshot's delete files remove. Within the tombstone bound the
+        position tombstones are held on the driver (``held``, when the
+        caller holds them already, else :meth:`_held_tombstones`) and
+        broadcast as one Arrow table; past it Spark reads the delete
+        files. Both join on the raw ``_metadata.file_path``."""
+        df = self._read_mapped(files, meta)
+        if held is None:
+            held = self._held_tombstones(snap, files)
+        if held is None:
+            deletes = (
+                self.spark.read.schema("file_path string, pos long")
+                .parquet(*[d.path for d in _position_deletes(snap, files)])
+                .selectExpr("file_path AS __del_path", "pos AS __del_pos")
             )
-            df = df.join(
-                F.broadcast(deletes),
-                (F.col("__file") == F.col("file_path")) & (F.col("__pos") == F.col("pos")),
-                "left_anti",
+            df = tombstones.anti_join(df, F.broadcast(deletes))
+        elif held:
+            live = [f.path for f in files if f.path in held]
+            deletes = tombstones.frame(
+                self.spark,
+                [tombstones.spark_uri(p) for p in live],
+                [held[p] for p in live],
             )
-        for d in eqs:
+            df = tombstones.anti_join(df, F.broadcast(deletes))
+        paths = {f.path for f in files}
+        for d in snap.delete_files:
             cols = d.equality_columns or []
-            # a delete with no captured scope deletes nothing (and an
-            # empty isin() below would throw) — skip it
-            if not cols or not d.applies_to:
+            # a delete with no captured scope deletes nothing — skip it
+            if d.content != "equality" or not cols or paths.isdisjoint(d.applies_to or []):
                 continue
             keys = (
                 self.spark.read.schema(_written_schema(d.path))
                 .parquet(d.path)
-                .select(*[F.col(c).alias(f"__eq_{c}") for c in cols])
+                .selectExpr(*[f"{sql_ident(c)} AS {sql_ident('__eq_' + c)}" for c in cols])
                 .dropDuplicates()
             )
             # in-scope rows matching a key row (null-safe on every
             # column) are removed; rows from files appended after the
             # delete commit bypass it entirely
-            scoped = _path_col(F.col("__file")).isin(*d.applies_to)
-            cond = scoped
-            for c in cols:
-                cond = cond & F.col(c).eqNullSafe(F.col(f"__eq_{c}"))
-            df = df.join(F.broadcast(keys), cond, "left_anti")
+            scope = ", ".join(sql_literal(tombstones.spark_uri(p)) for p in d.applies_to)
+            cond = " AND ".join(
+                [f"__file IN ({scope})"]
+                + [f"{sql_ident(c)} <=> {sql_ident('__eq_' + c)}" for c in cols]
+            )
+            df = df.join(F.broadcast(keys), F.expr(cond), "left_anti")
         return df
+
+    def _held_tombstones(self, snap: Snapshot, files: list[DataFile]) -> dict | None:
+        """``{data path: ascending deleted positions}`` for those of
+        ``files`` that the snapshot's position-delete files name, read
+        here with pyarrow; None when the delete files that apply to
+        ``files`` hold more than ``tombstones.DRIVER_ROWS`` rows."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        dels = _position_deletes(snap, files)
+        if sum(d.rows for d in dels) > tombstones.DRIVER_ROWS:
+            return None
+        if not dels:
+            return {}
+        uris = pa.array([tombstones.spark_uri(f.path) for f in files])
+        owners, positions = [], []
+        for d in dels:
+            t = pq.read_table(d.path, columns=["file_path", "pos"])
+            owner = pc.fill_null(pc.index_in(t["file_path"], value_set=uris), -1)
+            owners.append(owner.to_numpy())
+            positions.append(t["pos"].to_numpy())
+        owner, pos = np.concatenate(owners), np.concatenate(positions)
+        keep = owner >= 0
+        split = tombstones.by_file(owner[keep], pos[keep], len(files))
+        return {f.path: p for f, p in zip(files, split) if len(p)}
 
     def _partition_prune(
         self, files: list[DataFile], filters: list[tuple], spec: list[PartitionField]
@@ -645,10 +695,10 @@ class LakeTable:
             files = self._partition_prune(files, filters, spec)
         if not files:
             return local_frame(self.spark, [], self._schema_from(meta))
-        df = self._apply_deletes(self._read_mapped(files, meta), snap)
+        df = self._read_live(files, meta, snap)
         if filters:
             df = df.filter(_filters_to_column(filters))
-        return df.select(*[f["name"] for f in meta["fields"]])
+        return df.selectExpr(*[sql_ident(f["name"]) for f in meta["fields"]])
 
     def _resolve_snapshot(self, meta, snapshot_id, as_of_timestamp_ms) -> Snapshot | None:
         snaps = [_snapshot_from_dict(s) for s in meta["snapshots"]]
@@ -673,9 +723,12 @@ class LakeTable:
            when >20% of the file's rows match.
 
         When the tier-3 files hold at most ``tombstones.DRIVER_ROWS``
-        rows, the matched positions come to the driver in one job and
-        the driver writes the position-delete file; past it the
-        executors count the matches and write the tombstones.
+        rows, and so do the delete files that apply to them, the
+        matched positions of the raw files come to the driver in one
+        job; the driver drops those its tombstones already delete and
+        writes the position-delete file. Past it the executors count
+        the matches of the tombstone-filtered files and write the
+        tombstones.
 
         Returns {"dropped": n, "mor": n, "cow": n}.
         """
@@ -709,33 +762,30 @@ class LakeTable:
         new_files = list(keep_files)
         new_deletes = list(cur.delete_files)
         if candidates:
-            # apply existing MOR tombstones first: already-deleted rows
-            # must count as gone and must NOT re-enter a COW rewrite
-            df = (
-                self._apply_deletes(self._read_mapped(candidates, meta), cur)
-                .withColumnRenamed("__file", "file_path")
-                .withColumnRenamed("__pos", "pos")
-            )
-            matched = df.filter(predicate).select("file_path", "pos")
             held: dict | None = None
-            if sum(f.rows for f in candidates) <= tombstones.DRIVER_ROWS:
+            tombs: dict | None = None
+            if sum(f.rows for f in candidates) <= tombstones.DRIVER_ROWS and (
+                (tombs := self._held_tombstones(cur, candidates)) is not None
+            ):
                 # within the bound the driver holds every matched position
-                # and writes the tombstones itself; past it the executors
-                # count and write them, and no position reaches the driver
-                positions = tombstones._held_positions(
-                    matched,
-                    _path_col(F.col("file_path")),
-                    F.col("pos"),
-                    [f.path for f in candidates],
+                # of the raw files and drops the already-deleted ones, which
+                # must not count and must not re-enter a COW rewrite; past
+                # it the executors count and write them, and no position
+                # reaches the driver
+                found = tombstones._held_positions(
+                    self._read_mapped(candidates, meta).filter(predicate),
+                    [tombstones.spark_uri(f.path) for f in candidates],
                 )
-                held = {f.path: p for f, p in zip(candidates, positions)}
+                held = {
+                    f.path: tombstones.subtract(p, tombs.get(f.path))
+                    for f, p in zip(candidates, found)
+                }
                 counts = {path: len(p) for path, p in held.items()}
             else:
+                matched = self._read_live(candidates, meta, cur).filter(predicate)
                 counts = {
-                    _strip_scheme(r["file_path"]): r["n"]
-                    for r in matched.groupBy("file_path")
-                    .agg(F.count("*").alias("n"))
-                    .collect()
+                    _strip_scheme(r["__file"]): r["n"]
+                    for r in matched.groupBy("__file").agg(F.count("*").alias("n")).collect()
                 }
             cow_files = [
                 f for f in candidates if counts.get(f.path, 0) / f.rows > COW_THRESHOLD
@@ -762,7 +812,7 @@ class LakeTable:
                 # NOT(pred) is NULL for NULL-predicate rows — those rows
                 # did not match the delete and must be kept
                 kept = (
-                    self._apply_deletes(self._read_mapped(cow_files, meta), cur)
+                    self._read_live(cow_files, meta, cur, tombs)
                     .filter(F.coalesce(F.expr(f"NOT ({predicate})"), F.lit(True)))
                     .drop("__file", "__pos")
                 )
@@ -780,21 +830,10 @@ class LakeTable:
         (file_path, pos) as the Iceberg delete-file convention asks.
         ``file_path`` is spelled as Spark reports ``_metadata.file_path``
         (``file:`` and the %-escaped path), which a scan joins it on."""
-        import numpy as np
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        hadoop_path = self.spark._jvm.org.apache.hadoop.fs.Path
-        files = sorted(
-            ("file:" + hadoop_path(f.path).toUri().toString(), f.path) for f in mor_files
-        )
-        owner = np.repeat(np.arange(len(files)), [len(held[p]) for _, p in files])
-        table = pa.table(
-            {
-                "file_path": pa.array([uri for uri, _ in files]).take(owner),
-                "pos": pa.array(np.concatenate([held[p] for _, p in files]), pa.int64()),
-            }
-        )
+        files = sorted((tombstones.spark_uri(f.path), f.path) for f in mor_files)
+        table = tombstones.arrow_table([u for u, _ in files], [held[p] for _, p in files])
         path = os.path.join(self.root, "deletes", f"d-{uuid.uuid4().hex[:12]}.parquet")
         pq.write_table(table, path)
         return [
@@ -816,8 +855,10 @@ class LakeTable:
 
         del_dir = os.path.join(self.root, "deletes", f"d-{uuid.uuid4().hex[:12]}")
         keep_paths = {f.path for f in mor_files}
+        uris = ", ".join(sql_literal(tombstones.spark_uri(p)) for p in keep_paths)
         (
-            matched.filter(_path_col(F.col("file_path")).isin(*keep_paths))
+            matched.filter(f"__file IN ({uris})")
+            .selectExpr("__file AS file_path", "__pos AS pos")
             .repartition("file_path")
             .sortWithinPartitions("file_path", "pos")
             .write.parquet(del_dir)
@@ -906,17 +947,24 @@ class LakeTable:
 
         new_files = list(keep)
         if candidates:
-            df = self._apply_deletes(self._read_mapped(candidates, meta), cur)
-            matched = df.filter(predicate)
-            if sum(f.rows for f in candidates) <= tombstones.DRIVER_ROWS:
-                positions = tombstones._held_positions(
-                    matched,
-                    _path_col(F.col("__file")),
-                    F.col("__pos"),
-                    [f.path for f in candidates],
+            tombs: dict | None = None
+            if sum(f.rows for f in candidates) <= tombstones.DRIVER_ROWS and (
+                (tombs := self._held_tombstones(cur, candidates)) is not None
+            ):
+                # the probe reads the raw files and the driver drops the
+                # positions its tombstones already delete; the rewrite
+                # applies the same held tombstones
+                found = tombstones._held_positions(
+                    self._read_mapped(candidates, meta).filter(predicate),
+                    [tombstones.spark_uri(f.path) for f in candidates],
                 )
-                hit_paths = {f.path for f, p in zip(candidates, positions) if len(p)}
+                hit_paths = {
+                    f.path
+                    for f, p in zip(candidates, found)
+                    if len(tombstones.subtract(p, tombs.get(f.path)))
+                }
             else:
+                matched = self._read_live(candidates, meta, cur).filter(predicate)
                 hit_paths = {
                     _strip_scheme(r["__file"])
                     for r in matched.select("__file").distinct().collect()
@@ -924,22 +972,17 @@ class LakeTable:
             new_files += [f for f in candidates if f.path not in hit_paths]
             hit = [f for f in candidates if f.path in hit_paths]
             if hit:
-                rows = self._apply_deletes(self._read_mapped(hit, meta), cur).drop(
-                    "__file", "__pos"
-                )
+                rows = self._read_live(hit, meta, cur, tombs)
                 # NULL predicate rows did not match → keep original values
-                matched = F.coalesce(F.expr(predicate), F.lit(False))
-                cols = []
-                for fld in meta["fields"]:
-                    c = fld["name"]
-                    if c in set_exprs:
-                        cols.append(
-                            F.when(matched, F.expr(set_exprs[c])).otherwise(F.col(c)).alias(c)
-                        )
-                    else:
-                        cols.append(F.col(c))
+                cols = [
+                    f"CASE WHEN coalesce(({predicate}), false) THEN ({set_exprs[c]}) "
+                    f"ELSE {sql_ident(c)} END AS {sql_ident(c)}"
+                    if c in set_exprs
+                    else sql_ident(c)
+                    for c in (fld["name"] for fld in meta["fields"])
+                ]
                 rw_dir = os.path.join(self.root, "data", f"u-{uuid.uuid4().hex[:12]}")
-                self._write_data(rows.select(*cols), rw_dir, spec)
+                self._write_data(rows.selectExpr(*cols), rw_dir, spec)
                 new_files += self._collect_file_entries(rw_dir, spec, meta)
         # entries for carried-over files still apply; _new_snapshot
         # drops those that pointed only at rewritten files
@@ -988,7 +1031,7 @@ class LakeTable:
         # reject multiple matches.
         per_key = source.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n")).alias("src")
         if files:
-            tgt = self._apply_deletes(self._read_mapped(files, meta), cur).alias("tgt")
+            tgt = self._read_live(files, meta, cur).alias("tgt")
             probe = per_key.join(tgt, key_cond("src", "tgt"), "left").select(
                 "src.__n", "tgt.__file"
             )
@@ -1022,7 +1065,7 @@ class LakeTable:
         out = None
         if rewrite:
             rows = (
-                self._apply_deletes(self._read_mapped(hit, meta), cur)
+                self._read_live(hit, meta, cur)
                 .drop("__file", "__pos")
                 .withColumn("__t", F.lit(True))
                 .alias("tgt")
@@ -1044,7 +1087,7 @@ class LakeTable:
         elif n_inserted:
             # only rows of the hit files can match a source key
             if hit:
-                hit_keys = self._apply_deletes(self._read_mapped(hit, meta), cur).alias("tgt")
+                hit_keys = self._read_live(hit, meta, cur).alias("tgt")
                 src = src.join(hit_keys, key_cond("src", "tgt"), "left_anti")
             out = src.select(*[inserted(c).alias(c) for c in types])
 
@@ -1134,7 +1177,7 @@ class LakeTable:
             inputs = list(cur.data_files)
             if not inputs:
                 return 0
-            df = self._apply_deletes(self._read_mapped(inputs, meta), cur)
+            df = self._read_live(inputs, meta, cur)
             total_bytes = sum(f.bytes for f in inputs)
             n_out = max(2, int(total_bytes / (target_file_mb * 1024 * 1024)))
             rw_dir = os.path.join(self.root, "data", f"z-{uuid.uuid4().hex[:12]}")
@@ -1153,7 +1196,7 @@ class LakeTable:
             return 0
         big = [f for f in cur.data_files if f not in small]
         rw_dir = os.path.join(self.root, "data", f"c-{uuid.uuid4().hex[:12]}")
-        df = self._apply_deletes(self._read_mapped(small, meta), cur)
+        df = self._read_live(small, meta, cur)
         total_bytes = sum(f.bytes for f in small)
         n_out = max(1, int(total_bytes / (target_file_mb * 1024 * 1024)))
         spec = self._partition_spec(meta)
@@ -1285,6 +1328,19 @@ class LakeTable:
 # ---------------------------------------------------------------------------
 
 
+def _position_deletes(snap: Snapshot, files: list[DataFile]) -> list[DeleteFile]:
+    """The snapshot's position-delete files that may name a row of
+    ``files``: those whose ``applies_to`` lists one of them, and those
+    of older tables, which record no ``applies_to``."""
+    paths = {f.path for f in files}
+    return [
+        d
+        for d in snap.delete_files
+        if d.content == "position"
+        and (d.applies_to is None or not paths.isdisjoint(d.applies_to))
+    ]
+
+
 def _transform_sql(p: PartitionField, lit: str) -> str:
     if p.transform == "identity":
         return lit
@@ -1320,14 +1376,6 @@ def _strip_scheme(p: str) -> str:
     from urllib.parse import unquote, urlparse
 
     return unquote(urlparse(p).path) if p.startswith("file:") else p
-
-
-def _path_col(c: F.Column) -> F.Column:
-    """``_strip_scheme`` as a Column expression. ``url_decode`` is form
-    decoding, which reads '+' as a space, so a literal '+' is escaped
-    first."""
-    bare = F.regexp_replace(c, "^file:(//)?", "")
-    return F.url_decode(F.regexp_replace(bare, "\\+", "%2B"))
 
 
 def _local_path(p: str) -> str:

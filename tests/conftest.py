@@ -31,7 +31,7 @@ def spark():
 
 @pytest.fixture
 def executor_route(monkeypatch):
-    """Row-level deletes and DV reads take the executor route: the
+    """Row-level deletes and tombstone reads take the executor route: the
     tombstone bound is pinned to 0, and holding positions on the driver
     fails the test."""
     from pg_datalake_spark.tables import tombstones

@@ -458,7 +458,7 @@ def test_dv_delete_source_has_no_row_collect():
     assert len(collects) == 1 and calls(node, "applyInPandas")
     assert not mentions(node, "toPandas")
     # the one collect is not of the row-position projection
-    assert not method_calls(collects[0].func.value, "select", "__path", "__pos")
+    assert not method_calls(collects[0].func.value, "select", "__file", "__pos")
 
 
 def test_read_files_dispatch_uses_log_reader_offline(spark, delta_orders):

@@ -842,9 +842,11 @@ def test_footer_stats_other_writer_keeps_spark_aggregation(spark, tmp_path, monk
 def test_write_verbs_start_only_their_own_jobs(spark, tmp_path):
     """append runs exactly the jobs of writing its frame (no stats or
     schema job). Within the tombstone bound a MOR-only DELETE is one
-    collect and an UPDATE over a table with position deletes needs at
-    most 4 jobs; a MERGE over such a table needs at most 9: one probe
-    query and one write."""
+    collect, also over a table that already has position deletes (the
+    driver holds them and reads no delete file in Spark), and an UPDATE
+    over such a table needs at most 3 jobs: its probe, and the broadcast
+    and the write of its rewrite. A MERGE over such a table needs at
+    most 9: one probe query and one write."""
     t = LakeTable.create(spark, str(tmp_path / "jobs"), KV_SCHEMA)
     batch = make_kv(spark, n=2000)
     t.append(batch)
@@ -854,7 +856,12 @@ def test_write_verbs_start_only_their_own_jobs(spark, tmp_path):
     # position deletes the update and the merge must apply
     delete = spark_work(spark, lambda: t.delete("key >= 100 AND key < 150"))
     assert delete.jobs == 1 and delete.result == {"dropped": 0, "mor": 1, "cow": 0}
-    assert jobs_in_group(spark, lambda: t.update({"grp": "9"}, "key >= 2000 AND key < 2010")) <= 4
+    # overlaps the first: its already-deleted rows do not count again
+    again = spark_work(spark, lambda: t.delete("key >= 140 AND key < 160"))
+    assert again.jobs == 1 and again.result == {"dropped": 0, "mor": 1, "cow": 0}
+    [second] = t._current_snapshot(t._load()).delete_files[1:]
+    assert second.rows == 10
+    assert jobs_in_group(spark, lambda: t.update({"grp": "9"}, "key >= 2000 AND key < 2010")) <= 3
     assert t.scan().filter("grp = 9").count() == 10
     src = spark.range(3900, 4100).coalesce(1).select(
         F.col("id").alias("key"), F.lit("m").alias("value"), F.lit(7).alias("grp")
@@ -864,8 +871,29 @@ def test_write_verbs_start_only_their_own_jobs(spark, tmp_path):
     )
     assert jobs <= 9
     got = t.scan()
-    assert got.count() == 4000 - 50 + 100
+    assert got.count() == 4000 - 60 + 100
     assert got.filter("value = 'm'").count() == 200
+
+
+def test_commit_writes_what_json_dump_writes(spark, kv_table):
+    """A commit serializes with ``json.dumps`` (the C encoder) and
+    writes the same bytes as ``json.dump`` to the file would."""
+    import io
+    import json
+
+    from pg_datalake_spark.tables.format import DataFile, _df_to_dict
+
+    kv_table.delete("key % 11 = 0 AND key < 100")
+    meta = kv_table._load()
+    # a dataclass, non-ASCII text and a NaN bound exercise the encoder
+    meta["snapshots"][-1]["data_files"].append(
+        DataFile(path="/tmp/ü b.parquet", rows=1, bytes=2, stats={"x": [float("nan"), 1.5, 0]})
+    )
+    want = io.StringIO()
+    json.dump({k: v for k, v in meta.items() if not k.startswith("_")}, want, default=_df_to_dict)
+    kv_table._commit(meta, meta["_version"])
+    with open(kv_table._meta_path(meta["_version"] + 1), encoding="utf-8") as f:
+        assert f.read() == want.getvalue()
 
 
 def test_nan_bound_prunes_nothing(spark, tmp_path):
