@@ -223,40 +223,22 @@ def jaccard_verify_shingles(
     sh: DataFrame,
     id_col: str,
     threshold: float = 0.5,
-    broadcast_pairs: bool | None = None,
-    broadcast_limit: int = 2_000_000,
 ) -> DataFrame:
     """Exact shingle-set Jaccard on candidate pairs against a prepared
     (id, sh) frame; keep >= threshold. Joining shingle sets only for
     LSH candidates keeps this linear in |candidates|.
 
-    Candidates are USUALLY tiny relative to the corpus, and
-    broadcasting them lets the shingle side stream through two
-    broadcast-hash joins in one stage — but on a dup-heavy corpus the
-    candidate set can exceed broadcast limits, so the hint is
-    CONDITIONAL (r9 judge note): ``broadcast_pairs=None`` persists the
-    candidate frame and takes a cheap count (reused by the joins, so
-    nothing is computed twice); ≤ ``broadcast_limit`` rows (two ids
-    each — comfortably under the 8 GB broadcast ceiling) get the hint,
-    anything larger is left to AQE's runtime join planning. Pass
-    True/False to skip the count and force a branch.
-
-    r16 note: with the engine's derived AQE advisory in place, the
-    ``False`` branch (no count job, no persist, AQE converts to a
-    broadcast join at runtime when the materialized pair side is
-    small) measured FASTER end-to-end than the count-based hint and
-    leaves nothing persisted — prefer it when the caller does not
-    need the hard no-shuffle-map-write guarantee on the shingle side."""
-    if broadcast_pairs is None:
-        pairs = pairs.persist()
-        broadcast_pairs = pairs.count() <= broadcast_limit
-    left = F.broadcast(pairs) if broadcast_pairs else pairs
+    The join strategy is left to AQE: when the materialized pair side
+    is small it becomes a broadcast join at runtime. r16 measured this
+    faster end-to-end than persisting the candidates and counting them
+    to pick a static broadcast hint, it never force-broadcasts an
+    unbounded pair set, and it leaves nothing persisted."""
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     return (
-        left.join(a, "id_a")
+        pairs.join(a, "id_a")
         .join(b, "id_b")
         .select(
             "id_a",
@@ -267,13 +249,6 @@ def jaccard_verify_shingles(
     )
 
 
-def jaccard_verify(
-    pairs: DataFrame, df: DataFrame, id_col: str, text_col: str = "text", threshold: float = 0.5
-) -> DataFrame:
-    """jaccard_verify_shingles over freshly computed shingles."""
-    return jaccard_verify_shingles(pairs, with_shingles(df, id_col, text_col), id_col, threshold)
-
-
 def minhash_lsh_dedup_pairs(
     df: DataFrame,
     id_col: str,
@@ -282,7 +257,6 @@ def minhash_lsh_dedup_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     max_bucket: int | None = 4096,
-    persist_shingles: bool = False,
 ) -> DataFrame:
     """End-to-end near-dup pairs: shingle → minhash → LSH band join →
     exact-Jaccard verification.
@@ -301,27 +275,16 @@ def minhash_lsh_dedup_pairs(
       never risks force-broadcasting an unbounded pair set (the r9
       hot-corpus concern) and nothing stays persisted after the query
       returns (the r15 judge's §5 leak note).
-    - The shingle frame is no longer persisted by default: its three
-      uses (signatures + both verify probe sides) recompute a cheap
-      narrow string map, vs pinning a corpus-sized array cache
-      (persist 1.39 s vs recompute 1.24 s at sf0.1; §5 says cache only
-      when recompute is dearer than the memory pressure). At sf1 the
-      trade flips (3× shingling ≈ +5 s) — a consumer running ONE pass
-      over a big corpus can set ``persist_shingles=True`` and OWN the
-      lifecycle: the persisted frame rides the returned DataFrame as
-      ``._pg_scratch``; call ``.unpersist()`` on it after the result
-      is consumed. The default stays False so the query registry
-      leaks nothing and every bench rep computes honestly.
+    - The shingle frame is not persisted: its three uses (signatures +
+      both verify probe sides) recompute a cheap narrow string map, vs
+      pinning a corpus-sized array cache (persist 1.39 s vs recompute
+      1.24 s at sf0.1; §5 says cache only when recompute is dearer than
+      the memory pressure), and the query registry leaks nothing.
     """
     sh = with_shingles(df, id_col, text_col)
-    if persist_shingles:
-        sh = sh.persist()
     sigs = signatures_from_shingles(sh.filter(F.size("sh") > 0), id_col, num_perms)
     cands = lsh_candidate_pairs(sigs, id_col, num_perms, bands, max_bucket)
-    out = jaccard_verify_shingles(cands, sh, id_col, threshold, broadcast_pairs=False)
-    if persist_shingles:
-        out._pg_scratch = sh
-    return out
+    return jaccard_verify_shingles(cands, sh, id_col, threshold)
 
 
 # ---------------------------------------------------------------------------

@@ -181,7 +181,4 @@ def st09(spark: SparkSession, sf_dir: str) -> DataFrame:
     # schema inference would fail instead of yielding an empty frame
     pairs = spark.read.schema("id_a long, id_b long").parquet(sink_dir).distinct()
     sh = with_shingles(docs, "doc_id", "text")
-    # broadcast_pairs=False (r16): AQE's runtime join planning handles
-    # the tiny sink-side pair set without the count probe, and nothing
-    # stays persisted in the session after the query returns (§5)
-    return jaccard_verify_shingles(pairs, sh, "doc_id", threshold=0.5, broadcast_pairs=False)
+    return jaccard_verify_shingles(pairs, sh, "doc_id", threshold=0.5)

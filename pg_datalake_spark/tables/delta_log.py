@@ -759,7 +759,9 @@ def _cm_mode(meta: dict) -> str:
 def _norm_location(location: str) -> str:
     """Absolute table root for local paths — a relative ``location``
     would otherwise never match the absolute paths that
-    ``_metadata.file_path`` reports."""
+    ``_metadata.file_path`` reports, and Spark would resolve it against
+    the JVM's working directory, not the Python process's. Every entry
+    point that writes through Spark or reads ``_metadata`` calls it."""
     return location if "://" in location else os.path.abspath(location)
 
 
@@ -1451,6 +1453,7 @@ def write_delta_table(
     ``"id"`` (r9) additionally stamps ``parquet.field.id`` into the
     data files (``spark.sql.parquet.fieldId.write.enabled``) and sets
     mode "id" — the reader then binds by field id, not name."""
+    location = _norm_location(location)
     os.makedirs(location, exist_ok=True)
     configuration = dict(configuration or {})
     proto_ver = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -1611,6 +1614,7 @@ def append_delta(
     mid-flight) leaves orphan data files that vacuum_delta reclaims."""
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("pass txn_app_id AND txn_version together")
+    location = _norm_location(location)
     spark = df.sparkSession
     state = _snapshot_state(spark, location, None)
     if (
@@ -2201,6 +2205,7 @@ def write_delta_checkpoint(
     # need_stats: re-serializing actions must carry `stats` forward —
     # a checkpoint that drops stats.numRecords from DV adds violates
     # the writer requirement the JSON log upholds.
+    location = _norm_location(location)
     state = _snapshot_state(spark, location, None, need_stats=True)
     version = state["version"]
     proto = state["protocol"] or {"minReaderVersion": 1, "minWriterVersion": 2}

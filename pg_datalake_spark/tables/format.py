@@ -28,10 +28,11 @@ footer on the driver, and a read gives Spark the schema the table
 records, so neither starts a Spark job of its own. Position deletes
 join on the raw (_metadata.file_path, _metadata.row_index) as a
 broadcast anti-join; within ``tombstones.DRIVER_ROWS`` rows the driver
-reads them with pyarrow and hands Spark one Arrow table. A DELETE or
-UPDATE whose candidate files hold at most ``tombstones.DRIVER_ROWS``
-rows (per the metadata) collects the matched positions of the raw files
-in one job and drops those its held tombstones already delete; the
+reads them with pyarrow and hands Spark one Arrow table, through the
+``tombstones.hold``/``drop_positions`` that external Iceberg reads
+share. A DELETE or UPDATE whose candidate files hold at most
+``tombstones.DRIVER_ROWS`` rows (per the metadata) collects the
+matched positions of the raw files in one job and drops those its held tombstones already delete; the
 driver then picks MOR or COW per file and writes the position-delete
 file itself. Past that bound the executors count the matches and
 write the tombstones.
@@ -523,21 +524,9 @@ class LakeTable:
         df = self._read_mapped(files, meta)
         if held is None:
             held = self._held_tombstones(snap, files)
-        if held is None:
-            deletes = (
-                self.spark.read.schema("file_path string, pos long")
-                .parquet(*[d.path for d in _position_deletes(snap, files)])
-                .selectExpr("file_path AS __del_path", "pos AS __del_pos")
-            )
-            df = tombstones.anti_join(df, F.broadcast(deletes))
-        elif held:
-            live = [f.path for f in files if f.path in held]
-            deletes = tombstones.frame(
-                self.spark,
-                [tombstones.spark_uri(p) for p in live],
-                [held[p] for p in live],
-            )
-            df = tombstones.anti_join(df, F.broadcast(deletes))
+        uris = [tombstones.spark_uri(f.path) for f in files]
+        dels = [d.path for d in _position_deletes(snap, files)]
+        df = tombstones.drop_positions(df, uris, uris, dels, held)
         paths = {f.path for f in files}
         for d in snap.delete_files:
             cols = d.equality_columns or []
@@ -562,31 +551,15 @@ class LakeTable:
         return df
 
     def _held_tombstones(self, snap: Snapshot, files: list[DataFile]) -> dict | None:
-        """``{data path: ascending deleted positions}`` for those of
-        ``files`` that the snapshot's position-delete files name, read
-        here with pyarrow; None when the delete files that apply to
-        ``files`` hold more than ``tombstones.DRIVER_ROWS`` rows."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
+        """``{data file URI: ascending deleted positions}`` for those of
+        ``files`` that the snapshot's position-delete files name
+        (:func:`tombstones.hold`); None past ``tombstones.DRIVER_ROWS``."""
         dels = _position_deletes(snap, files)
-        if sum(d.rows for d in dels) > tombstones.DRIVER_ROWS:
-            return None
-        if not dels:
-            return {}
-        uris = pa.array([tombstones.spark_uri(f.path) for f in files])
-        owners, positions = [], []
-        for d in dels:
-            t = pq.read_table(d.path, columns=["file_path", "pos"])
-            owner = pc.fill_null(pc.index_in(t["file_path"], value_set=uris), -1)
-            owners.append(owner.to_numpy())
-            positions.append(t["pos"].to_numpy())
-        owner, pos = np.concatenate(owners), np.concatenate(positions)
-        keep = owner >= 0
-        split = tombstones.by_file(owner[keep], pos[keep], len(files))
-        return {f.path: p for f, p in zip(files, split) if len(p)}
+        return tombstones.hold(
+            [tombstones.spark_uri(f.path) for f in files],
+            [d.path for d in dels],
+            sum(d.rows for d in dels),
+        )
 
     def _partition_prune(
         self, files: list[DataFile], filters: list[tuple], spec: list[PartitionField]
@@ -772,13 +745,13 @@ class LakeTable:
                 # must not count and must not re-enter a COW rewrite; past
                 # it the executors count and write them, and no position
                 # reaches the driver
+                uris = [tombstones.spark_uri(f.path) for f in candidates]
                 found = tombstones._held_positions(
-                    self._read_mapped(candidates, meta).filter(predicate),
-                    [tombstones.spark_uri(f.path) for f in candidates],
+                    self._read_mapped(candidates, meta).filter(predicate), uris
                 )
                 held = {
-                    f.path: tombstones.subtract(p, tombs.get(f.path))
-                    for f, p in zip(candidates, found)
+                    f.path: tombstones.subtract(p, tombs.get(u))
+                    for f, u, p in zip(candidates, uris, found)
                 }
                 counts = {path: len(p) for path, p in held.items()}
             else:
@@ -954,14 +927,14 @@ class LakeTable:
                 # the probe reads the raw files and the driver drops the
                 # positions its tombstones already delete; the rewrite
                 # applies the same held tombstones
+                uris = [tombstones.spark_uri(f.path) for f in candidates]
                 found = tombstones._held_positions(
-                    self._read_mapped(candidates, meta).filter(predicate),
-                    [tombstones.spark_uri(f.path) for f in candidates],
+                    self._read_mapped(candidates, meta).filter(predicate), uris
                 )
                 hit_paths = {
                     f.path
-                    for f, p in zip(candidates, found)
-                    if len(tombstones.subtract(p, tombs.get(f.path)))
+                    for f, u, p in zip(candidates, uris, found)
+                    if len(tombstones.subtract(p, tombs.get(u)))
                 }
             else:
                 matched = self._read_live(candidates, meta, cur).filter(predicate)

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pg_datalake_spark.session import local_frame
+from pg_datalake_spark.tables import tombstones
 from pg_datalake_spark.tables.avro_codec import read_avro, write_avro
 
 
@@ -323,9 +324,11 @@ def snapshot_file_entries(
     spark: SparkSession | None = None,
 ) -> list[dict]:
     """Full per-file view of a snapshot: ``{path, content, seq,
-    equality_ids, lower_bounds, upper_bounds, null_value_counts}`` per
-    live file (content 0=data, 1=position deletes, 2=equality deletes);
-    bounds are field-id-keyed dicts of spec-serialized bytes."""
+    equality_ids, lower_bounds, upper_bounds, null_value_counts,
+    partition, rows}`` per live file (content 0=data, 1=position
+    deletes, 2=equality deletes; ``rows`` is the manifest
+    ``record_count``); bounds are field-id-keyed dicts of
+    spec-serialized bytes."""
     return [
         {
             "path": d["file_path"],
@@ -336,6 +339,7 @@ def snapshot_file_entries(
             "upper_bounds": _kv_dict(d.get("upper_bounds")),
             "null_value_counts": _kv_dict(d.get("null_value_counts")),
             "partition": d.get("partition") or {},
+            "rows": d.get("record_count"),
         }
         for d, seq in _live_entries_with_seq(
             location, snapshot_id, metadata_file, spark=spark
@@ -410,10 +414,11 @@ def _identity_spec(meta: dict) -> list[dict]:
     return [f for f in spec["fields"] if f["transform"] == "identity"]
 
 
-def _delete_manifest_part_fields(meta: dict) -> list[tuple[str, str]]:
-    """(name, iceberg_type) of the default spec's identity fields, for
-    typing a delete manifest's partition record (values stay null —
-    deletes here are table-wide, not partition-scoped)."""
+def _identity_fields(meta: dict) -> list[tuple[str, str]]:
+    """(name, iceberg_type) of the default spec's identity fields: the
+    partition columns a read restores, and the typing of a delete
+    manifest's partition record (values stay null — deletes here are
+    table-wide, not partition-scoped)."""
     id_to_field = {f["id"]: f for f in current_schema(meta)["fields"]}
     return [
         (id_to_field[pf["source-id"]]["name"], id_to_field[pf["source-id"]]["type"])
@@ -458,6 +463,37 @@ def snapshot_as_of(location: str, timestamp_ms: int) -> int:
     return max(eligible, key=lambda s: s["sequence-number"])["snapshot-id"]
 
 
+def _scan_filter(meta: dict, filters: list[tuple] | None):
+    """A predicate over data-file entries that is False when the file's
+    manifest bounds, identity-partition value or transform-partition
+    value prove that no row can satisfy every ``(column, op, value)``
+    of ``filters`` (prune only on proof)."""
+    by_name = {f["name"]: f for f in current_schema(meta)["fields"]}
+    part_types = dict(_identity_fields(meta))
+    tspec = {t["source"]: t for t in _transform_spec_from_meta(meta)}
+    checks = []
+    for col, op, val in filters or []:
+        if col not in by_name:
+            raise ValueError(f"filter column {col!r} not in table schema")
+        t = tspec.get(col)
+        tval = t and _transform_literal(t["transform"], t["param"], val, t["src_type"])
+        checks.append((col, op, val, by_name[col], t, tval))
+
+    def keep(e: dict) -> bool:
+        for col, op, val, f, t, tval in checks:
+            if col in part_types:
+                ok = _partition_may_match(e, col, part_types[col], op, val)
+            else:
+                ok = _file_may_match(e, f["id"], f["type"], op, val)
+            if ok and t:
+                ok = _transform_partition_may_match(e, t["name"], op, tval, tr=t["transform"])
+            if not ok:
+                return False
+        return True
+
+    return keep
+
+
 def plan_scan(
     location: str,
     filters: list[tuple] | None = None,
@@ -468,41 +504,11 @@ def plan_scan(
     for ``filters`` (same semantics as :func:`read_iceberg_table`).
     Returns ``{"kept": [paths], "skipped": [paths]}`` — the EXPLAIN
     counterpart of the reference's files-scanned/skipped accounting."""
-    meta = load_table_metadata(location, metadata_file)
-    ice_schema = current_schema(meta)
-    by_name = {f["name"]: f for f in ice_schema["fields"]}
-    id_to_field = {f["id"]: f for f in ice_schema["fields"]}
-    part_types = {
-        id_to_field[pf["source-id"]]["name"]: id_to_field[pf["source-id"]]["type"]
-        for pf in _identity_spec(meta)
-        if pf["source-id"] in id_to_field
-    }
-    tspec = {t["source"]: t for t in _transform_spec_from_meta(meta)}
+    keep = _scan_filter(load_table_metadata(location, metadata_file), filters)
     kept, skipped = [], []
     for e in snapshot_file_entries(location, snapshot_id, metadata_file):
-        if e["content"] != 0:
-            continue
-        keep = True
-        for col, op, val in filters or []:
-            if col not in by_name:
-                raise ValueError(f"filter column {col!r} not in table schema")
-            f = by_name[col]
-            if col in part_types:
-                keep = _partition_may_match(e, col, part_types[col], op, val)
-            else:
-                keep = _file_may_match(e, f["id"], f["type"], op, val)
-            if keep and col in tspec:
-                t = tspec[col]
-                keep = _transform_partition_may_match(
-                    e,
-                    t["name"],
-                    op,
-                    _transform_literal(t["transform"], t["param"], val, t["src_type"]),
-                    tr=t["transform"],
-                )
-            if not keep:
-                break
-        (kept if keep else skipped).append(e["path"])
+        if e["content"] == 0:
+            (kept if keep(e) else skipped).append(e["path"])
     return {"kept": kept, "skipped": skipped}
 
 
@@ -535,10 +541,17 @@ def read_iceberg_table(
     from the manifests' typed partition tuples, never re-inferred from
     directory names.
 
-    Merge-on-read deletes are applied Spark-side, no row-level Python:
+    Merge-on-read deletes are applied Spark-side, no row-level Python.
+    Every data and delete file is named once, by the URI Spark reports
+    as ``_metadata.file_path`` (``tombstones.spark_uri`` of its manifest
+    path), and each join reads that column raw, as the LakeTable and
+    Delta readers do:
 
-    - Position deletes: broadcast anti-join on (file, row position)
-      using Spark's ``_metadata`` columns.
+    - Position deletes: an anti-join on (file, row position) through
+      ``tombstones.drop_positions`` — held on the driver within
+      ``tombstones.DRIVER_ROWS`` (the delete entries' ``record_count``
+      sum), else read by Spark with each manifest path mapped to its
+      URI once per file.
     - Equality deletes: per equality-id set, a null-safe broadcast
       anti-join on the equality columns, restricted to data files whose
       data sequence number is STRICTLY lower than the delete file's
@@ -556,46 +569,10 @@ def read_iceberg_table(
     entries = snapshot_file_entries(
         location, snapshot_id, metadata_file, spark=spark
     )
-    data = [e for e in entries if e["content"] == 0]
     meta0 = load_table_metadata(location, metadata_file)
     ice_schema = current_schema(meta0)
-    id_to_field = {f["id"]: f for f in ice_schema["fields"]}
-    part_fields = [
-        (id_to_field[pf["source-id"]]["name"], id_to_field[pf["source-id"]]["type"])
-        for pf in _identity_spec(meta0)
-        if pf["source-id"] in id_to_field
-    ]
-    part_types = dict(part_fields)
-    if filters:
-        by_name = {f["name"]: f for f in ice_schema["fields"]}
-        tspec = {t["source"]: t for t in _transform_spec_from_meta(meta0)}
-        for col, op, val in filters:
-            if col not in by_name:
-                raise ValueError(f"filter column {col!r} not in table schema")
-            f = by_name[col]
-            if col in part_types:
-                data = [
-                    e for e in data
-                    if _partition_may_match(e, col, part_types[col], op, val)
-                ]
-            else:
-                data = [
-                    e for e in data
-                    if _file_may_match(e, f["id"], f["type"], op, val)
-                ]
-            if col in tspec:
-                t = tspec[col]
-                tval = _transform_literal(
-                    t["transform"], t["param"], val, t["src_type"]
-                )
-                data = [
-                    e for e in data
-                    if _transform_partition_may_match(
-                        e, t["name"], op, tval, tr=t["transform"]
-                    )
-                ]
-        if not data:
-            return local_frame(spark, [], _spark_ddl(ice_schema))
+    keep = _scan_filter(meta0, filters)
+    data = [e for e in entries if e["content"] == 0 and keep(e)]
     pos_del = [e for e in entries if e["content"] == 1]
     eq_del = [e for e in entries if e["content"] == 2]
     if not data:
@@ -633,43 +610,35 @@ def read_iceberg_table(
             )
         return out
 
-    missing_parts = [(n, t) for n, t in part_fields if n not in df.columns]
-    need_meta = bool(missing_parts or pos_del or eq_del)
-    if need_meta:
-        # Path normalization (manifest file:// vs _metadata file:///)
-        # underpins both the delete anti-joins and the partition-column
-        # restore below; for any other scheme the two sides would not
-        # normalize to the same string and rows would silently be lost
-        # or mis-attributed — fail loud instead.
-        for e in entries:
-            p = e["path"]
-            if "://" in p and not p.startswith("file://"):
-                raise NotImplementedError(
-                    f"path normalization supports only local file URIs, got {p!r}"
-                )
-        # capture the hidden _metadata columns ONCE on the raw scan
-        # (they are not resolvable after a projection/join), normalized
-        # to scheme-less paths: manifests store file:// URIs,
-        # _metadata.file_path reports file:/// form
-        df = df.select(
-            "*",
-            F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/").alias(
-                "__path"
-            ),
-            F.col("_metadata.row_index").alias("__pos"),
-        )
+    missing_parts = [(n, t) for n, t in _identity_fields(meta0) if n not in df.columns]
+    if not (missing_parts or pos_del or eq_del):
+        return _residual(df)
+    # the joins and the partition restore below name each file by its
+    # Spark URI, which only a local file has here; under any other
+    # scheme rows would silently be lost or mis-attributed — fail loud
+    for e in entries:
+        p = e["path"]
+        if "://" in p and not p.startswith("file://"):
+            raise NotImplementedError(
+                f"path normalization supports only local file URIs, got {p!r}"
+            )
+    keys = [e["path"] for e in data]
+    uris = [tombstones.spark_uri(k) for k in keys]
+    # the hidden _metadata columns are captured ONCE on the raw scan
+    # (they are not resolvable after a projection/join)
+    df = df.selectExpr("*", "_metadata.file_path AS __file", "_metadata.row_index AS __pos")
 
     # identity-partition columns live in the MANIFESTS, not the data
     # files — restore any that the parquet scan lacks via a per-file
-    # literal map on the normalized path (typed, never path-inferred)
+    # literal map on the file URI (typed, never path-inferred)
     for n, t in missing_parts:
-        pairs = []
-        for e in data:
-            pv = e["partition"].get(n)
-            if pv is None:
-                continue
-            pairs.extend([F.lit(_local(e["path"])), F.lit(pv)])
-        col = F.element_at(F.create_map(*pairs), F.col("__path")) if pairs else F.lit(None)
+        pairs = [
+            x
+            for e, u in zip(data, uris)
+            if e["partition"].get(n) is not None
+            for x in (F.lit(u), F.lit(e["partition"][n]))
+        ]
+        col = F.element_at(F.create_map(*pairs), F.col("__file")) if pairs else F.lit(None)
         if t == "date":
             col = F.date_from_unix_date(col)
         elif t == "boolean":
@@ -678,37 +647,19 @@ def read_iceberg_table(
             col = col.cast("int")
         df = df.withColumn(n, col)
 
-    if not pos_del and not eq_del:
-        return _residual(df.drop("__path", "__pos") if need_meta else df)
-
     if pos_del:
-        deletes = (
-            spark.read.parquet(*[_local(e["path"]) for e in pos_del])
-            .select(
-                F.regexp_replace("file_path", "^file:/*", "/").alias("__del_path"),
-                F.col("pos").alias("__del_pos"),
-            )
-            .distinct()
-        )
-        df = df.join(
-            F.broadcast(deletes),
-            (F.col("__path") == F.col("__del_path"))
-            & (F.col("__pos") == F.col("__del_pos")),
-            "left_anti",
-        )
+        dels = [_local(e["path"]) for e in pos_del]
+        held = tombstones.hold(keys, dels, sum(e["rows"] for e in pos_del))
+        df = tombstones.drop_positions(df, keys, uris, dels, held)
 
     if eq_del:
         id_to_name = {f["id"]: f["name"] for f in ice_schema["fields"]}
         # per-data-file sequence number, attached via a literal map —
         # O(files) metadata, evaluated JVM-side, no extra join
         seq_map = F.create_map(
-            *[
-                x
-                for e in data
-                for x in (F.lit(_local(e["path"])), F.lit(e["seq"]))
-            ]
+            *[x for e, u in zip(data, uris) for x in (F.lit(u), F.lit(e["seq"]))]
         )
-        df = df.withColumn("__seq", F.element_at(seq_map, F.col("__path")))
+        df = df.withColumn("__seq", F.element_at(seq_map, F.col("__file")))
         # group delete files by their equality-id set; each group is one
         # null-safe anti-join (equality columns + strict seq ordering)
         groups: dict[tuple[int, ...], list[dict]] = {}
@@ -731,19 +682,16 @@ def read_iceberg_table(
                 *[
                     x
                     for e in files
-                    for x in (F.lit(_local(e["path"])), F.lit(e["seq"]))
+                    for x in (F.lit(tombstones.spark_uri(e["path"])), F.lit(e["seq"]))
                 ]
             )
             del_df = (
                 spark.read.parquet(*[_local(e["path"]) for e in files])
                 .select(
                     *[F.col(c).alias(f"__eq_{c}") for c in cols],
-                    F.element_at(
-                        del_seq_map,
-                        F.regexp_replace(
-                            F.col("_metadata.file_path"), "^file:/*", "/"
-                        ),
-                    ).alias("__del_seq"),
+                    F.element_at(del_seq_map, F.col("_metadata.file_path")).alias(
+                        "__del_seq"
+                    ),
                 )
                 .groupBy(*[f"__eq_{c}" for c in cols])
                 .agg(F.max("__del_seq").alias("__del_seq"))
@@ -752,8 +700,7 @@ def read_iceberg_table(
             for c in cols:
                 cond = cond & F.col(c).eqNullSafe(F.col(f"__eq_{c}"))
             df = df.join(F.broadcast(del_df), cond, "left_anti")
-        df = df.drop("__seq")
-    return _residual(df.drop("__path", "__pos"))
+    return _residual(df)
 
 
 # ---------------------------------------------------------------------------
@@ -1317,25 +1264,6 @@ def _transform_spec_from_meta(meta: dict) -> list[dict]:
     return out
 
 
-def _partition_spec_fields(
-    ice_schema: dict, partition_by: list[str]
-) -> list[tuple[str, str]]:
-    """Validate identity-partition columns → (name, iceberg_type)."""
-    by_name = {f["name"]: f for f in ice_schema["fields"]}
-    fields = []
-    for c in partition_by:
-        if c not in by_name:
-            raise ValueError(f"partition column {c!r} not in schema")
-        t = by_name[c]["type"]
-        if t not in _PARTITION_AVRO_TYPES:
-            raise ValueError(
-                f"identity partitioning on type {t!r} not supported "
-                f"(supported: {sorted(_PARTITION_AVRO_TYPES)})"
-            )
-        fields.append((c, t))
-    return fields
-
-
 def export_iceberg_snapshot(
     df: DataFrame,
     location: str,
@@ -1595,33 +1523,6 @@ def append_snapshot(
     )
 
 
-def _write_position_delete_file(
-    data_dir: str, delete_entries: list[tuple[str, int]]
-) -> tuple[str, int, int]:
-    """Write a position-delete parquet file ((file_path, pos) rows,
-    Iceberg field-ids 2147483546/2147483545); returns (path, rows, size)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    # spec ordering: sorted by file_path then pos
-    rows = sorted((f"file://{_local(p)}", int(pos)) for p, pos in delete_entries)
-    del_path = os.path.join(data_dir, f"{uuid.uuid4()}-deletes.parquet")
-    schema = pa.schema(
-        [
-            pa.field("file_path", pa.string(), metadata={"PARQUET:field_id": "2147483546"}),
-            pa.field("pos", pa.int64(), metadata={"PARQUET:field_id": "2147483545"}),
-        ]
-    )
-    pq.write_table(
-        pa.table(
-            {"file_path": [r[0] for r in rows], "pos": [r[1] for r in rows]}, schema=schema
-        ),
-        del_path,
-    )
-    nrows, fsize = _parquet_stats(del_path)
-    return del_path, nrows, fsize
-
-
 def _commit_delete_files(location: str, meta: dict, delete_paths: list[str]) -> int:
     """Commit already-written position-delete parquet files as a MOR
     delete snapshot: one manifest entry per file, manifest joins the
@@ -1636,7 +1537,7 @@ def _commit_delete_files(location: str, meta: dict, delete_paths: list[str]) -> 
     # on identity-partitioned tables the manifest's partition tuple must
     # match the spec it claims (real Iceberg readers validate this);
     # path-wide position deletes carry a null tuple for each spec field
-    part_fields = _delete_manifest_part_fields(meta)
+    part_fields = _identity_fields(meta)
     entries, total_rows = [], 0
     for p in delete_paths:
         nrows, fsize = _parquet_stats(p)
@@ -1681,6 +1582,20 @@ def _commit_delete_files(location: str, meta: dict, delete_paths: list[str]) -> 
     return _commit_new_version(location, meta, snapshot_id, seq, manifests, "delete")
 
 
+def _data_file_names(location: str, meta: dict) -> dict[str, str]:
+    """Each spelling a caller may give for a data file of the loaded
+    snapshot (its manifest ``file_path``, its plain local path, and the
+    URI Spark reports as ``_metadata.file_path``) → the manifest
+    ``file_path``, which the Iceberg spec says a position delete must
+    equal exactly. One entry per file and spelling."""
+    names: dict[str, str] = {}
+    for d in _live_entries(location, metadata_file=meta["_metadata-file"]):
+        if not d.get("content"):
+            m = d["file_path"]
+            names.update({_local(m): m, tombstones.spark_uri(m): m, m: m})
+    return names
+
+
 def add_position_deletes(
     location: str, delete_entries: list[tuple[str, int]]
 ) -> int:
@@ -1691,10 +1606,32 @@ def add_position_deletes(
     :func:`add_position_deletes_df`: at 100 TB a predicate can match
     billions of positions, and a Python list of them is a driver OOM
     (reference writes delete files engine-side for the same reason:
-    pg_lake_table/src/fdw/position_delete_dest.c)."""
+    pg_lake_table/src/fdw/position_delete_dest.c).
+
+    A data file may be named by ``_metadata.file_path``, its manifest
+    path or its plain local path; each row is written with the manifest
+    spelling, the one the reader keys on for every table format. A
+    position in a file the current snapshot does not hold raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     meta = load_table_metadata(location)
-    data_dir = os.path.join(_local(location), "data")
-    del_path, _, _ = _write_position_delete_file(data_dir, delete_entries)
+    names = _data_file_names(location, meta)
+    rows = []
+    for p, pos in delete_entries:
+        if p not in names:
+            raise ValueError(f"{p!r} is not a data file of the current snapshot")
+        rows.append((names[p], int(pos)))
+    rows.sort()  # spec ordering: by file_path, then pos
+    schema = pa.schema(
+        [
+            pa.field("file_path", pa.string(), metadata={"PARQUET:field_id": "2147483546"}),
+            pa.field("pos", pa.int64(), metadata={"PARQUET:field_id": "2147483545"}),
+        ]
+    )
+    del_path = os.path.join(_local(location), "data", f"{uuid.uuid4()}-deletes.parquet")
+    table = pa.Table.from_pylist([{"file_path": p, "pos": pos} for p, pos in rows], schema)
+    pq.write_table(table, del_path)
     return _commit_delete_files(location, meta, [del_path])
 
 
@@ -1705,22 +1642,34 @@ def add_position_deletes_df(location: str, deletes: DataFrame) -> int:
     ``file_path`` so each data file's tombstones co-locate in one
     delete file, sorted (file_path, pos) within files per the Iceberg
     spec), and only the resulting FILE LIST is registered driver-side.
-    No delete row ever transits the driver."""
-    from pyspark.sql import functions as F
+    No delete row ever transits the driver.
 
+    ``file_path`` is spelled as :func:`add_position_deletes` accepts it
+    and written as the manifest path, through a broadcast join with one
+    row per data file and spelling; a row naming a file the current
+    snapshot does not hold fails the write job (``raise_error``)."""
     meta = load_table_metadata(location)
     del_dir = os.path.join(_local(location), "data", f"posdel-{uuid.uuid4()}")
 
     spark = deletes.sparkSession
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    normalized = deletes.select(
-        F.concat(
-            F.lit("file://"), F.regexp_replace(F.col("file_path"), "^file:(//)?", "")
-        ).alias("file_path"),
-        F.col("pos").cast("long").alias("pos"),
+    names = local_frame(
+        spark,
+        list(_data_file_names(location, meta).items()),
+        "__given string, __manifest string",
     )
+    unknown = F.raise_error(
+        F.format_string("%s is not a data file of the current snapshot", "file_path")
+    )
+    named = deletes.join(F.broadcast(names), F.col("file_path") == F.col("__given"), "left")
     (
-        normalized.repartition("file_path")
+        named.select(
+            # the given path is never reached (raise_error throws first);
+            # it gives the column the input's nullability, as before
+            F.coalesce("__manifest", unknown, "file_path").alias("file_path"),
+            F.col("pos").cast("long").alias("pos"),
+        )
+        .repartition("file_path")
         .sortWithinPartitions("file_path", "pos")
         .withMetadata("file_path", {"parquet.field.id": 2147483546})
         .withMetadata("pos", {"parquet.field.id": 2147483545})
@@ -2111,7 +2060,7 @@ def add_equality_deletes(location: str, df: DataFrame, columns: list[str] | None
 
     snapshot_id = int(uuid.uuid4().int % (1 << 62))
     seq = meta["last-sequence-number"] + 1
-    part_fields = _delete_manifest_part_fields(meta)
+    part_fields = _identity_fields(meta)
     entries, total_rows = [], 0
     for p in files:
         nrows, fsize = _parquet_stats(p)

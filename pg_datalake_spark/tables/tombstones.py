@@ -1,9 +1,9 @@
 """Where row-level tombstones are built, and how a read applies them.
 
-Both table formats delete rows by ``(data file, row position)``: the
-LakeTable writes them to position-delete files, a Delta table to each
-file's deletion vector. One bound, :data:`DRIVER_ROWS`, places the work
-on both sides:
+All three table formats delete rows by ``(data file, row position)``:
+the LakeTable and an external Iceberg table write them to
+position-delete files, a Delta table to each file's deletion vector.
+One bound, :data:`DRIVER_ROWS`, places the work for all three:
 
 - A delete whose candidate files hold at most ``DRIVER_ROWS`` rows in
   all (a count the table's metadata gives before any job runs) collects
@@ -14,13 +14,17 @@ on both sides:
 - A read whose tombstones number at most ``DRIVER_ROWS`` (the deletion
   vectors' cardinalities, the position-delete files' row counts) holds
   them on the driver: deletion vectors are decoded there, delete files
-  read with pyarrow. Spark gets them as one Arrow table
+  read with pyarrow (:func:`hold`). Spark gets them as one Arrow table
   (:func:`frame`), broadcast. Past the bound the executors decode or
   read them.
 
-On every route a tombstone names its data file the way Spark reports
-``_metadata.file_path`` (:func:`spark_uri`), so a scan anti-joins on
-the raw column (:func:`anti_join`) and decodes no path on any row.
+A data file has one identity at join time in every format: the way
+Spark reports ``_metadata.file_path`` (:func:`spark_uri`). A scan
+anti-joins on that raw column (:func:`anti_join`) and decodes no path
+on any row. A position-delete file names each data file by a *key*,
+its ``file_path`` value: the Spark URI in a LakeTable, the manifest's
+``file_path`` in Iceberg. :func:`drop_positions` maps each key to its
+URI once per file, never once per row.
 """
 
 from __future__ import annotations
@@ -110,6 +114,59 @@ def _held_positions(matched: DataFrame, uris: list[str]) -> list:
     if (files == 0).any():
         raise RuntimeError("a matched row lies in a file the delete did not plan")
     return by_file(files - 1, held.column("p").to_numpy(), len(uris))
+
+
+def hold(keys: list[str], deletes: list[str], rows: int) -> dict | None:
+    """``{key: ascending positions}`` for each data file in ``keys``
+    that the position-delete files ``deletes`` (``rows`` rows in all)
+    name, read here with pyarrow; None when ``rows`` passes
+    :data:`DRIVER_ROWS`. Rows naming any other file are ignored."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    if rows > DRIVER_ROWS:
+        return None
+    if not deletes:
+        return {}
+    value_set = pa.array(keys, pa.string())
+    owners, positions = [], []
+    for path in deletes:
+        t = pq.read_table(path, columns=["file_path", "pos"])
+        owner = pc.fill_null(pc.index_in(t["file_path"], value_set=value_set), -1)
+        owners.append(owner.to_numpy())
+        positions.append(t["pos"].to_numpy())
+    owner, pos = np.concatenate(owners), np.concatenate(positions)
+    keep = owner >= 0
+    split = by_file(owner[keep], pos[keep], len(keys))
+    return {k: p for k, p in zip(keys, split) if len(p)}
+
+
+def drop_positions(
+    df: DataFrame, keys: list[str], uris: list[str], deletes: list[str], held: dict | None
+) -> DataFrame:
+    """:func:`anti_join` of ``df`` and the rows that the position-delete
+    files ``deletes`` name in the data files ``keys[i]`` (Spark URI
+    ``uris[i]``): ``held`` (from :func:`hold`) as one Arrow table, or
+    when None the delete files read by Spark, each key mapped to its
+    URI by a broadcast join of one row per file (none when every key is
+    its URI)."""
+    from pyspark.sql import functions as F
+
+    spark = df.sparkSession
+    if held is None:
+        rows = spark.read.schema("file_path string, pos long").parquet(*deletes)
+        if keys != uris:
+            names = local_frame(spark, list(zip(keys, uris)), "file_path string, uri string")
+            rows = rows.join(F.broadcast(names), "file_path").selectExpr("uri AS file_path", "pos")
+        tombs = rows.selectExpr("file_path AS __del_path", "pos AS __del_pos")
+    elif held:
+        live = [(u, held[k]) for k, u in zip(keys, uris) if k in held]
+        tombs = frame(spark, [u for u, _ in live], [p for _, p in live])
+    else:
+        return df
+    return anti_join(df, F.broadcast(tombs))
 
 
 def subtract(positions, dead):

@@ -10,6 +10,7 @@ the file while the tests run makes it return another function's lines.
 from __future__ import annotations
 
 import ast
+import re
 import sys
 from pathlib import Path
 
@@ -71,3 +72,14 @@ def mentions(node: ast.AST, word: str) -> bool:
         if isinstance(n, ast.Constant) and isinstance(n.value, str) and word in n.value:
             return True
     return False
+
+
+def sql_calls(node: ast.AST, name: str) -> list[str]:
+    """Every string constant under ``node`` that calls the SQL function
+    ``name`` (text passed to ``F.expr`` or ``selectExpr``, say)."""
+    call = re.compile(rf"\b{re.escape(name)}\s*\(", re.IGNORECASE)
+    return [
+        n.value
+        for n in ast.walk(node)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str) and call.search(n.value)
+    ]

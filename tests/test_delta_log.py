@@ -2502,3 +2502,18 @@ def test_dv_routes_leave_identical_tables(spark, tmp_path, monkeypatch):
     rows, dvs = out["driver"]
     assert {kind for kind, _ in dvs.values()} == {"i", "u"}
     assert all(r[1] is None or r[1] >= 5 for r in rows)
+
+
+def test_writes_under_a_relative_location(spark, tmp_path, monkeypatch):
+    """A relative, unnormalised location names the same table to every
+    writer: Spark's staging directory and the driver's walk of it both
+    resolve it against the Python process's working directory."""
+    monkeypatch.chdir(tmp_path)
+    loc = "./y/../delta dir"
+    dl.write_delta_table(spark.range(5).selectExpr("id AS k"), loc)
+    dl.append_delta(spark.range(5, 8).selectExpr("id AS k"), loc)
+    dl.write_delta_checkpoint(spark, loc)
+    assert (tmp_path / "delta dir" / "_delta_log").is_dir()
+    for read_at in (loc, str(tmp_path / "delta dir")):
+        got = sorted(r.k for r in dl.read_delta_table(spark, read_at).collect())
+        assert got == list(range(8))

@@ -1008,11 +1008,10 @@ def test_lsh_candidate_source_has_no_collect_set():
     assert not mentions(node, "collect_list")
 
 
-def test_jaccard_verify_broadcast_is_conditional(spark):
-    """r10 (judge task #5): the candidate-side broadcast hint must be
-    conditional — forced True plans a broadcast join on the pairs side,
-    forced False leaves the join strategy to the optimizer/AQE, and the
-    auto path picks by a counted threshold. Results identical."""
+def test_jaccard_verify_leaves_the_join_to_aqe(spark):
+    """The verify join carries no broadcast hint (AQE picks the join
+    strategy at runtime) and keeps exactly the candidate pairs at or
+    above the threshold."""
     from pg_datalake_spark.operators import dedup
 
     docs = spark.createDataFrame(
@@ -1026,27 +1025,10 @@ def test_jaccard_verify_broadcast_is_conditional(spark):
     sh = dedup.with_shingles(docs, "doc_id", "text")
     pairs = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
 
-    hinted = dedup.jaccard_verify_shingles(pairs, sh, "doc_id", 0.1,
-                                           broadcast_pairs=True)
-    unhinted = dedup.jaccard_verify_shingles(pairs, sh, "doc_id", 0.1,
-                                             broadcast_pairs=False)
-    # the hint survives analysis only in the True branch
-    hinted_plan = hinted._jdf.queryExecution().analyzed().toString()
-    unhinted_plan = unhinted._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" in hinted_plan
-    assert "ResolvedHint" not in unhinted_plan
-    for df in (hinted, unhinted):
-        got = df.collect()
-        assert len(got) == 1 and (got[0].id_a, got[0].id_b) == ("a", "b")
-    # auto path: tiny candidate set -> counted, broadcast branch, same rows
-    auto = dedup.jaccard_verify_shingles(pairs, sh, "doc_id", 0.1)
-    assert [(r.id_a, r.id_b) for r in auto.collect()] == [("a", "b")]
-    auto_small_limit = dedup.jaccard_verify_shingles(
-        pairs, sh, "doc_id", 0.1, broadcast_limit=0
-    )
-    assert "ResolvedHint" not in (
-        auto_small_limit._jdf.queryExecution().analyzed().toString()
-    )
+    df = dedup.jaccard_verify_shingles(pairs, sh, "doc_id", 0.1)
+    assert "ResolvedHint" not in df._jdf.queryExecution().analyzed().toString()
+    got = df.collect()
+    assert len(got) == 1 and (got[0].id_a, got[0].id_b) == ("a", "b")
 
 
 @pytest.mark.slow

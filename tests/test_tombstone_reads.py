@@ -1,12 +1,12 @@
-"""How reads apply tombstones, for both table formats.
+"""How reads apply tombstones, for all three table formats.
 
 Within ``tombstones.DRIVER_ROWS`` the driver holds a read's tombstones
 (decoded deletion vectors, position-delete files read with pyarrow) and
 broadcasts them as one Arrow table; past it the executors decode or
-read them. Both routes spell each data file as Spark reports
-``_metadata.file_path`` and join on that raw column, so they must read
+read them. Every route spells each data file as Spark reports
+``_metadata.file_path`` and joins on that raw column, so they must read
 the same rows from files whose paths Spark %-escapes, and no plan
-decodes a path.
+decodes or rewrites a path.
 """
 
 from __future__ import annotations
@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from pg_datalake_spark.tables import LakeTable, tombstones
 from pg_datalake_spark.tables import delta_log as dl
+from pg_datalake_spark.tables import iceberg_external as ie
 from pg_datalake_spark.tables.format import PartitionField
 from tests.spark_jobs import spark_work
 from tests.test_laketable import KV_SCHEMA
@@ -127,3 +128,106 @@ def test_tombstones_of_unread_files_are_not_joined(spark, tmp_path, request, rou
     df = t.scan(filters=[("value", "=", "a b")])
     assert "LeftAnti" not in df._jdf.queryExecution().executedPlan().toString()
     assert _rows(df) == sorted((k, "a b", k % 5) for k in range(0, N, 4))
+
+
+# the external Iceberg table also loses two keys to an equality delete
+ICE_EQ_KEYS = (6, 7)
+ICE_EXPECTED = [r for r in EXPECTED if r[0] not in ICE_EQ_KEYS]
+
+
+def _raw_positions(spark, loc: str, predicate: str):
+    """``(file_path, pos)`` of the rows matching ``predicate`` in the
+    current snapshot's data files, spelled as ``_metadata`` reports."""
+    data, _ = ie.snapshot_files(loc)
+    return (
+        spark.read.parquet(*[ie._local(p) for p in data])
+        .filter(predicate)
+        .selectExpr("_metadata.file_path AS file_path", "_metadata.row_index AS pos")
+    )
+
+
+def _iceberg(spark, loc: str) -> str:
+    """An identity-partitioned external Iceberg table with position
+    deletes through both writers and one equality delete."""
+    ie.export_iceberg_snapshot(_batch(spark), loc, partition_by=["value"])
+    first = _raw_positions(spark, loc, DELETES[0]).collect()
+    ie.add_position_deletes(loc, [(r.file_path, r.pos) for r in first])
+    ie.add_position_deletes_df(loc, _raw_positions(spark, loc, DELETES[1]))
+    keys = spark.createDataFrame([(k,) for k in ICE_EQ_KEYS], "key long")
+    ie.add_equality_deletes(loc, keys)
+    return loc
+
+
+def test_iceberg_routes_read_the_same_rows(spark, tmp_path, request):
+    """An external Iceberg table whose partition paths Spark %-escapes
+    reads its position and equality deletes, and its identity partition
+    column, on both routes."""
+    loc = _iceberg(spark, str(tmp_path / "ice dir"))
+    driver = _rows(ie.read_iceberg_table(spark, loc))
+    request.getfixturevalue("executor_route")
+    executor = _rows(ie.read_iceberg_table(spark, loc))
+    assert driver == executor == ICE_EXPECTED
+
+
+@pytest.mark.parametrize("route", ["driver", "executor"])
+def test_iceberg_read_rewrites_no_path(spark, tmp_path, request, route):
+    """An Iceberg read joins its deletes and restores its partition
+    column on the raw ``_metadata.file_path``: no plan it runs decodes
+    or rewrites a path."""
+    loc = _iceberg(spark, str(tmp_path / "ice dir"))
+    if route == "executor":
+        request.getfixturevalue("executor_route")
+    rows, plans = _plans(spark, lambda: ie.read_iceberg_table(spark, loc))
+    text = "\n".join(plans).lower()
+    assert "url_decode" not in text and "regexp_replace" not in text
+    assert rows == ICE_EXPECTED
+
+
+def test_iceberg_delete_files_name_manifest_paths(spark, tmp_path):
+    """Both position-delete writers spell each row's ``file_path`` as
+    the data file's manifest ``file_path``, as the Iceberg spec asks."""
+    import pyarrow.parquet as pq
+
+    loc = _iceberg(spark, str(tmp_path / "ice dir"))
+    entries = ie.snapshot_file_entries(loc)
+    manifest = {e["path"] for e in entries if e["content"] == 0}
+    dels = [ie._local(e["path"]) for e in entries if e["content"] == 1]
+    assert len(dels) >= 2
+    written = {p for d in dels for p in pq.read_table(d).column("file_path").to_pylist()}
+    assert written and written <= manifest
+
+
+def test_iceberg_position_outside_the_snapshot_raises(spark, tmp_path):
+    """A position delete naming a file the current snapshot does not
+    hold fails on both writers and commits nothing."""
+    loc = str(tmp_path / "ice dir")
+    ie.export_iceberg_snapshot(_batch(spark), loc, partition_by=["value"])
+    before = ie.load_table_metadata(loc)["current-snapshot-id"]
+    stray = "file:" + str(tmp_path / "elsewhere.parquet")
+    with pytest.raises(ValueError, match="not a data file"):
+        ie.add_position_deletes(loc, [(stray, 0)])
+    frame = spark.createDataFrame([(stray, 0)], "file_path string, pos long")
+    with pytest.raises(Exception, match="not a data file"):
+        ie.add_position_deletes_df(loc, frame)
+    assert ie.load_table_metadata(loc)["current-snapshot-id"] == before
+
+
+def test_no_table_module_rewrites_a_file_path():
+    """No module under ``tables/`` rewrites or decodes a file path per
+    row: every format joins on the raw ``_metadata.file_path`` and names
+    its files once per file (``tombstones.spark_uri``)."""
+    import ast
+    from pathlib import Path
+
+    from source_ast import calls, mentions, sql_calls
+
+    import pg_datalake_spark.tables as tables
+
+    modules = sorted(Path(tables.__file__).parent.glob("*.py"))
+    assert len(modules) > 5
+    for path in modules:
+        tree = ast.parse(path.read_text(), str(path))
+        for fn in ("regexp_replace", "url_decode"):
+            bad = [c for c in calls(tree, fn) if mentions(c, "file_path")]
+            bad += [t for t in sql_calls(tree, fn) if "file_path" in t]
+            assert not bad, f"{path.name} calls {fn} on a file path"
