@@ -19,7 +19,7 @@ One seeded interleaving =
 - the backend's commit primitive is instrumented to (a) inject a
   seeded pre-commit jitter that widens the read→commit race window,
   and (b) record ``(version, writer, op_idx)`` for every SUCCESSFUL
-  commit (the exclusive-create CAS admits exactly one winner per
+  commit (the put-if-absent CAS admits exactly one winner per
   version slot, so the record is the committed history).
 
 The invariant is SERIALIZABILITY of the committed history: because
@@ -34,13 +34,15 @@ or a retry that kept stale state shows up as a per-version diff.
 Three backends share the skeleton through a small adapter:
 
 - ``lake``     :class:`~pg_datalake_spark.tables.format.LakeTable`
-               (``_commit`` exclusive-create CAS);
-- ``delta``    the pure-Python Delta writer verbs
-               (``_write_commit`` version-slot CAS; append rebases
-               internally, other verbs conflict via FileExistsError);
-- ``iceberg``  the external-Iceberg verbs (``_write_version_file``
-               CAS, CommitConflictError; the r15 ``_pinned_cow_read``
-               fix is exactly what makes the COW verbs pass here).
+               (``_commit``);
+- ``delta``    the pure-Python Delta writer verbs (``_write_commit``;
+               append rebases internally);
+- ``iceberg``  the external-Iceberg verbs (``_write_version_file``;
+               the r15 ``_pinned_cow_read`` fix is exactly what makes
+               the COW verbs pass here).
+
+All three commit through ``tables/commit.py``: a lost race is a
+:class:`CommitConflictError` on every backend.
 
 Ops that legitimately commit nothing (a compact with nothing to do, a
 delta delete matching zero rows) are skipped in the replay — their
@@ -65,6 +67,7 @@ from pg_datalake_spark.fuzz_dml import (
     DmlSequenceGen,
     apply_twin,
 )
+from pg_datalake_spark.tables.commit import CommitConflictError
 from pg_datalake_spark.tables.format import LakeTable, PartitionField
 
 _MAX_ATTEMPTS = 80
@@ -159,10 +162,9 @@ class _Recorder:
 
 def _run_writers(plan: dict, rec: _Recorder,
                  apply_one: Callable[[dict], None],
-                 is_conflict: Callable[[BaseException], bool],
                  problems: list[str]) -> None:
-    """Release every writer through a barrier; per-op retry on the
-    backend's optimistic-commit conflict; starvation and non-conflict
+    """Release every writer through a barrier; per-op retry on a lost
+    commit race (:class:`CommitConflictError`); starvation and other
     exceptions are reported as problems."""
     writers = plan["writers"]
     barrier = threading.Barrier(len(writers))
@@ -179,7 +181,7 @@ def _run_writers(plan: dict, rec: _Recorder,
                     apply_one(op)
                     break
                 except BaseException as e:  # noqa: BLE001
-                    if is_conflict(e):
+                    if isinstance(e, CommitConflictError):
                         rec.conflicts.append(w)
                         time.sleep(rec.ctx.rng.random() * 0.003)
                         continue
@@ -343,9 +345,6 @@ def run_concurrent_lake(spark: SparkSession, con, seed: int, root: str,
         else:  # pragma: no cover
             raise ValueError(f"unknown op {kind}")
 
-    def is_conflict(e: BaseException) -> bool:
-        return isinstance(e, RuntimeError) and "concurrent commit" in str(e)
-
     def state_at(version: int):
         with open(os.path.join(root, "metadata", f"v{version}.json")) as fh:
             sid = json.load(fh).get("current_snapshot_id")
@@ -357,7 +356,7 @@ def run_concurrent_lake(spark: SparkSession, con, seed: int, root: str,
     prev = _quiet_confs(spark)
     LakeTable._commit = patched_commit
     try:
-        _run_writers(plan, rec, apply_one, is_conflict, problems)
+        _run_writers(plan, rec, apply_one, problems)
     finally:
         LakeTable._commit = orig_commit
         _restore_confs(spark, prev)
@@ -439,11 +438,6 @@ def run_concurrent_delta(spark: SparkSession, con, seed: int, root: str,
         else:  # pragma: no cover
             raise ValueError(f"unknown op {kind}")
 
-    def is_conflict(e: BaseException) -> bool:
-        return isinstance(e, FileExistsError) or (
-            isinstance(e, RuntimeError) and "lost the commit race" in str(e)
-        )
-
     def state_at(version: int):
         return (
             dl.read_delta_table(spark, root, version_as_of=version)
@@ -453,7 +447,7 @@ def run_concurrent_delta(spark: SparkSession, con, seed: int, root: str,
     prev = _quiet_confs(spark)
     dl._write_commit = patched_commit
     try:
-        _run_writers(plan, rec, apply_one, is_conflict, problems)
+        _run_writers(plan, rec, apply_one, problems)
     finally:
         dl._write_commit = orig_commit
         _restore_confs(spark, prev)
@@ -534,9 +528,6 @@ def run_concurrent_iceberg(spark: SparkSession, con, seed: int, root: str,
         else:  # pragma: no cover
             raise ValueError(f"unknown op {kind}")
 
-    def is_conflict(e: BaseException) -> bool:
-        return isinstance(e, ie.CommitConflictError)
-
     def state_at(version: int):
         mf = os.path.join(root, "metadata", f"v{version}.metadata.json")
         return (
@@ -547,7 +538,7 @@ def run_concurrent_iceberg(spark: SparkSession, con, seed: int, root: str,
     prev = _quiet_confs(spark)
     ie._write_version_file = patched_write
     try:
-        _run_writers(plan, rec, apply_one, is_conflict, problems)
+        _run_writers(plan, rec, apply_one, problems)
     finally:
         ie._write_version_file = orig_write
         _restore_confs(spark, prev)

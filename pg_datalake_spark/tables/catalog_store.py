@@ -17,7 +17,7 @@ catalog state, the same shape as the public Iceberg REST catalog's
 multi-table `commitTransaction` endpoint:
 
     <root>/manifest/v{N}.json — {"version": N, "tables": {name: entry}}
-                                 created with O_EXCL (the CAS)
+                                 published by put-if-absent (the CAS)
     <root>/manifest/hint.text — advisory latest-N (readers trust the
                                  directory listing, not the hint)
 
@@ -26,11 +26,11 @@ entry = {"name", "format": "iceberg"|"lake", "location",
          "catalog-version" (bumps when THIS entry changes)}
 
 Commit protocol: build the new table map on top of base manifest N,
-attempt O_EXCL create of v{N+1}.json; if it exists another writer
-won; reload, and if none of OUR staged tables changed between N and
-the new tip, rebase and retry — otherwise raise
+publish v{N+1}.json with ``tables/commit.py``'s put-if-absent; if it
+exists another writer won; reload, and if none of OUR staged tables
+changed between N and the new tip, rebase and retry — otherwise raise
 :class:`CatalogConflictError` (write-write conflict). A crash before
-the manifest create leaves the catalog at N: staged table-level
+the publish leaves the catalog at N: staged table-level
 snapshots exist in the table directories but are invisible through
 the catalog — atomicity holds for every reader that resolves through
 the catalog, exactly the reference's MVCC scope (an engine scanning
@@ -46,17 +46,17 @@ from __future__ import annotations
 import json
 import logging
 import os
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 
 from pg_datalake_spark.session import local_frame
+from pg_datalake_spark.tables.commit import CommitConflictError, advance_hint, put_if_absent
 
 _log = logging.getLogger(__name__)
 
 
-class CatalogConflictError(RuntimeError):
+class CatalogConflictError(CommitConflictError):
     """Another transaction modified one of this transaction's tables."""
 
 
@@ -165,27 +165,16 @@ class ObjectStoreCatalog:
             return True
 
     def _try_commit_manifest(self, base_version: int, tables: dict) -> bool:
-        """CAS: write the FULL manifest to a temp file first, then
-        ``os.link(tmp, v{base+1}.json)`` — the link either appears with
-        complete content (atomic) or raises EEXIST (lost the race).
-        Readers can never observe a partially-written tip."""
+        """CAS: publish the FULL manifest at ``v{base+1}.json``; False
+        means another writer holds the slot."""
         new_version = base_version + 1
-        path = self._manifest_path(new_version)
-        fd, tmp = tempfile.mkstemp(dir=self._manifest_dir, suffix=".commit")
+        text = json.dumps({"version": new_version, "tables": tables}, indent=2)
         try:
-            with os.fdopen(fd, "w") as fh:
-                json.dump({"version": new_version, "tables": tables}, fh, indent=2)
-            try:
-                os.link(tmp, path)
-            except FileExistsError:
-                return False
-        finally:
-            os.unlink(tmp)
+            put_if_absent(self._manifest_path(new_version), text)
+        except CommitConflictError:
+            return False
         # advisory hint for readers that prefer one GET over a LIST
-        fdt, tmp = tempfile.mkstemp(dir=self._manifest_dir, suffix=".hint")
-        with os.fdopen(fdt, "w") as fh:
-            fh.write(str(new_version))
-        os.replace(tmp, os.path.join(self._manifest_dir, "hint.text"))
+        advance_hint(os.path.join(self._manifest_dir, "hint.text"), str(new_version))
         return True
 
     # -- write half (each call = a single-entry transaction) -----------------

@@ -56,7 +56,7 @@ The writer half (:func:`write_delta_table` / :func:`append_delta` /
 read path can be exercised and oracle-checked offline end-to-end
 against multi-commit histories; the reference itself is read-only on
 Delta, so the writer is deliberately minimal (no
-optimistic-concurrency loop beyond exclusive-create, no CDC emission).
+optimistic-concurrency loop beyond put-if-absent, no CDC emission).
 """
 
 from __future__ import annotations
@@ -73,6 +73,7 @@ from pyspark.sql import types as T
 
 from pg_datalake_spark.session import local_frame, sql_ident, sql_literal
 from pg_datalake_spark.tables import tombstones
+from pg_datalake_spark.tables.commit import CommitConflictError, put_if_absent
 
 _LOG_DIR = "_delta_log"
 # Reader versions this implementation understands. 2 adds column
@@ -105,13 +106,11 @@ def _list_commit_versions(location: str) -> list[int]:
 
 
 def _write_commit(location: str, version: int, actions: list[dict]) -> int:
-    """Exclusive-create the commit file — the create IS the
-    check-and-swap, mirroring Delta's put-if-absent commit protocol."""
+    """Publish the commit file whole — its put-if-absent IS the
+    check-and-swap of Delta's commit protocol."""
     os.makedirs(_log_dir(location), exist_ok=True)
-    path = _commit_path(location, version)
-    with open(path, "x") as fh:
-        for a in actions:
-            fh.write(json.dumps(a, separators=(",", ":")) + "\n")
+    text = "".join(json.dumps(a, separators=(",", ":")) + "\n" for a in actions)
+    put_if_absent(_commit_path(location, version), text)
     return version
 
 
@@ -1597,7 +1596,7 @@ def append_delta(
     txn_version: int | None = None,
 ) -> int:
     """Append commit: new add actions only. Blind appends COMMUTE, so
-    losing the exclusive-create race to a concurrent writer is not a
+    losing the put-if-absent race to a concurrent writer is not a
     conflict — the commit retries at the next version with the same
     staged files (Delta's optimistic-concurrency happy path; r9). Data
     files are staged once; only the metadata commit retries.
@@ -1645,7 +1644,7 @@ def append_delta(
     for _ in range(max_retries):
         try:
             return _write_commit(location, version, adds)
-        except FileExistsError:
+        except CommitConflictError:
             # Rebasing over the winner is only sound when the staged
             # files still match the table: blind appends commute, but a
             # concurrent metaData change (schema evolution, column-
@@ -1670,14 +1669,14 @@ def append_delta(
             ):
                 # configuration counts too: a concurrent ADD CONSTRAINT
                 # (or appendOnly flip) must not be blind-appended across
-                raise RuntimeError(
+                raise CommitConflictError(
                     f"append to {location} conflicts with a concurrent "
                     "metaData change (schema/column-mapping/configuration "
                     "changed since staging); re-stage the append against "
                     "the new snapshot"
                 )
             version = cur["version"] + 1
-    raise RuntimeError(
+    raise CommitConflictError(
         f"append to {location} lost the commit race {max_retries} times"
     )
 

@@ -57,6 +57,7 @@ from pyspark.sql import types as T
 
 from pg_datalake_spark.session import local_frame, sql_ident, sql_literal
 from pg_datalake_spark.tables import tombstones
+from pg_datalake_spark.tables.commit import advance_hint, put_if_absent
 
 COW_THRESHOLD = 0.2  # rewrite a file when >20% of its rows are deleted
 TARGET_FILE_MB = 512  # compaction target (reference: writable_table.h:28)
@@ -192,29 +193,15 @@ class LakeTable:
             return json.load(f).get("current_snapshot_id")
 
     def _commit(self, meta: dict, expected_version: int) -> None:
-        """Optimistic commit: write v{N+1}, atomically swap `current`.
-        A concurrent commit that already produced v{N+1} wins — we
-        raise, the caller retries on fresh metadata (Iceberg-style
-        optimistic concurrency)."""
+        """Optimistic commit: publish v{N+1}, then move `current`. A
+        concurrent commit that already produced v{N+1} wins — we raise
+        CommitConflictError, the caller retries on fresh metadata."""
         new_version = expected_version + 1
-        path = self._meta_path(new_version)
         meta = {k: v for k, v in meta.items() if not k.startswith("_")}
-        try:
-            # exclusive create makes the existence check atomic (a
-            # check-then-replace pair is a TOCTOU race: two writers
-            # could both pass the check and one snapshot would vanish)
-            with open(path, "x") as f:
-                # json.dumps runs the C encoder; json.dump streams through
-                # the pure-Python one, ~5x slower on a long snapshot list
-                f.write(json.dumps(meta, default=_df_to_dict))
-        except FileExistsError:
-            raise RuntimeError(
-                f"concurrent commit detected at version {new_version}"
-            ) from None
-        ptr_tmp = os.path.join(self._meta_dir, "current.tmp")
-        with open(ptr_tmp, "w") as f:
-            f.write(str(new_version))
-        os.replace(ptr_tmp, os.path.join(self._meta_dir, "current"))
+        # json.dumps runs the C encoder; json.dump streams through the
+        # pure-Python one, ~5x slower on a long snapshot list
+        put_if_absent(self._meta_path(new_version), json.dumps(meta, default=_df_to_dict))
+        advance_hint(os.path.join(self._meta_dir, "current"), str(new_version))
 
     # -- DDL --------------------------------------------------------------
     @classmethod

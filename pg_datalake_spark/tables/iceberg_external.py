@@ -24,9 +24,8 @@ scanned by Spark with full pushdown:
 - :func:`append_snapshot` / :func:`overwrite_snapshot` /
   :func:`add_position_deletes` / :func:`add_equality_deletes` /
   :func:`update_where` / :func:`delete_where` — follow-up commits
-  (every prior snapshot stays pinned-readable), with
-  :class:`CommitConflictError` optimistic concurrency on the version
-  file.
+  (every prior snapshot stays pinned-readable), published by
+  ``tables/commit.py``; a lost race raises :class:`CommitConflictError`.
 - maintenance/evolution: :func:`expire_snapshots` (orphan cleanup),
   :func:`rollback_to_snapshot`, :func:`evolve_add_column` /
   :func:`evolve_drop_column`, :func:`iceberg_changelog`, and the
@@ -53,44 +52,26 @@ from pyspark.sql import types as T
 from pg_datalake_spark.session import local_frame
 from pg_datalake_spark.tables import tombstones
 from pg_datalake_spark.tables.avro_codec import read_avro, write_avro
-
-
-class CommitConflictError(RuntimeError):
-    """Another writer committed the metadata version this commit was
-    about to claim (Iceberg-style optimistic concurrency: the
-    version-file create is the check-and-swap). Reload and retry."""
+# CommitConflictError stays importable from here (rest_catalog, streaming)
+from pg_datalake_spark.tables.commit import CommitConflictError, advance_hint, put_if_absent
+from pg_datalake_spark.tables.delta_log import _norm_location
 
 
 def _write_version_file(meta_dir: str, version: int, meta: dict) -> None:
-    """Exclusive-create the new metadata version, then advance the
-    hint. A concurrent writer that claimed the same version first makes
-    the create fail — the commit loses cleanly instead of clobbering."""
-    path = os.path.join(meta_dir, f"v{version}.metadata.json")
+    """Publish the new metadata version, then advance the hint. If a
+    concurrent writer claimed the version first, raise
+    :class:`CommitConflictError` instead of clobbering."""
     # "_"-prefixed keys are in-memory bookkeeping (e.g. _loaded-version,
     # the optimistic-concurrency base) — never persisted
     persisted = {k: v for k, v in meta.items() if not k.startswith("_")}
-    try:
-        with open(path, "x") as fh:
-            json.dump(persisted, fh, indent=2)
-    except FileExistsError:
-        raise CommitConflictError(
-            f"metadata version v{version} already exists under {meta_dir} — "
-            "concurrent commit detected; reload table state and retry"
-        ) from None
-    # ATOMIC hint advance (r16, found by the concurrent fuzz gate):
-    # open(hint, "w") truncates in place, so a concurrent reader that
-    # opens the hint between truncate and write reads "" and resolves
-    # v.metadata.json (seed-1 FileNotFoundError). Write-aside +
-    # os.replace makes every read see either the old or the new hint,
-    # never a torn one.
-    hint = os.path.join(meta_dir, "version-hint.text")
-    tmp = f"{hint}.{os.getpid()}.{version}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(tmp, hint)
+    put_if_absent(
+        os.path.join(meta_dir, f"v{version}.metadata.json"),
+        json.dumps(persisted, indent=2),
+    )
+    advance_hint(os.path.join(meta_dir, "version-hint.text"), str(version))
     # Advance the optimistic-concurrency base in place: a second commit
     # from the same in-memory state must claim the NEXT slot, not re-claim
-    # this one (which would spuriously fail the exclusive create).
+    # this one (which would spuriously lose the put-if-absent).
     meta["_loaded-version"] = version
 
 
@@ -98,9 +79,9 @@ def _commit_version_slot(meta_dir: str, meta: dict) -> int:
     """The metadata version slot this commit must claim: the version
     the state was LOADED at, plus one. Re-reading version-hint.text
     here instead would re-base a stale writer onto the current tip —
-    its exclusive create then targets a FRESH slot, succeeds, and
+    its put-if-absent then targets a FRESH slot, succeeds, and
     silently drops the concurrent winner's commit (lost update). The
-    create at ``_write_version_file`` is only a CAS when every writer
+    publish at ``_write_version_file`` is only a CAS when every writer
     computes the slot from its own read snapshot."""
     v = meta.get("_loaded-version")
     if v is None:  # metadata file with no parseable version in its name
@@ -112,11 +93,12 @@ def _commit_version_slot(meta_dir: str, meta: dict) -> int:
 def _local(path: str) -> str:
     """Normalize any local file URI form to a plain path: ``file:/p``,
     ``file://p`` and ``file:///p`` all → ``/p`` (Spark's ``_metadata``
-    reports ``file:/p``, manifests store ``file://p``). Non-file
-    schemes pass through for Spark."""
+    reports ``file:/p``, manifests store ``file://p``). A scheme-less
+    path is made absolute (:func:`_norm_location`) so Spark and the
+    driver resolve it alike. Other schemes pass through for Spark."""
     if path.startswith("file:"):
         return "/" + path[len("file:"):].lstrip("/")
-    return path
+    return _norm_location(path)
 
 
 # ---------------------------------------------------------------------------
@@ -156,7 +138,7 @@ def load_table_metadata(location: str, metadata_file: str | None = None) -> dict
         meta = json.load(fh)
     # record the version this state was LOADED at (in-memory only,
     # stripped on write): commits claim exactly _loaded-version + 1,
-    # which is what makes the version-file exclusive-create a real CAS
+    # which is what makes the version-file put-if-absent a real CAS
     m = re.match(r"^v?(\d+)", os.path.basename(_local(metadata_file)))
     if m:
         meta["_loaded-version"] = int(m.group(1))
@@ -1282,7 +1264,7 @@ def export_iceberg_snapshot(
     transform partitions keep the source column in the data files).
     Use :func:`add_position_deletes` / :func:`add_equality_deletes` for
     follow-up merge-on-read delete snapshots."""
-    spark = df.sparkSession
+    location = _local(location)
     data_dir = os.path.join(location, "data")
     meta_dir = os.path.join(location, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
@@ -1692,7 +1674,7 @@ def _pinned_cow_read(spark: SparkSession, location: str):
     read and again inside :func:`overwrite_snapshot` for the commit
     opens a lost-update window — a concurrent append that lands
     between the two loads is silently overwritten by the rewrite,
-    because the exclusive-create CAS targets the FRESH load's version
+    because the put-if-absent CAS targets the FRESH load's version
     + 1 (r15 concurrent-writer fuzzer class; same shape as the r12
     version-hint re-read bug at :func:`_commit_version_slot`).
     Returns ``(meta, df)`` — pass ``meta`` to ``overwrite_snapshot``'s

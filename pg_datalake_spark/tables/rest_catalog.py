@@ -14,8 +14,8 @@ REST Catalog OpenAPI spec, stdlib-only (urllib), so it needs no jars:
   ``assert-table-uuid`` / ``assert-ref-snapshot-id`` REQUIREMENTS and
   ``add-snapshot`` / ``set-snapshot-ref`` UPDATES — the server
   enforces the CAS and answers 409 on a lost race, surfaced as
-  :class:`CommitConflictError` (same type the local commit paths
-  raise).
+  :class:`~pg_datalake_spark.tables.commit.CommitConflictError`, the
+  type every local commit path raises when it loses its version slot.
 
 Only the catalog CONTROL PLANE is HTTP; table data stays on the
 normal scan path (`read_iceberg_table` on the returned metadata

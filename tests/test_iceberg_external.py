@@ -1597,3 +1597,18 @@ def test_nan_bound_never_prunes(spark, tmp_path):
     }
     assert _file_may_match(entry, 1, "double", ">", 5)
     assert _file_may_match(entry, 1, "double", "=", 20.0)
+
+
+def test_writes_under_a_relative_location(spark, tmp_path, monkeypatch):
+    """A relative location names the same table to Spark and to the
+    driver: the data files Spark writes and the metadata the driver
+    writes both resolve it against the Python process's working
+    directory, so the table reads back by either spelling."""
+    monkeypatch.chdir(tmp_path)
+    export_iceberg_snapshot(spark.range(5).selectExpr("id AS k"), "./ice")
+    append_snapshot(spark.range(5, 8).selectExpr("id AS k"), "./ice")
+    assert (tmp_path / "ice" / "data").is_dir()
+    assert load_table_metadata("./ice")["location"] == os.path.join(os.getcwd(), "ice")
+    for read_at in ("./ice", str(tmp_path / "ice")):
+        got = sorted(r.k for r in read_iceberg_table(spark, read_at).collect())
+        assert got == list(range(8))

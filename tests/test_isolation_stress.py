@@ -3,13 +3,15 @@
 The reference ships isolation-tester specs driving real concurrent
 sessions (pg_lake_table/tests/isolation/specs — overlapping writers,
 readers pinned mid-transaction). This repo's analogs are its CAS
-surfaces, previously only exercised single-threaded:
+surfaces, previously only exercised single-threaded. All of them
+claim a version slot with ``tables/commit.py``'s ``put_if_absent``
+and lose it with ``CommitConflictError``:
 
-- ``ObjectStoreCatalog._try_commit_manifest``  (os.link CAS)
+- ``ObjectStoreCatalog._try_commit_manifest``  (manifest slot)
 - ``CatalogTransaction.commit``                (rebase vs conflict)
-- ``LakeTable._commit``                        (exclusive-create swap)
+- ``LakeTable._commit``                        (then swaps ``current``)
 - ``append_delta``                             (built-in rebase retry)
-- ``iceberg_external.append_snapshot``         (version-file create)
+- ``iceberg_external.append_snapshot``         (version-file slot)
 
 Each test releases N REAL threads through a barrier so the commit
 attempts overlap, then asserts the linearizable outcomes: exactly one
