@@ -94,7 +94,8 @@ WRITERS = {"lake": _lake, "delta": _delta, "iceberg": _iceberg, "catalog": _cata
 def test_a_failed_commit_leaves_no_trace(spark, tmp_path, writer):
     """A commit whose payload does not serialise raises before anything
     is published: no file at the version slot, no temp file beside it,
-    and the next commit claims the same version."""
+    and the next commit claims the same version and leaves no temp file
+    either."""
     log_dir, slot, fail, succeed, committed = WRITERS[writer](spark, str(tmp_path / "t"))
     before = sorted(os.listdir(log_dir))
     with pytest.raises((TypeError, ValueError)):
@@ -105,6 +106,7 @@ def test_a_failed_commit_leaves_no_trace(spark, tmp_path, writer):
         assert dl._list_commit_versions(str(tmp_path / "t")) == [0]
     succeed()
     assert committed()
+    assert [f for f in os.listdir(log_dir) if f.endswith(".tmp")] == []
 
 
 def _lose_lake(spark, root, monkeypatch):
